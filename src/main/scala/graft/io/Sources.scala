@@ -2,7 +2,8 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, StructType,
+  TimestampNTZType, TimestampType}
 
 /**
  * Table loaders + schema-tolerance helpers.
@@ -27,28 +28,23 @@ object Sources {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /* Lazy parquet scan for one table under an sf directory.
-    *
-    * `events.ts` has shipped in two parquet flavors across harness data
-    * generations and this loader normalizes both to session-zoned
-    * TimestampType so every downstream plan sees one type:
-    *  - TIMESTAMP(NANOS): Spark's vectorized reader rejects it; sessions
-    *    set `spark.sql.legacy.parquet.nanosAsLong=true`, the column lands
-    *    as raw LongType nanos, and we rebuild micros with integer `DIV`
-    *    (a double round-trip would lose precision above 2^53 ns, ~1971).
-    *  - TIMESTAMP(MICROS, isAdjustedToUTC=false): Spark reads
-    *    TimestampNTZType; the naive wall-clock is UTC by construction
-    *    (driver seed data), and every session pins
-    *    `spark.sql.session.timeZone=UTC`, so the cast is value-preserving. */
-  /** Parquet schema cache for the harness tables: without an explicit
-    * schema every `spark.read.parquet` runs a footer-inference Spark
-    * job, and a bench marathon re-opens the same immutable table files
-    * thousands of times (each query × warm-up + reps). Keyed by
-    * (canonical path, mtime) so a regenerated dataset re-infers;
-    * metadata only — the scan itself is untouched, and PushedFilters /
-    * ReadSchema behave identically with a supplied schema. */
+  /** The ONE parquet schema cache, shared by the harness tables
+    * ([[table]], [[Scratch.table]]), the lake's committed version
+    * directories ([[graft.lake.Mor]]) and the materialized views
+    * ([[graft.plans.ViewRewrite]]). Without an explicit schema every
+    * `spark.read.parquet` runs a schema-inference Spark job, and the
+    * bench re-opens the same immutable files thousands of times (each
+    * query x warm-up + reps; lifecycle queries re-read every chain
+    * member dozens of times). Every path cached here is immutable once
+    * written: a committed version directory is never rewritten in
+    * place (rollback/vacuum delete whole directories, and a recreate is
+    * a fresh write with a fresh mtime). So (canonical path, mtime,
+    * inference conf) keys the schema safely. Metadata only: the scan
+    * itself is untouched, and PushedFilters / ReadSchema behave
+    * identically with a supplied schema. Bounded: cleared wholesale
+    * past 8192 entries (scratch paths churn), not an LRU. */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, String), org.apache.spark.sql.types.StructType]()
+    (String, Long, String), StructType]()
 
   /** The session confs that change what parquet schema INFERENCE
     * returns. Baked into every schema-cache key so a session with
@@ -61,22 +57,91 @@ object Sources {
         "spark.sql.parquet.int96AsTimestamp")
       .map(k => spark.conf.getOption(k).getOrElse("")).mkString(",")
 
-  /** Schema-cached parquet read of an immutable path — shared by
-    * [[table]] and [[Scratch.table]]. */
-  private[graft] def cachedParquet(spark: SparkSession,
-                                   path: String): DataFrame = {
+  /** The schema `spark.read.parquet(path).schema` returns, cached (see
+    * [[schemaCache]]). A miss reads [[footerSchema]] on the driver and
+    * falls back to Spark's inference (one Spark job) only for files no
+    * Spark writer produced. */
+  private[graft] def parquetSchema(spark: SparkSession,
+                                   path: String): StructType = {
     val f = new java.io.File(path)
     val key = (f.getCanonicalPath, f.lastModified(), inferenceConfKey(spark))
     val hit = schemaCache.get(key)
-    if (hit != null) spark.read.schema(hit).parquet(path)
+    if (hit != null) hit
     else {
-      val d = spark.read.parquet(path)
-      if (schemaCache.size > 1024) schemaCache.clear()
-      schemaCache.put(key, d.schema)
-      d
+      val s = footerSchema(spark, f)
+        .getOrElse(spark.read.parquet(path).schema)
+      if (schemaCache.size > 8192) schemaCache.clear()
+      schemaCache.put(key, s)
+      s
     }
   }
 
+  /** Schema-cached parquet read of an immutable path. */
+  private[graft] def cachedParquet(spark: SparkSession,
+                                   path: String): DataFrame =
+    spark.read.schema(parquetSchema(spark, path)).parquet(path)
+
+  /** The footer key under which every Spark parquet writer records the
+    * row schema it wrote. */
+  private val sparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The schema Spark's inference would return for `path`, read from
+    * the first data file's footer on the driver, with no Spark job.
+    * Spark's own inference (without `mergeSchema`) reads one footer
+    * too; when that footer carries [[sparkSchemaKey]] it returns the
+    * recorded schema verbatim, and the file-source read then marks
+    * every field nullable. This does the same. None when Spark's
+    * inference may see something else: a directory with
+    * subdirectories (partition columns), no data file, an unreadable
+    * footer, or a footer without the key (e.g. Arrow-written inputs,
+    * whose schema depends on the inference confs). */
+  private[graft] def footerSchema(spark: SparkSession,
+                                  path: java.io.File): Option[StructType] = {
+    val first =
+      if (path.isFile) Some(path)
+      else {
+        val visible = Option(path.listFiles()).toSeq.flatten.filterNot(f =>
+          f.getName.startsWith("_") || f.getName.startsWith("."))
+        if (visible.exists(_.isDirectory)) None
+        else visible.sortBy(_.getName).headOption
+      }
+    // an unreadable footer defers to Spark, which reports it as before
+    first.flatMap(pf => scala.util.Try {
+      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(pf.getAbsolutePath),
+          spark.sparkContext.hadoopConfiguration))
+      try rd.getFooter.getFileMetaData.getKeyValueMetaData.get(sparkSchemaKey)
+      finally rd.close()
+    }.toOption.flatMap(Option(_)))
+      .flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption)
+      .collect { case s: StructType => asNullable(s).asInstanceOf[StructType] }
+  }
+
+  /** Every field, element and value nullable, recursively — what
+    * Spark's file-source read does to a data schema. */
+  private[graft] def asNullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asNullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(asNullable(m.keyType), asNullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }
+
+  /** Lazy parquet scan for one table under an sf directory.
+    *
+    * `events.ts` has shipped in two parquet flavors across harness data
+    * generations and this loader normalizes both to session-zoned
+    * TimestampType so every downstream plan sees one type:
+    *  - TIMESTAMP(NANOS): Spark's vectorized reader rejects it; sessions
+    *    set `spark.sql.legacy.parquet.nanosAsLong=true`, the column lands
+    *    as raw LongType nanos, and we rebuild micros with integer `DIV`
+    *    (a double round-trip would lose precision above 2^53 ns, ~1971).
+    *  - TIMESTAMP(MICROS, isAdjustedToUTC=false): Spark reads
+    *    TimestampNTZType; the naive wall-clock is UTC by construction
+    *    (driver seed data), and every session pins
+    *    `spark.sql.session.timeZone=UTC`, so the cast is value-preserving. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val df = cachedParquet(spark, s"$sfDir/$name.parquet")
     df.schema.find(_.name == "ts").map(_.dataType) match {

@@ -1,6 +1,7 @@
 package graft.lake
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /**
  * MERGE-ON-READ resolution shared by BOTH commit cores — the
@@ -70,19 +71,39 @@ private[lake] object Mor {
     * (strict union), or silently null a column (permissive union). With
     * the opt-in, added columns null-backfill on existing rows and
     * dropped ones null-backfill on the overlay's rows, mirroring the
-    * read-side `readEvolved` story. Name-set check only: a TYPE change
-    * on a shared column still fails loudly in the union/parquet reader
-    * rather than silently coercing. */
-  def requireSchemaAligned(rows: DataFrame, currentCols: Seq[String],
+    * read-side `readEvolved` story. A TYPE change on a shared column is
+    * rejected in both modes: the union would silently widen the
+    * resolved read to the wider type ([[requireSharedTypes]]). */
+  def requireSchemaAligned(rows: DataFrame, current: StructType,
                            evolve: Boolean, desc: String): Unit = {
     if (!evolve) {
       val batch = rows.columns.toSet
-      val cur = currentCols.toSet
+      val cur = current.fieldNames.toSet
       require(batch == cur,
         s"upsert batch schema for $desc differs from the table's " +
           s"(batch adds ${batch -- cur}, misses ${cur -- batch}) — " +
           "pass evolveSchema = true to null-backfill, or align the batch")
     }
+    requireSharedTypes(current, rows.schema, s"upsert batch for $desc")
+  }
+
+  /** Every column `overlay` shares with `table` has the table's type —
+    * fail loudly otherwise. `unionByName` would coerce both sides to
+    * the wider type, so a resolved read would no longer have the type
+    * [[chainSchema]] reports (and that every older version reads
+    * back). */
+  private def requireSharedTypes(table: StructType, overlay: StructType,
+                                 what: String): Unit = {
+    // nested nullability is not a type change: a committed directory
+    // reads back all-nullable, a batch may not be
+    import graft.io.Sources.asNullable
+    val want = table.fields.map(f => f.name -> f.dataType).toMap
+    val clash = overlay.fields.filter(f =>
+      want.get(f.name).exists(t => asNullable(t) != asNullable(f.dataType)))
+    require(clash.isEmpty,
+      s"$what changes the type of shared column(s) " + clash.map(f =>
+        s"${f.name}: ${want(f.name).simpleString} -> ${f.dataType.simpleString}")
+        .mkString(", ") + " — a resolved read would silently widen it")
   }
 
   /** Nearest FULL version at or below `v` — the base a merge-on-read
@@ -121,40 +142,14 @@ private[lake] object Mor {
         "are rejected; dedup before committing")
   }
 
-  /** Read one COMMITTED version directory with its parquet schema
-    * cached: `spark.read.parquet(dir)` without an explicit schema runs
-    * a footer-inference Spark JOB per call, and the lifecycle queries
-    * re-read the same immutable chain members dozens of times —
-    * measured 157 of q360's 328 jobs were pure schema inference. A
-    * committed version directory is immutable (commit-then-flip;
-    * rollback/vacuum DELETE whole directories, and any recreate is a
-    * fresh Spark write with a fresh mtime), so (canonical path, dir
-    * mtime) keys the schema safely; data files are still read fresh on
-    * every action — this caches METADATA only, never results. Bounded:
-    * cleared wholesale past 8192 entries (scratch dirs churn paths). */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, String), org.apache.spark.sql.types.StructType]()
-  /** The cached parquet schema of one committed version directory —
-    * the cache lookup behind [[readDir]], exposed so metadata-only
-    * consumers ([[chainSchema]]) never have to construct a DataFrame
-    * (whose file-index build lists the directory eagerly) just to see
-    * column names. */
-  private[lake] def dirSchema(spark: SparkSession,
-                              dir: java.io.File): org.apache.spark.sql.types.StructType = {
-    val key = (dir.getCanonicalPath, dir.lastModified(),
-      graft.io.Sources.inferenceConfKey(spark))
-    val hit = schemaCache.get(key)
-    if (hit != null) hit
-    else {
-      val s = spark.read.parquet(dir.getAbsolutePath).schema
-      if (schemaCache.size > 8192) schemaCache.clear()
-      schemaCache.put(key, s)
-      s
-    }
-  }
+  /** Read one committed version directory. Its schema comes from the
+    * shared footer-backed cache ([[graft.io.Sources.parquetSchema]]):
+    * lifecycle queries re-read the same immutable chain members dozens
+    * of times, and a just-committed directory's schema comes off its
+    * footer on the driver, so neither pays a schema-inference job. */
   private[lake] def readDir(spark: SparkSession,
                             dir: java.io.File): DataFrame =
-    spark.read.schema(dirSchema(spark, dir)).parquet(dir.getAbsolutePath)
+    graft.io.Sources.cachedParquet(spark, dir.getAbsolutePath)
 
   /** The schema a [[resolveChain]] read of version `v` RESOLVES TO,
     * derived from the cached per-directory schemas alone — no Catalyst
@@ -166,11 +161,15 @@ private[lake] object Mor {
     * gate enforces alignment — an out-of-band misaligned overlay still
     * fails LOUDLY at read time in the strict union); an evolve upsert
     * appends its new columns in its own order, exactly like
-    * `unionByName(_, allowMissingColumns = true)`. Names, types and
-    * order match the resolved read; nullability is the base's (callers
-    * consume names/types only). Same `_SUCCESS` gate as a read. */
+    * `unionByName(_, allowMissingColumns = true)`. Every upsert overlay's
+    * shared columns are checked against the schema so far, and a type
+    * change fails loudly here (the union would silently widen it; a
+    * deletion vector's keys only feed an anti-join, which cannot change
+    * the read's schema), so names, types and order match the resolved
+    * read; nullability is the base's (callers consume names/types
+    * only). Same `_SUCCESS` gate as a read. */
   def chainSchema(spark: SparkSession, dirOf: Int => java.io.File,
-                  v: Int, desc: String): org.apache.spark.sql.types.StructType = {
+                  v: Int, desc: String): StructType = {
     val base = fullBase(dirOf, v)
     def checked(i: Int): java.io.File = {
       val d = dirOf(i)
@@ -179,18 +178,26 @@ private[lake] object Mor {
           "vacuumed, incomplete, or was never committed")
       d
     }
-    var fields = dirSchema(spark, checked(base)).fields.toVector
+    // metadata only: no DataFrame (whose file-index build lists the
+    // directory eagerly) is built just to see a schema
+    def dirSchema(d: java.io.File) =
+      graft.io.Sources.parquetSchema(spark, d.getAbsolutePath)
+    var schema = dirSchema(checked(base))
     var i = base + 1
     while (i <= v) {
       val d = checked(i)
-      if (evolveOf(d)) {
-        val have = fields.map(_.name).toSet
-        fields = fields ++
-          dirSchema(spark, d).fields.filterNot(f => have(f.name))
+      if (overlayOf(d).exists(_._2)) { // upserts union; DV keys only anti-join
+        val ov = dirSchema(d)
+        requireSharedTypes(schema, ov, s"upsert overlay v$i under $desc")
+        if (evolveOf(d)) {
+          val have = schema.fieldNames.toSet
+          schema = StructType(schema.fields ++
+            ov.fields.filterNot(f => have(f.name)))
+        }
       }
       i += 1
     }
-    org.apache.spark.sql.types.StructType(fields)
+    schema
   }
 
   /** Resolve the merge-on-read chain ITERATIVELY from the nearest full

@@ -317,11 +317,11 @@ object TxLog {
     // loud write-side contracts: no both-rows-survive, no schema drift
     // without the explicit evolution opt-in (checked against the
     // EXPECTED version's schema — the one this overlay resolves onto).
-    // Column names come from the METADATA chain schema
+    // Column names and types come from the METADATA chain schema
     // ([[Mor.chainSchema]]) — no resolve-plan analysis per commit.
     Mor.requireSchemaAligned(rows,
-      Mor.chainSchema(rows.sparkSession, versionDir(root, _), expected, root)
-        .fieldNames.toSeq, evolveSchema, root)
+      Mor.chainSchema(rows.sparkSession, versionDir(root, _), expected, root),
+      evolveSchema, root)
     Mor.requireKeyUnique(rows, keyCol, root)
     val n = commitImpl(rows, root, expected, txn,
       precheck = true, marker = Some((keyCol, true, evolveSchema)))

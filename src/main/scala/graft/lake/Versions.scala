@@ -243,12 +243,12 @@ object Versions {
     require(cur >= 0, s"cannot upsert into empty table $root — commit first")
     // loud write-side contracts: no silent both-rows-survive, and no
     // schema drift without the explicit evolution opt-in. Column names
-    // come from the METADATA chain schema ([[Mor.chainSchema]]) — the
-    // full resolve plan was being built and analyzed once per commit
-    // just to read its column names.
+    // and types come from the METADATA chain schema ([[Mor.chainSchema]])
+    // — the full resolve plan was being built and analyzed once per
+    // commit just to read its schema.
     Mor.requireSchemaAligned(rows,
-      Mor.chainSchema(rows.sparkSession, versionDir(root, _), cur, root)
-        .fieldNames.toSeq, evolveSchema, root)
+      Mor.chainSchema(rows.sparkSession, versionDir(root, _), cur, root),
+      evolveSchema, root)
     Mor.requireKeyUnique(rows, keyCol, root)
     val n = cur + 1
     reclaimOrphan(root, n)

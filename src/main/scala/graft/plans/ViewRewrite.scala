@@ -262,7 +262,8 @@ private final class ViewMatcher(spark: SparkSession, view: MatView) {
       })
 
     val viewPlan =
-      ViewRewrite.viewDf(spark, view.resolvedPath).queryExecution.analyzed
+      graft.io.Sources.cachedParquet(spark, view.resolvedPath)
+        .queryExecution.analyzed
     def viewAttr(name: String): Attribute =
       viewPlan.output.find(_.name == name).getOrElse(
         throw new IllegalStateException(
@@ -352,16 +353,16 @@ object ViewRewrite {
     try body finally suspendedFlag.set(java.lang.Boolean.FALSE)
   }
 
-  // Plan-time caches keyed by the view's physical directory: schema
-  // inference (parquet footer reads) and the bytes-on-disk cost would
-  // otherwise re-run for every candidate view, on every matching
-  // Aggregate, on every optimizer fixpoint iteration. A version
-  // directory is immutable, so staleness is impossible — refreshing a
-  // view re-registers a NEW path. Each rewrite still builds a FRESH
-  // relation (fresh ExprIds) from the cached schema, so two rewrites
+  // Plan-time caches keyed by the view's physical directory: the
+  // bytes-on-disk cost and the footer zone maps would otherwise re-run
+  // for every candidate view, on every matching Aggregate, on every
+  // optimizer fixpoint iteration. A version directory is immutable, so
+  // staleness is impossible — refreshing a view re-registers a NEW
+  // path. The view's schema comes from the shared footer-backed cache
+  // ([[graft.io.Sources.parquetSchema]]), so a freshly refreshed view
+  // costs no schema-inference job inside the optimizer. Each rewrite
+  // still builds a FRESH relation (fresh ExprIds), so two rewrites
   // inside one query can never collide on attribute ids.
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
   private val sizeCache = new java.util.concurrent.ConcurrentHashMap[
     String, java.lang.Long]()
 
@@ -369,13 +370,6 @@ object ViewRewrite {
   : java.util.concurrent.ConcurrentHashMap[K, V] = {
     if (m.size > 1024) m.clear() // scratch-path churn bound, not an LRU
     m
-  }
-
-  private[plans] def viewDf(spark: SparkSession,
-                            path: String): org.apache.spark.sql.DataFrame = {
-    val sch = capped(schemaCache).computeIfAbsent(path,
-      (p: String) => spark.read.parquet(p).schema)
-    spark.read.schema(sch).parquet(path)
   }
 
   private[plans] def sizeOf(path: String): Long = {

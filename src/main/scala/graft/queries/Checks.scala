@@ -99,15 +99,27 @@ object Checks {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(thunks.size, 4))
     try {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutorService(pool)
-      val fs = thunks.map(t => Future(t()))
+      import scala.util.{Failure, Success, Try}
+      // each slot is a promise completed in `finally` with its thunk's
+      // outcome, FATAL throwables included: `Future.apply` captures only
+      // NonFatal ones, so an OOM / StackOverflow thunk would leave its
+      // slot pending and the gate waiting forever
+      val slots = thunks.map { t =>
+        val slot = scala.concurrent.Promise[Try[A]]()
+        pool.execute { () =>
+          var out: Try[A] =
+            Failure(new IllegalStateException("gate thunk did not finish"))
+          try out = Success(t())
+          catch { case e: Throwable => out = Failure(e) }
+          finally { slot.success(out); () }
+        }
+        slot.future
+      }
       // settle ALL outcomes before surfacing any failure
-      val outcomes = fs.map(f => scala.util.Try(
-        Await.result(f, scala.concurrent.duration.Duration.Inf)))
+      val outcomes = slots.map(f => scala.concurrent.Await.result(f,
+        scala.concurrent.duration.Duration.Inf))
       outcomes.foreach {
-        case scala.util.Failure(e) => throw e
+        case Failure(e) => throw e
         case _ => ()
       }
       outcomes.map(_.get)

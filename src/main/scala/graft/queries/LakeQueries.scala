@@ -901,8 +901,7 @@ object LakeQueries {
             .otherwise(greatest(col("cents_max"), col("d_max")))
             .as("cents_max"))
       graft.lake.Versions.commit(merged, root)
-      graft.lake.Versions.read(s, root).orderBy("month")
-        .localCheckpoint() // result must not reference the removed files
+      Q.sealResult(graft.lake.Versions.read(s, root).orderBy("month"))
     } finally graft.io.Sources.removeScratchDir(root)
   }
 
@@ -1067,7 +1066,7 @@ object LakeQueries {
         .select(col("k"), col("seg").as("seg0"), col("cents").as("cents0"))
       val v1 = Versions.read(s, root, 1)
         .select(col("k").as("k1"), col("seg"), col("cents"))
-      v0.join(v1, col("k") === col("k1"), "full_outer")
+      val diff = v0.join(v1, col("k") === col("k1"), "full_outer")
         .select(coalesce(col("k"), col("k1")).as("kk"),
           when(col("k").isNull, "inserted")
             .when(col("k1").isNull, "deleted")
@@ -1078,7 +1077,7 @@ object LakeQueries {
         .groupBy("action")
         .agg(count(lit(1)).as("n"), expr("bit_xor(h)").as("key_xor"))
         .orderBy("action")
-        .localCheckpoint() // result must not reference the removed files
+      Q.sealResult(diff)
     } finally graft.io.Sources.removeScratchDir(root)
   }
 
@@ -1319,8 +1318,7 @@ object LakeQueries {
       ).toDF("tag", "ok")
         .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
           lit(0L).as("cents_sum"))
-      rows.unionByName(chks).orderBy("tag")
-        .localCheckpoint() // result must not reference the removed files
+      Q.sealResult(rows.unionByName(chks).orderBy("tag"))
     } finally graft.io.Sources.removeScratchDir(root)
   }
 
@@ -1404,8 +1402,7 @@ object LakeQueries {
       ).toDF("tag", "ok")
         .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
           lit(0L).as("cents_sum"))
-      rows.unionByName(chks).orderBy("tag")
-        .localCheckpoint() // result must not reference the removed files
+      Q.sealResult(rows.unionByName(chks).orderBy("tag"))
     } finally {
       graft.io.Sources.removeScratchDir(dst)
       graft.io.Sources.removeScratchDir(src)
@@ -1579,8 +1576,7 @@ object LakeQueries {
       ).toDF("tag", "ok")
         .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
           lit(0L).as("cents_sum"))
-      rows.unionByName(chks).orderBy("tag")
-        .localCheckpoint() // result must not reference the removed files
+      Q.sealResult(rows.unionByName(chks).orderBy("tag"))
     } finally graft.io.Sources.removeScratchDir(root)
   }
 
@@ -1917,8 +1913,7 @@ object LakeQueries {
       ).toDF("tag", "ok")
         .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
           lit(0L).as("cents_sum"))
-      rows.unionByName(chks).orderBy("tag")
-        .localCheckpoint() // result must not reference the removed files
+      Q.sealResult(rows.unionByName(chks).orderBy("tag"))
     } finally graft.io.Sources.removeScratchDir(root)
   }
 

@@ -19,14 +19,34 @@ object Q {
   def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): Q =
     Q(name, fn, None)
 
-  /** localCheckpoint the RESULT (so it outlives the query's scratch
-    * files), then unpersist the listed INTERMEDIATE checkpoints — a
-    * lifecycle query that checkpoints mid-fixture frames and leaves
+  /** Row bound of a sealed result. Sealed results are lifecycle
+    * reports: one row per tag, check, segment or month. The largest in
+    * the registry is 80 rows (q325_incr_view, one per order month, at
+    * every scale factor); every other sealed result has at most 17. The
+    * bound leaves headroom for new tags without admitting a data-sized
+    * result. */
+  val sealBound: Int = 1000
+
+  /** Materialize the RESULT on the driver, so it outlives the query's
+    * scratch files, then unpersist the listed INTERMEDIATE checkpoints —
+    * a lifecycle query that checkpoints mid-fixture frames and leaves
     * them to the ContextCleaner leaks blocks across a several-hundred-
     * query marathon (the slow-creep class the round-10/11 work
-    * flagged). Call this as the query's last expression. */
+    * flagged). `out` is a sorted, bounded report: collecting
+    * `out.limit(sealBound + 1)` plans a single-job top-K
+    * (`TakeOrderedAndProject`), where a `localCheckpoint` of the sort
+    * paid a range-partition sampling job, a shuffle-map job and a
+    * result job, and left RDD blocks in the block manager. The rows
+    * come back as a `LocalRelation`. A result above [[sealBound]] rows
+    * fails loudly instead of being truncated. Call this as the query's
+    * last expression. */
   def sealResult(out: DataFrame, intermediates: DataFrame*): DataFrame = {
-    val r = out.localCheckpoint()
+    val rows = out.limit(sealBound + 1).collect()
+    require(rows.length <= sealBound,
+      s"sealResult: result exceeds $sealBound rows — a sealed result is " +
+        "a bounded report; return a data-sized frame unsealed")
+    val r = out.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), out.schema)
     intermediates.foreach { df =>
       try { df.unpersist(); () }
       catch { case scala.util.control.NonFatal(_) => () }

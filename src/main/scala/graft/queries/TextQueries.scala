@@ -1395,10 +1395,7 @@ object TextQueries {
       ).toDF("tag", "ok")
         .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
           lit(0L).as("id_sum"))
-      val out = rows.unionByName(chks).orderBy("tag")
-        .localCheckpoint() // result must not reference the removed files
-      Seq(v1r, live, emb).foreach(_.unpersist()) // intermediates only
-      out
+      Q.sealResult(rows.unionByName(chks).orderBy("tag"), v1r, live, emb)
     } finally {
       graft.io.Sources.removeScratchDir(idx)
       graft.io.Sources.removeScratchDir(idx2)

@@ -89,4 +89,22 @@ class ChecksSpec extends AnyFunSuite with SparkSpec {
     assert(finished.get() == 2,
       "siblings must have settled before the failure surfaced")
   }
+
+  test("inParallel: a fatal throwable in a thunk fails the call instead of hanging") {
+    val outcome = new java.util.concurrent.CompletableFuture[Throwable]()
+    val caller = new Thread(() => {
+      try {
+        Checks.inParallel[Int](Seq(
+          () => throw new StackOverflowError("deep gate"),
+          () => 2))
+        outcome.complete(null)
+      } catch { case e: Throwable => outcome.complete(e) }
+      ()
+    })
+    caller.setDaemon(true)
+    caller.start()
+    // a hang surfaces as a TimeoutException here, not a stuck suite
+    val e = outcome.get(60, java.util.concurrent.TimeUnit.SECONDS)
+    assert(e.isInstanceOf[StackOverflowError] && e.getMessage == "deep gate")
+  }
 }

@@ -64,4 +64,42 @@ class MorChainSchemaSpec extends AnyFunSuite with graft.SparkSpec {
       assert(e.getMessage.contains("vacuumed"))
     } finally graft.io.Sources.removeScratchDir(root)
   }
+
+  test("a shared column's type change is rejected at commit and by chainSchema") {
+    import spark.implicits._
+    val root = graft.io.Sources.scratchDir("graft_chainschema_types")
+    try {
+      Versions.commit((1L to 5L).map(k => (k, k.toInt)).toDF("k", "n"), root)
+      // a strict upsert widening n: int -> long must not commit (the
+      // union would silently widen every read of the new version)
+      val e = intercept[IllegalArgumentException] {
+        Versions.commitUpsert(Seq((2L, 7L)).toDF("k", "n"), root, "k",
+          autoCompactAt = 0)
+      }
+      assert(e.getMessage.contains("n: int -> bigint"))
+      assert(Versions.current(root) == 0)
+      // ...nor under the evolution opt-in, which only adds/drops columns
+      intercept[IllegalArgumentException] {
+        Versions.commitUpsert(Seq((2L, 7L, "x")).toDF("k", "n", "s"), root,
+          "k", autoCompactAt = 0, evolveSchema = true)
+      }
+      // an out-of-band overlay that widens the type (files swapped
+      // under a committed int upsert) fails loudly in chainSchema
+      Versions.commitUpsert(Seq((2L, 7)).toDF("k", "n"), root, "k",
+        autoCompactAt = 0) // v1
+      assertMatchesRead(root, 1)
+      val v1 = Versions.versionDir(root, 1)
+      val swap = s"$root/swap"
+      Seq((2L, 7L)).toDF("k", "n").write.parquet(swap)
+      Thread.sleep(5) // a distinct directory mtime for the cache key
+      v1.listFiles().filter(_.getName.contains("part-")).foreach(_.delete())
+      new java.io.File(swap).listFiles().filter(_.getName.startsWith("part-"))
+        .foreach(f => java.nio.file.Files.move(f.toPath,
+          new java.io.File(v1, f.getName).toPath))
+      val t = intercept[IllegalArgumentException] {
+        Mor.chainSchema(spark, Versions.versionDir(root, _), 1, root)
+      }
+      assert(t.getMessage.contains("upsert overlay v1"))
+    } finally graft.io.Sources.removeScratchDir(root)
+  }
 }

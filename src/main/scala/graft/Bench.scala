@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Per-query numbers are made attributable by (a)
@@ -13,26 +12,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // static conf, defensive sizing: the generated-class cache
-      // defaults to 100 entries while a 300+-query marathon compiles
-      // far more codegen stages, guaranteeing eviction between a
-      // query's warm-up and its timed runs. Measured NEUTRAL at 317
-      // queries (x1.011 on the common set vs the default — each
-      // query's back-to-back runs stay cached either way); kept so the
-      // cache can't become the bottleneck as the suite grows.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // warmup outside the timed section: touch every table (file-index +
     // footer reads + scan codegen), then the kernel-bearing pipelines
     // (janino compilation + JIT, ~5s measured on the minhash pipeline).
@@ -71,12 +51,7 @@ object Bench {
     val touched = scala.collection.mutable.Set[String](warmed: _*)
     val cold = scala.collection.mutable.LinkedHashMap[String, String]()
     // optional subset for local profiling: SPARK_GRAFT_ONLY=q37,q40
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
-    // match Verify's subset syntax: full name or prefix up to the first _
-    val ordered = SparkEntry.registry.filter(q => only.forall(o =>
-      o.contains(q.name) || o.contains(q.name.takeWhile(_ != '_'))))
+    val ordered = SparkEntry.registry.filter(q => GraftSession.selects(q.name))
     // SPARK_GRAFT_BENCH_ORDER=reverse runs the marathon back-to-front —
     // the controlled experiment that separates position-dependent
     // environmental pressure (late queries pay an accumulating tax

@@ -1,23 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: prints the formatted physical plan of the named
-  * queries (or all) — used to audit pushdown / broadcast / shuffle
-  * structure per SURVEY.md's scale checklist. */
+  * queries (default: the SPARK_GRAFT_ONLY subset, or all) on Bench's
+  * session ([[GraftSession.local]]), so the plans are the ones Bench
+  * times — used to audit pushdown / broadcast / shuffle structure per
+  * SURVEY.md's scale checklist. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
-    val wanted = if (args.isEmpty) SparkEntry.registry.map(_.name) else args.toSeq
+    val wanted =
+      if (args.nonEmpty) args.toSeq
+      else SparkEntry.registry.map(_.name).filter(GraftSession.selects)
     wanted.foreach { name =>
       SparkEntry.queries.get(name).foreach { fn =>
         println(s"\n========== $name ==========")

@@ -1,30 +1,18 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement harness (guide §1): run selected
   * queries once, with a listener recording every Spark job's wall time
   * and call site, then print a per-job breakdown — job-count and
   * job-time vs driver wall time separates "too many tiny actions /
-  * driver-side protocol work" from "one slow stage". Same session
-  * config as [[Bench]]; subset via SPARK_GRAFT_ONLY (required).
+  * driver-side protocol work" from "one slow stage". Bench's session
+  * ([[GraftSession.local]]); subset via SPARK_GRAFT_ONLY (required).
   * Diagnostic only — bench numbers stay [[Bench]]'s. */
 object ProfileQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(GraftSession.only.nonEmpty, "set SPARK_GRAFT_ONLY=qNNN[,qNNN...]")
+    val spark = GraftSession.local()
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int)]()
     val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, String, Int, Long)]()
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -40,12 +28,7 @@ object ProfileQ {
         }
       }
     })
-    val only = sys.env.getOrElse("SPARK_GRAFT_ONLY", "")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSet
-    require(only.nonEmpty, "set SPARK_GRAFT_ONLY=qNNN[,qNNN...]")
-    SparkEntry.registry
-      .filter(q => only.contains(q.name) ||
-        only.contains(q.name.takeWhile(_ != '_')))
+    SparkEntry.registry.filter(q => GraftSession.selects(q.name))
       .foreach { q =>
         done.clear()
         val t0 = System.nanoTime()

@@ -1,6 +1,8 @@
 package graft.lake
 
+import graft.io.FileTree.rmTree
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /**
  * MULTI-TABLE ATOMIC COMMITS — a catalog-level meta-log over member
@@ -73,20 +75,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  */
 object Catalog {
 
-  /** Which commit core a member table runs on. Declared by the [[Put]]
-    * that CREATES the member; detected from the on-disk layout ever
-    * after (the layout is the declaration — no side register to drift
-    * out of sync). */
-  sealed trait Core
-  case object VersionsCore extends Core
-  case object TxLogCore extends Core
-
   /** One member table's change inside a catalog transaction. */
   sealed trait MemberUpdate
-  /** Full new contents. Creates the member (on `core`) when it does
-    * not exist yet; `core` is ignored for an existing member — the
-    * on-disk layout wins. */
-  final case class Put(df: DataFrame, core: Core = VersionsCore)
+  /** Full new contents. Creates the member (on `core`, [[Versions]] or
+    * [[TxLog]]) when it does not exist yet; `core` is ignored for an
+    * existing member — the on-disk layout wins. */
+  final case class Put(df: DataFrame, core: Core = Versions)
     extends MemberUpdate
   /** Merge-on-read deletion vector: O(|keys|) written bytes. */
   final case class DeleteKeys(keys: DataFrame, keyCol: String)
@@ -125,13 +119,21 @@ object Catalog {
   def catalogVersion(root: String): Int = CasLog.maxRecord(logDir(root))
 
   /** The member core of `table`, read off its on-disk layout; None for
-    * a member that does not exist yet. */
+    * a member that does not exist yet. Declared by the [[Put]] that
+    * CREATES the member; detected from the layout ever after (the
+    * layout is the declaration — no side register to drift out of
+    * sync). */
   def coreOf(root: String, table: String): Option[Core] = {
     val dir = new java.io.File(root, table)
-    if (new java.io.File(dir, "_commits").isDirectory) Some(TxLogCore)
-    else if (new java.io.File(dir, "_current").isFile) Some(VersionsCore)
+    if (new java.io.File(dir, "_commits").isDirectory) Some(TxLog)
+    else if (new java.io.File(dir, "_current").isFile) Some(Versions)
     else None
   }
+
+  /** [[coreOf]] for an existing member ([[Versions]] when absent, whose
+    * reads then fail loudly on the missing table). */
+  private def memberCore(root: String, table: String): Core =
+    coreOf(root, table).getOrElse(Versions)
 
   private def recordLine(root: String, n: Int): String = {
     val f = recordFile(root, n)
@@ -214,10 +216,6 @@ object Catalog {
     if (n < 0) Map.empty else snapshotAt(root, n)
   }
 
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-  }
-
   /** Phase 1 for one member: commit through the member's own core
     * discipline and return the new member version. */
   private def phase1(root: String, t: String, up: MemberUpdate,
@@ -229,64 +227,20 @@ object Catalog {
         s"member $t does not exist under $root — a catalog transaction " +
           "must Put full contents before overlay updates")
     })
-    def requireContiguous(physical: Int): Unit = {
-      val want = catalogedV.getOrElse(-1)
-      if (physical != want) throw new IllegalStateException(
-        s"member $t is physically at version $physical but the catalog " +
-          s"names $want — uncataloged garbage from a crashed transaction " +
-          "(or an out-of-band writer) sits at the overlay's slot; an " +
-          "overlay committed on top would resolve THROUGH it. Run " +
-          "Catalog.repairMember to cap the garbage with a full version.")
-    }
-    // full contents are self-contained: commit at the physical head,
-    // wherever crash garbage left it (full versions cap chains, so the
-    // garbage below is unreachable). On the CAS core this is a blind
-    // retry: a racing transaction's member commit just bumps the
-    // number; the CATALOG CAS still arbitrates whose snapshot wins.
-    def putFull(df: DataFrame): Int = core match {
-      case VersionsCore => Versions.commit(df, memberRoot)
-      case TxLogCore =>
-        var attempt = 0
-        while (true) {
-          try return TxLog.commit(df, memberRoot,
-            expected = TxLog.current(memberRoot))
-          catch {
-            case c: CommitConflict =>
-              attempt += 1
-              if (attempt > 20) throw c
-          }
-        }
-        -1 // unreachable
-    }
-    (core, up) match {
-      case (_, Put(df, _)) => putFull(df)
-      case (_, Compact(sp)) =>
+    up match {
+      case Put(df, _) => core.commitPut(df, memberRoot)
+      case Compact(sp) =>
         // the CATALOGED contents (never the physical head — garbage
         // must not be folded in), committed as a chain-capping full
         // version through the Put discipline
         val v = catalogedV.getOrElse(throw new IllegalArgumentException(
           s"member $t does not exist under $root — nothing to compact"))
-        putFull(core match {
-          case TxLogCore => TxLog.read(sp, memberRoot, v)
-          case VersionsCore => Versions.read(sp, memberRoot, v)
-        })
-      case (VersionsCore, DeleteKeys(keys, kc)) =>
-        requireContiguous(Versions.current(memberRoot))
-        Versions.commitDelete(keys, memberRoot, kc, autoCompactAt = 0)
-      case (VersionsCore, UpsertRows(rows, kc, evolve)) =>
-        requireContiguous(Versions.current(memberRoot))
-        Versions.commitUpsert(rows, memberRoot, kc, autoCompactAt = 0,
-          evolveSchema = evolve)
-      case (TxLogCore, DeleteKeys(keys, kc)) =>
-        // expected = the CATALOGED version: the member CAS enforces
-        // chain contiguity, and a conflict (stale snapshot OR crashed
-        // garbage) surfaces as CommitConflict for the transact loop
-        TxLog.commitDelete(keys, memberRoot, kc,
-          expected = catalogedV.getOrElse(-1), autoCompactAt = 0)
-      case (TxLogCore, UpsertRows(rows, kc, evolve)) =>
-        TxLog.commitUpsert(rows, memberRoot, kc,
-          expected = catalogedV.getOrElse(-1), autoCompactAt = 0,
-          evolveSchema = evolve)
+        core.commitPut(core.read(sp, memberRoot, v), memberRoot)
+      case DeleteKeys(keys, kc) =>
+        core.commitDeleteAt(keys, memberRoot, kc, catalogedV.getOrElse(-1))
+      case UpsertRows(rows, kc, evolve) =>
+        core.commitUpsertAt(rows, memberRoot, kc, catalogedV.getOrElse(-1),
+          evolve)
     }
   }
 
@@ -332,18 +286,12 @@ object Catalog {
           // fresh=true, the loser's blind-CAS Put lands on top of the
           // winner's record 0, and a flag-keyed rmTree would delete the
           // winner's committed, catalog-named version with it (TOCTOU).
-          core match {
-            case TxLogCore => TxLog.rollback(memberRoot, v)
-            case VersionsCore => Versions.rollbackTo(memberRoot, v - 1, v)
-          }
+          core.rollback(memberRoot, v)
           // the member DIRECTORY dies only when, AFTER the version
           // rollback, nothing committed remains in it AND no catalog
           // record names it — both re-checked now, not at phase-1 entry
-          val empty = (core match {
-            case TxLogCore => TxLog.current(memberRoot)
-            case VersionsCore => Versions.current(memberRoot)
-          }) < 0
-          if (fresh && empty && !snapshot(root).contains(t))
+          if (fresh && core.current(memberRoot) < 0 &&
+              !snapshot(root).contains(t))
             rmTree(new java.io.File(memberRoot))
         } catch {
           // surfacing the ORIGINAL failure matters more; un-rolled
@@ -481,36 +429,39 @@ object Catalog {
     val vFrom =
       if (fromCatalogV < 0) -1
       else snapshotAt(root, fromCatalogV).getOrElse(table, -1)
-    val core = coreOf(root, table).getOrElse(VersionsCore)
     if (vFrom == vTo) {
       // record(s) that never touched this member: empty frame in the
-      // feed's schema (payload at vTo + the two meta columns) — from
-      // chain METADATA, not a resolve-plan analysis
-      val memberRoot = s"$root/$table"
-      val payload = core match {
-        case TxLogCore =>
-          Mor.chainSchema(spark, TxLog.versionDir(memberRoot, _), vTo, table)
-        case VersionsCore =>
-          Mor.chainSchema(spark, Versions.versionDir(memberRoot, _), vTo, table)
-      }
-      val schema = payload
+      // feed's schema (payload at vTo + the two meta columns)
+      val schema = memberSchemaAt(spark, root, table, to)
         .add(ChangeFeed.ChangeType, "string")
         .add(ChangeFeed.CommitVersion, "integer")
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else ChangeFeed.changesBetween(spark, s"$root/$table", vFrom, vTo, core)
+    } else ChangeFeed.changesBetween(spark, s"$root/$table", vFrom, vTo,
+      memberCore(root, table))
+  }
+
+  /** The schema of member `table` as catalog record `catalogV` names it
+    * — from chain METADATA ([[Mor.chainSchema]] over the member's own
+    * version directories), never a resolve-plan analysis, so a caller
+    * can check every record of a history cheaply. */
+  def memberSchemaAt(spark: SparkSession, root: String, table: String,
+                     catalogV: Int): StructType = {
+    val v = snapshotAt(root, catalogV).getOrElse(table,
+      throw new IllegalArgumentException(
+        s"table $table is not in catalog record $catalogV under $root"))
+    val memberRoot = s"$root/$table"
+    Mor.chainSchema(spark, memberCore(root, table).versionDir(memberRoot, _),
+      v, table)
   }
 
   /** Overlay-chain depth of a member AT ITS CATALOGED VERSION — how
     * many anti-join overlays a catalog [[read]] of the table resolves;
     * 0 for a full version (or a member not yet cataloged). */
   def memberChainDepth(root: String, table: String): Int =
-    snapshot(root).get(table).map { v =>
-      coreOf(root, table) match {
-        case Some(TxLogCore) => TxLog.chainDepth(s"$root/$table", v)
-        case _ => Versions.chainDepth(s"$root/$table", v)
-      }
-    }.getOrElse(0)
+    snapshot(root).get(table)
+      .map(memberCore(root, table).chainDepth(s"$root/$table", _))
+      .getOrElse(0)
 
   /** Maintenance entry (the catalog twin of [[Versions.compactIfDeeper]]):
     * when `table`'s cataloged chain is deeper than `threshold` overlays,
@@ -528,12 +479,9 @@ object Catalog {
                             table: String, threshold: Int): Int = {
     require(threshold >= 0, s"negative compaction threshold $threshold")
     def depthAt(snap: Map[String, Int]): Int =
-      snap.get(table).map { v =>
-        coreOf(root, table) match {
-          case Some(TxLogCore) => TxLog.chainDepth(s"$root/$table", v)
-          case _ => Versions.chainDepth(s"$root/$table", v)
-        }
-      }.getOrElse(0)
+      snap.get(table)
+        .map(memberCore(root, table).chainDepth(s"$root/$table", _))
+        .getOrElse(0)
     if (depthAt(snapshot(root)) <= threshold) return -1
     transactUpdates(root) { snap =>
       // re-check on every rebase: a racing compactor already paid
@@ -555,10 +503,7 @@ object Catalog {
     val v = snap.getOrElse(table,
       throw new IllegalArgumentException(
         s"table $table is not in the catalog snapshot under $root"))
-    coreOf(root, table) match {
-      case Some(TxLogCore) => TxLog.read(spark, s"$root/$table", v)
-      case _ => Versions.read(spark, s"$root/$table", v)
-    }
+    memberCore(root, table).read(spark, s"$root/$table", v)
   }
 
   /** Retention derived FROM the snapshot: collapse the cross-table
@@ -580,10 +525,7 @@ object Catalog {
     if (cur < 0) return 0
     listed(root).filter(_ < cur).foreach(n => recordFile(root, n).delete())
     snapshotAt(root, cur).toSeq.sortBy(_._1).map { case (t, v) =>
-      coreOf(root, t) match {
-        case Some(TxLogCore) => TxLog.vacuum(s"$root/$t", keepFrom = v)
-        case _ => Versions.vacuum(s"$root/$t", keepFrom = v)
-      }
+      memberCore(root, t).vacuum(s"$root/$t", keepFrom = v)
     }.sum
   }
 
@@ -608,10 +550,7 @@ object Catalog {
     val retained = listed(root).map(snapshotAt(root, _))
     retained.flatMap(_.keys).distinct.sorted.map { t =>
       val keep = retained.flatMap(_.get(t)).toSet
-      coreOf(root, t) match {
-        case Some(TxLogCore) => TxLog.vacuumAged(s"$root/$t", maxAgeMs, keep)
-        case _ => Versions.vacuumAged(s"$root/$t", maxAgeMs, keep)
-      }
+      memberCore(root, t).vacuumAged(s"$root/$t", maxAgeMs, keep)
     }.sum
   }
 }

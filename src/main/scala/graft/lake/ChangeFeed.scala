@@ -57,24 +57,23 @@ object ChangeFeed {
     * `schemaAt` (default `v`) plus [[ChangeType]] and
     * [[CommitVersion]]. */
   def changesAt(spark: SparkSession, root: String, v: Int,
-                core: Catalog.Core = Catalog.VersionsCore,
+                core: Core = Versions,
                 schemaAt: Int = -1): DataFrame = {
-    val cur = current(core, root)
+    val cur = core.current(root)
     require(v >= 0 && v <= cur,
       s"version $v out of range for $root (current $cur)")
     // target schema from chain METADATA ([[Mor.chainSchema]] replays
     // the resolve's column algebra off cached footers) — building and
     // ANALYZING a full resolve plan per step just for .schema.fields
     // made an N-version feed pay O(N²) plan analyses
-    val want = Mor.chainSchema(spark, versionDir(core, root, _),
+    val want = Mor.chainSchema(spark, core.versionDir(root, _),
       if (schemaAt >= 0) schemaAt else v, root).fields
     changesAtAligned(spark, root, v, core, want)
   }
 
   private def changesAtAligned(spark: SparkSession, root: String, v: Int,
-                               core: Catalog.Core,
+                               core: Core,
                                want: Array[org.apache.spark.sql.types.StructField]): DataFrame = {
-    val readAt = reader(core)
     def aligned(df: DataFrame): DataFrame = {
       val have = df.columns.toSet
       val filled = want.foldLeft(df) { (d, f) =>
@@ -86,22 +85,22 @@ object ChangeFeed {
     def stamped(df: DataFrame, tpe: String): DataFrame =
       aligned(df).withColumn(ChangeType, lit(tpe))
         .withColumn(CommitVersion, lit(v))
-    val dir = versionDir(core, root, v)
+    val dir = core.versionDir(root, v)
     Mor.overlayOf(dir) match {
       case Some((kc, false)) => // deletion vector: pre-image rows
         val keys = Mor.readDir(spark, dir).select(kc)
-        stamped(readAt(spark, root, v - 1).join(keys, Seq(kc), "left_semi"),
-          "delete")
+        stamped(core.read(spark, root, v - 1)
+          .join(keys, Seq(kc), "left_semi"), "delete")
       case Some((kc, true)) => // upsert: replaced pre-images + batch
         val ov = Mor.readDir(spark, dir)
-        val pre = readAt(spark, root, v - 1)
+        val pre = core.read(spark, root, v - 1)
           .join(ov.select(kc).distinct(), Seq(kc), "left_semi")
         stamped(pre, "delete").unionByName(stamped(ov, "insert"))
       case None => // full version: genesis all-insert, else multiset diff
-        if (v == 0) stamped(readAt(spark, root, 0), "insert")
+        if (v == 0) stamped(core.read(spark, root, 0), "insert")
         else {
-          val prev = aligned(readAt(spark, root, v - 1))
-          val now = aligned(readAt(spark, root, v))
+          val prev = aligned(core.read(spark, root, v - 1))
+          val now = aligned(core.read(spark, root, v))
           stamped(now.exceptAll(prev), "insert")
             .unionByName(stamped(prev.exceptAll(now), "delete"))
         }
@@ -115,8 +114,8 @@ object ChangeFeed {
     * `toVersion = -1` reads up to current. */
   def changesBetween(spark: SparkSession, root: String,
                      fromVersion: Int = -1, toVersion: Int = -1,
-                     core: Catalog.Core = Catalog.VersionsCore): DataFrame = {
-    val to = if (toVersion >= 0) toVersion else current(core, root)
+                     core: Core = Versions): DataFrame = {
+    val to = if (toVersion >= 0) toVersion else core.current(root)
     require(to >= 0, s"no committed version under $root")
     require(fromVersion >= -1 && fromVersion <= to,
       s"bad feed window ($fromVersion, $to] for $root")
@@ -124,7 +123,7 @@ object ChangeFeed {
     require(steps.nonEmpty, s"empty feed window ($fromVersion, $to]")
     // ONE metadata schema derivation for the whole window (every step
     // aligns to the same to-version schema)
-    val want = Mor.chainSchema(spark, versionDir(core, root, _), to, root)
+    val want = Mor.chainSchema(spark, core.versionDir(root, _), to, root)
       .fields
     steps.map(changesAtAligned(spark, root, _, core, want))
       .reduce(_.unionByName(_))
@@ -149,22 +148,5 @@ object ChangeFeed {
       if (present.isNullAt(idx) || !present.getBoolean(idx)) None
       else Some(changes.filter(col(ChangeType) === tpe).select(payload: _*))
     (side("insert", 0), side("delete", 1))
-  }
-
-  private def reader(core: Catalog.Core): (SparkSession, String, Int) => DataFrame =
-    core match {
-      case Catalog.TxLogCore => TxLog.read
-      case Catalog.VersionsCore => Versions.read
-    }
-
-  private def current(core: Catalog.Core, root: String): Int = core match {
-    case Catalog.TxLogCore => TxLog.current(root)
-    case Catalog.VersionsCore => Versions.current(root)
-  }
-
-  private def versionDir(core: Catalog.Core, root: String,
-                         v: Int): java.io.File = core match {
-    case Catalog.TxLogCore => TxLog.versionDir(root, v)
-    case Catalog.VersionsCore => Versions.versionDir(root, v)
   }
 }

@@ -1,5 +1,6 @@
 package graft.lake
 
+import graft.io.FileTree.{newestMtime, rmTree}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Conflict signal for [[TxLog.commit]]: another writer committed the
@@ -40,7 +41,7 @@ final class CommitConflict(val attempted: Int, msg: String)
  * object stores without atomic rename this maps onto a put-if-absent
  * primitive or a coordination service, exactly as Delta documents.
  */
-object TxLog {
+object TxLog extends Core {
 
   private def logDir(root: String) = new java.io.File(root, "_commits")
 
@@ -208,21 +209,21 @@ object TxLog {
     // retention floor auto-lowers to that base — vacuum can never
     // orphan a retained version's chain
     val floor = Mor.fullBase(versionDir(root, _), want)
-    val victims = listedRecords(root).filter(_ < floor)
-    victims.count { v =>
-      // a concurrent vacuum may have unlinked this record already —
-      // skip it rather than throw (recordOpt tolerates the race)
-      recordOpt(root, v).exists { case (dataName, _) =>
-        // unlink the record FIRST: a crash mid-vacuum leaves a version
-        // that already reads as vacuumed, never one with missing data.
-        // Only the caller whose unlink succeeded counts (and reclaims)
-        // the victim, so racing vacuums' counts partition correctly.
-        val won = recordFile(root, v).delete()
-        if (won) rmTree(new java.io.File(root, dataName))
-        won
-      }
-    }
+    listedRecords(root).filter(_ < floor).count(reclaim(root, _))
   }
+
+  /** Reclaim one vacuum victim. The record unlinks FIRST: a crash
+    * mid-vacuum leaves a version that already reads as vacuumed, never
+    * one with missing data. A concurrent vacuum may have unlinked the
+    * record already (recordOpt tolerates the race); only the caller
+    * whose unlink succeeded counts (and reclaims) the victim, so racing
+    * vacuums' counts partition correctly. */
+  private def reclaim(root: String, v: Int): Boolean =
+    recordOpt(root, v).exists { case (dataName, _) =>
+      val won = recordFile(root, v).delete()
+      if (won) rmTree(new java.io.File(root, dataName))
+      won
+    }
 
   /** AGE-BASED retention on the multi-writer log ([[Versions.vacuumAged]]'s
     * semantics on the CAS core): reclaim versions whose COMMIT STAMP —
@@ -250,15 +251,7 @@ object TxLog {
     // simply young): a retained overlay must keep its base readable
     val protectChains = versions.filterNot(aged)
       .flatMap(v => Mor.fullBase(versionDir(root, _), v) to v).toSet
-    versions.filter(v => aged(v) && !protectChains(v)).count { v =>
-      recordOpt(root, v).exists { case (dataName, _) =>
-        // unlink the record FIRST (reads fail loudly, never partial);
-        // only the caller whose unlink succeeded reclaims the data
-        val won = recordFile(root, v).delete()
-        if (won) rmTree(new java.io.File(root, dataName))
-        won
-      }
-    }
+    versions.filter(v => aged(v) && !protectChains(v)).count(reclaim(root, _))
   }
 
   /** The physical data directory of version `v`, resolved THROUGH the
@@ -329,31 +322,11 @@ object TxLog {
     n
   }
 
-  /** Commit-time auto-compaction (the [[Versions.autoCompactDepth]]
-    * policy on the CAS core): when THIS writer's overlay pushed the
-    * chain past the threshold, fold it through the optimistic
-    * [[compact]] loop — a racing writer merely makes the loop
-    * re-resolve. `<= 0` disables (the [[Catalog]] passes 0: a member's
-    * auto-compact would create a version no catalog record names). */
-  private def maybeAutoCompact(spark: SparkSession, root: String,
-                               v: Int, threshold: Int): Unit = {
-    if (threshold > 0 && chainDepth(root, v) > threshold) {
-      compact(spark, root)
-      ()
-    }
-  }
-
-  /** Overlay-chain depth of version `v` (default: current) — how many
-    * anti-join overlays a read must resolve; 0 for a full version. */
-  def chainDepth(root: String, v: Int = -1): Int = {
-    val at = if (v >= 0) v else current(root)
-    if (at < 0) 0 else Mor.chainDepth(versionDir(root, _), at)
-  }
-
-  /** Maintenance entry: collapse the current chain iff deeper than
-    * `threshold`. Returns the new full version, or -1 if shallow. */
-  def compactIfDeeper(spark: SparkSession, root: String, threshold: Int): Int =
-    if (chainDepth(root) > threshold) compact(spark, root) else -1
+  /** Auto-compaction and [[compactIfDeeper]] fold through the
+    * optimistic [[compact]] loop — a racing writer merely makes the
+    * loop re-resolve. */
+  protected def compactChain(spark: SparkSession, root: String): Int =
+    compact(spark, root)
 
   /** Collapse the current merge-on-read chain into one FULL version
     * through the optimistic loop (the OPTIMIZE/compaction step): reads
@@ -428,6 +401,36 @@ object TxLog {
     }
   }
 
+  /** The [[Catalog]] member disciplines on the CAS core. A Put is a
+    * BLIND retry at the physical head: a racing transaction's member
+    * commit just bumps the number; the CATALOG CAS still arbitrates
+    * whose snapshot wins. An overlay's member CAS at `expected` (the
+    * cataloged version) enforces chain contiguity: a stale snapshot or
+    * crashed garbage surfaces as [[CommitConflict]] for the catalog's
+    * transact loop. */
+  private[lake] def commitPut(df: DataFrame, root: String): Int = {
+    var attempt = 0
+    while (true) {
+      try return commit(df, root, expected = current(root))
+      catch {
+        case c: CommitConflict =>
+          attempt += 1
+          if (attempt > 20) throw c
+      }
+    }
+    -1 // unreachable
+  }
+
+  private[lake] def commitDeleteAt(keys: DataFrame, root: String,
+                                   keyCol: String, expected: Int): Int =
+    commitDelete(keys, root, keyCol, expected = expected, autoCompactAt = 0)
+
+  private[lake] def commitUpsertAt(rows: DataFrame, root: String,
+                                   keyCol: String, expected: Int,
+                                   evolveSchema: Boolean): Int =
+    commitUpsert(rows, root, keyCol, expected = expected, autoCompactAt = 0,
+      evolveSchema = evolveSchema)
+
   /** Test/migration hook: overwrite version `v`'s stamped commit time
     * (the third record-line token) — fixtures age versions through the
     * SUPPORTED channel, not inode mtimes, which retention ignores. */
@@ -459,19 +462,6 @@ object TxLog {
       }
     }
     -1 // unreachable
-  }
-
-  /** Quiescence window before an unrecorded data directory counts as a
-    * crashed writer's orphan rather than an in-flight commit. */
-  private[graft] val orphanGraceMs: Long = 10 * 60 * 1000L
-
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-  }
-
-  private def newestMtime(f: java.io.File): Long = {
-    val children = Option(f.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-    (f.lastModified() +: children.map(newestMtime)).max
   }
 
   /** Maintenance: reclaim data directories NO commit record names —

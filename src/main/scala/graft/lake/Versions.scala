@@ -1,5 +1,6 @@
 package graft.lake
 
+import graft.io.FileTree.{newestMtime, rmTree}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
@@ -26,7 +27,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * the Streamlit process, SURVEY.md §0) — this is part of the scale
  * extension surface.
  */
-object Versions {
+object Versions extends Core {
 
   private def manifest(root: String) = new java.io.File(root, "_current")
 
@@ -78,20 +79,6 @@ object Versions {
     if (t.length < 2) -1L else t(1).toLong
   }
 
-  /** How long an orphaned `v<N>` directory must have been quiescent
-    * (newest mtime in its tree) before [[commit]] reclaims it. Below
-    * this, the directory is treated as a CONCURRENT writer's in-flight
-    * commit and the single-writer contract violation fails loudly
-    * instead of silently clobbering it. A genuinely crashed writer's
-    * orphan ages past this within minutes; an active writer keeps
-    * touching its task files. */
-  private[graft] val orphanGraceMs: Long = 10 * 60 * 1000L
-
-  private def newestMtime(f: java.io.File): Long = {
-    val children = Option(f.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-    (f.lastModified() +: children.map(newestMtime)).max
-  }
-
   /** Commit `df` as the next version: write `v<N>` fully, then flip
     * the `_current` pointer. Returns N.
     *
@@ -99,7 +86,7 @@ object Versions {
     * write and flipping the pointer leaves a half-written `v<N>`
     * directory that is provably garbage (the pointer never reached it,
     * so no reader can hold it) — once it has been quiescent for
-    * [[orphanGraceMs]] it is cleared here so a crashed commit never
+    * [[Core.orphanGraceMs]] it is cleared here so a crashed commit never
     * wedges the table. A FRESH `v<N>`, by contrast, is most likely a
     * concurrent writer mid-commit: the single-writer contract is being
     * violated, and this fails loudly (IllegalStateException) rather
@@ -138,10 +125,6 @@ object Versions {
             s"orphan is reclaimed after ${orphanGraceMs}ms of quiescence.")
       rmTree(orphan)
     }
-  }
-
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
   }
 
   /** Stamp the COMMIT TIME into the version directory's own content
@@ -272,26 +255,8 @@ object Versions {
     * a version the catalog record does not name). */
   val autoCompactDepth: Int = 64
 
-  private def maybeAutoCompact(spark: SparkSession, root: String,
-                               v: Int, threshold: Int): Unit = {
-    if (threshold > 0 && chainDepth(root, v) > threshold) {
-      compactDeletes(spark, root)
-      ()
-    }
-  }
-
-  /** Overlay-chain depth of version `v` (default: current) — how many
-    * anti-join overlays a read must resolve; 0 for a full version. */
-  def chainDepth(root: String, v: Int = -1): Int = {
-    val at = if (v >= 0) v else current(root)
-    if (at < 0) 0 else Mor.chainDepth(versionDir(root, _), at)
-  }
-
-  /** Maintenance entry: collapse the current merge-on-read chain iff it
-    * is deeper than `threshold` overlays. Returns the new full version,
-    * or -1 when the chain was already shallow enough. */
-  def compactIfDeeper(spark: SparkSession, root: String, threshold: Int): Int =
-    if (chainDepth(root) > threshold) compactDeletes(spark, root) else -1
+  protected def compactChain(spark: SparkSession, root: String): Int =
+    compactDeletes(spark, root)
 
   /** Collapse the current merge-on-read chain into one FULL version
     * (the OPTIMIZE/compaction step): commit the resolved current state,
@@ -325,6 +290,39 @@ object Versions {
     val d = new java.io.File(root, s"v$made")
     new java.io.File(d, "_SUCCESS").delete() // invalidate before delete
     rmTree(d)
+  }
+
+  private[lake] def rollback(root: String, v: Int): Unit =
+    rollbackTo(root, v - 1, v)
+
+  /** The [[Catalog]] member disciplines on the single-writer core: a
+    * Put is a plain [[commit]]; with no CAS, an overlay's contiguity is
+    * checked loudly ([[requireContiguous]]). */
+  private[lake] def commitPut(df: DataFrame, root: String): Int =
+    commit(df, root)
+
+  private[lake] def commitDeleteAt(keys: DataFrame, root: String,
+                                   keyCol: String, expected: Int): Int = {
+    requireContiguous(root, expected)
+    commitDelete(keys, root, keyCol, autoCompactAt = 0)
+  }
+
+  private[lake] def commitUpsertAt(rows: DataFrame, root: String,
+                                   keyCol: String, expected: Int,
+                                   evolveSchema: Boolean): Int = {
+    requireContiguous(root, expected)
+    commitUpsert(rows, root, keyCol, autoCompactAt = 0,
+      evolveSchema = evolveSchema)
+  }
+
+  private def requireContiguous(root: String, expected: Int): Unit = {
+    val physical = current(root)
+    if (physical != expected) throw new IllegalStateException(
+      s"member $root is physically at version $physical but the catalog " +
+        s"names $expected — uncataloged garbage from a crashed transaction " +
+        "(or an out-of-band writer) sits at the overlay's slot; an " +
+        "overlay committed on top would resolve THROUGH it. Run " +
+        "Catalog.repairMember to cap the garbage with a full version.")
   }
 
   /** Test/migration hook: overwrite version `v`'s stamped commit time

@@ -2852,7 +2852,7 @@ object LakeQueries {
     val root = graft.io.Sources.scratchDir("graft_cat_cores")
     try {
       import graft.lake.{Catalog, CommitConflict, TxLog, Versions}
-      import graft.lake.Catalog.{DeleteKeys, Put, TxLogCore, UpsertRows}
+      import graft.lake.Catalog.{DeleteKeys, Put, UpsertRows}
       import s.implicits._
       // checkpointed once: the protocol scans this projection from ~10
       // commits and a dozen probes — one materialization, not N scans
@@ -2880,7 +2880,7 @@ object LakeQueries {
       }
       // txn0: MIXED-core creation in one transaction
       val snap0 = Catalog.commitUpdates(root, Map(
-        "bank" -> Put(cust, TxLogCore),
+        "bank" -> Put(cust, TxLog),
         "audit" -> Put(auditRow("open", cust.count(), 0L))))
       // txnA: deletion vector + its audit row, atomically
       val snap1 = Catalog.transactUpdates(root) { snap =>
@@ -3684,7 +3684,7 @@ object LakeQueries {
       val ledgersIndependent =
         graft.streaming.StreamingLake.applyBatchCatalog(root, replay,
           batchId = 0L, app = "probe",
-          viewCore = Catalog.TxLogCore) &&
+          viewCore = graft.lake.TxLog) &&
           Catalog.catalogVersion(root) == cur + 1 &&
           Catalog.lastTxn(root, "probe") == 0L &&
           Catalog.lastTxn(root, "even") == a - 1
@@ -3979,11 +3979,14 @@ object LakeQueries {
       // the static-schema assumption the window derivation above
       // depends on, enforced: if a future fixture edit evolves a
       // member's schema mid-stream, per-step and whole-window
-      // alignment diverge and the gates would weaken silently
+      // alignment diverge and the gates would weaken silently. EVERY
+      // record is checked against record 0 (an A→B→A history passes an
+      // endpoint-only check), from chain metadata — no plan analysis
       Seq("index", "view").foreach { t =>
-        def nt(v: Int) = Catalog.read(s, root, t, Catalog.snapshotAt(root, v))
-          .schema.map(f => (f.name, f.dataType))
-        require(nt(0) == nt(cur),
+        def nt(v: Int) = Catalog.memberSchemaAt(s, root, t, v)
+          .map(f => (f.name, f.dataType))
+        val first = nt(0)
+        require((1 to cur).forall(nt(_) == first),
           s"member $t evolved its schema across the stream — the " +
             "single-feed window derivation requires static schemas")
       }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graft.ColumnBridge
 import graft.curation.Curation
+import graft.io.FileTree.rmTree
 import graft.functions.NearestCentroids
 
 /**
@@ -357,10 +358,6 @@ object Ivf {
             "left_anti")
       }
     }
-  }
-
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
   }
 
   /** Steps 3–6 of the [[partialRetrain]] swap — assigned pair first,

@@ -151,12 +151,7 @@ object StreamingDemand {
         val out = body(child)
         spark.createDataFrame(out.rdd, out.schema)
       } finally {
-        ckptRoot.foreach { d =>
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-          }
-          rm(new java.io.File(d))
-        }
+        ckptRoot.foreach(d => graft.io.FileTree.rmTree(new java.io.File(d)))
         sweepCloneListenerBuses(spark)
       }
     }

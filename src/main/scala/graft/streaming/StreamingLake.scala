@@ -180,10 +180,10 @@ object StreamingLake {
                                        maxRetries: Int = 100,
                                        app: String = "",
                                        compactAt: Int = 0,
-                                       viewCore: graft.lake.Catalog.Core =
-                                         graft.lake.Catalog.VersionsCore): Boolean = {
-    import graft.lake.{Catalog, CommitConflict}
-    import graft.lake.Catalog.{MemberUpdate, Put, TxLogCore, UpsertRows}
+                                       viewCore: graft.lake.Core =
+                                         graft.lake.Versions): Boolean = {
+    import graft.lake.{Catalog, CommitConflict, TxLog}
+    import graft.lake.Catalog.{MemberUpdate, Put, UpsertRows}
     if (batchId <= Catalog.lastTxn(root, app)) return false // redelivered
     val spark = batch.sparkSession
     val agg = aggWithMax(batch).localCheckpoint()
@@ -205,14 +205,14 @@ object StreamingLake {
           .select(col("event_type"), col("id_max").as("last_id"))
         // the view member's core is the caller's call: single-writer
         // loops keep the Versions manifest (q353); CONCURRENT writers
-        // must declare TxLogCore — racing Puts on a Versions member
+        // must declare TxLog — racing Puts on a Versions member
         // would race its manifest outside any CAS (the documented
         // disjointness contract)
         val updates = Map[String, MemberUpdate](
           "view" -> Put(merged, viewCore),
           "index" -> (if (snap.contains("index"))
             UpsertRows(idxRows, "event_type")
-          else Put(idxRows, TxLogCore)))
+          else Put(idxRows, TxLog)))
         casInterleave()
         try {
           Catalog.commitUpdates(root, updates, expected, txn = batchId,
@@ -295,7 +295,7 @@ object StreamingLake {
         .writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           applyBatchCatalog(root, batch, batchId, app = app,
-            compactAt = compactAt, viewCore = graft.lake.Catalog.TxLogCore)
+            compactAt = compactAt, viewCore = graft.lake.TxLog)
           batches.incrementAndGet()
           ()
         }

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round13Spec extends AnyFunSuite with SparkSpec {
 
   import graft.lake.{Catalog, CommitConflict, TxLog, Versions}
-  import graft.lake.Catalog.{DeleteKeys, Put, TxLogCore, UpsertRows}
+  import graft.lake.Catalog.{DeleteKeys, Put, UpsertRows}
 
   private def antiJoins(df: DataFrame): Int =
     df.queryExecution.optimizedPlan.collect {
@@ -35,7 +35,7 @@ class Round13Spec extends AnyFunSuite with SparkSpec {
       (0 until threads).foreach { i =>
         Catalog.commitUpdates(root, Map(
           s"v$i" -> Put(Seq(0L).toDF("n")),
-          s"t$i" -> Put(Seq((i.toLong, 0L)).toDF("k", "v"), TxLogCore)))
+          s"t$i" -> Put(Seq((i.toLong, 0L)).toDF("k", "v"), TxLog)))
       }
       val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
       val pool = (0 until threads).map { i =>
@@ -83,7 +83,7 @@ class Round13Spec extends AnyFunSuite with SparkSpec {
     val root = graft.io.Sources.scratchDir("graft_cat_member_race")
     try {
       Catalog.commitUpdates(root, Map("acct" ->
-        Put(Seq((1L, 0L), (2L, 0L)).toDF("k", "v"), TxLogCore)))
+        Put(Seq((1L, 0L), (2L, 0L)).toDF("k", "v"), TxLog)))
       val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
       val opsEach = 3
       val pool = (1 to 2).map { key =>
@@ -119,7 +119,7 @@ class Round13Spec extends AnyFunSuite with SparkSpec {
       val baseB = (0L until 20L).map(k => (k, k * 2L)).toDF("k", "v")
       Catalog.commitUpdates(root, Map(
         "a" -> Put(baseA),
-        "b" -> Put(baseB, TxLogCore)))
+        "b" -> Put(baseB, TxLog)))
       // a CRASHED transaction (no rollback ran) left an uncataloged
       // member version at b's overlay slot
       TxLog.commit(baseB.select(col("k"), lit(-1L).as("v")), s"$root/b",

@@ -17,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class Round14Spec extends AnyFunSuite with SparkSpec {
 
   import graft.lake.{Catalog, CommitConflict, TxLog, Versions}
-  import graft.lake.Catalog.{Compact, DeleteKeys, Put, TxLogCore, UpsertRows}
+  import graft.lake.Catalog.{Compact, DeleteKeys, Put, UpsertRows}
 
   private def antiJoins(df: DataFrame): Int =
     df.queryExecution.optimizedPlan.collect {
@@ -39,7 +39,7 @@ class Round14Spec extends AnyFunSuite with SparkSpec {
         new Thread(() => {
           try {
             Catalog.transactUpdates(root, maxRetries = 300) { _ =>
-              Map("m" -> Put(Seq(i.toLong).toDF("n"), TxLogCore))
+              Map("m" -> Put(Seq(i.toLong).toDF("n"), TxLog))
             }
             ()
           } catch { case t: Throwable => errs.add(t); () }
@@ -70,7 +70,7 @@ class Round14Spec extends AnyFunSuite with SparkSpec {
       intercept[IllegalArgumentException] {
         Catalog.commitUpdates(root, Map(
           "a" -> Put(Seq(1L).toDF("n")),
-          "m" -> Put(Seq(1L).toDF("n"), TxLogCore),
+          "m" -> Put(Seq(1L).toDF("n"), TxLog),
           "zz" -> DeleteKeys(Seq(1L).toDF("k"), "k")))
       }
       assert(!new java.io.File(s"$root/a").exists(),
@@ -96,7 +96,7 @@ class Round14Spec extends AnyFunSuite with SparkSpec {
     val root = graft.io.Sources.scratchDir("graft_cat_compact")
     try {
       val base = (0L until 100L).map(k => (k, k * 10L)).toDF("k", "v")
-      Catalog.commitUpdates(root, Map("x" -> Put(base, TxLogCore)))
+      Catalog.commitUpdates(root, Map("x" -> Put(base, TxLog)))
       (0 until 5).foreach(i => Catalog.commitUpdates(root,
         Map("x" -> DeleteKeys(Seq(i.toLong).toDF("k"), "k"))))
       assert(Catalog.memberChainDepth(root, "x") == 5)
@@ -190,7 +190,7 @@ class Round14Spec extends AnyFunSuite with SparkSpec {
       // the catalog's UpsertRows carries the same opt-in
       val cat = graft.io.Sources.scratchDir("graft_evolve_cat")
       try {
-        Catalog.commitUpdates(cat, Map("t" -> Put(base, TxLogCore)))
+        Catalog.commitUpdates(cat, Map("t" -> Put(base, TxLog)))
         intercept[IllegalArgumentException](Catalog.commitUpdates(cat,
           Map("t" -> UpsertRows(widened, "k"))))
         Catalog.commitUpdates(cat,
@@ -445,7 +445,7 @@ class Round14Spec extends AnyFunSuite with SparkSpec {
       // the ledgers are independent, not a shared high-water
       assert(graft.streaming.StreamingLake.applyBatchCatalog(root, replay,
         batchId = 0L, app = "third",
-        viewCore = graft.lake.Catalog.TxLogCore))
+        viewCore = TxLog))
       assert(Catalog.catalogVersion(root) == cur + 1)
       // the exactly-once PAIR invariant holds at every snapshot, both
       // streams' commits interleaved or not
@@ -475,35 +475,29 @@ class Round14Spec extends AnyFunSuite with SparkSpec {
   test("change data feed: overlay deltas, pre-images, compaction silence, evolution, telescoping — both cores") {
     import spark.implicits._
     import graft.lake.ChangeFeed
-    for (core <- Seq(Catalog.VersionsCore: Catalog.Core, TxLogCore)) {
+    for (core <- Seq[graft.lake.Core](Versions, TxLog)) {
       val root = graft.io.Sources.scratchDir("graft_cdf")
       try {
         def eq(a: DataFrame, b: DataFrame): Boolean =
           a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
-        def cur: Int = core match {
-          case TxLogCore => TxLog.current(root)
-          case _ => Versions.current(root)
-        }
+        def cur: Int = core.current(root)
         def full(df: DataFrame): Int = core match {
-          case TxLogCore => TxLog.commit(df, root, expected = cur)
+          case TxLog => TxLog.commit(df, root, expected = cur)
           case _ => Versions.commit(df, root)
         }
         def up(df: DataFrame, evolve: Boolean = false): Int = core match {
-          case TxLogCore => TxLog.commitUpsert(df, root, "k",
+          case TxLog => TxLog.commitUpsert(df, root, "k",
             expected = cur, autoCompactAt = 0, evolveSchema = evolve)
           case _ => Versions.commitUpsert(df, root, "k",
             autoCompactAt = 0, evolveSchema = evolve)
         }
         def del(keys: DataFrame): Int = core match {
-          case TxLogCore => TxLog.commitDelete(keys, root, "k",
+          case TxLog => TxLog.commitDelete(keys, root, "k",
             expected = cur, autoCompactAt = 0)
           case _ => Versions.commitDelete(keys, root, "k", autoCompactAt = 0)
         }
         def feedAt(v: Int) = ChangeFeed.changesAt(spark, root, v, core)
-        def read(v: Int): DataFrame = core match {
-          case TxLogCore => TxLog.read(spark, root, v)
-          case _ => Versions.read(spark, root, v)
-        }
+        def read(v: Int): DataFrame = core.read(spark, root, v)
         val base = (0L until 40L).map(k => (k, k * 2L)).toDF("k", "v")
         full(base)
         // v0 (genesis): all-insert
@@ -535,7 +529,7 @@ class Round14Spec extends AnyFunSuite with SparkSpec {
           s"$core: DV pre-images wrong (absent key must contribute nothing)")
         // v3 compaction: content-preserving full version → EMPTY delta
         core match {
-          case TxLogCore => TxLog.compact(spark, root)
+          case TxLog => TxLog.compact(spark, root)
           case _ => Versions.compactDeletes(spark, root)
         }
         assert(feedAt(3).isEmpty,

@@ -63,10 +63,11 @@ object Bench {
       if (sys.env.get("SPARK_GRAFT_BENCH_ORDER").contains("reverse"))
         ordered.reverse
       else ordered
-    // child-session stream runs (withStatePartitions isolation) don't hit
-    // the parent listener, so count them via the explicit counter too
+    // child-session stream runs (Replay's state-partition isolation)
+    // don't hit the parent listener, so count them via the explicit
+    // counter too
     def streamCount: Int = streamStarts.get() +
-      graft.streaming.StreamingDemand.isolatedStarts.get()
+      graft.streaming.Replay.isolatedStarts.get()
     // Noise control (round-7 finding: single-shot timings showed 3x
     // phantom regressions on byte-identical code): each query runs ONCE
     // untimed as a warm-up — absorbing one-time costs (scratch builds,

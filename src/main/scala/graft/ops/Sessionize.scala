@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.streaming.StreamingDemand.drain
 
 /**
  * Event sessionization with an inactivity gap — batch and streaming forms.
@@ -101,7 +100,7 @@ object Sessionize {
 
   /**
    * Drive the streaming sessionizer over the finite harness events
-   * parquet to completion (memory sink + processAllAvailable; the
+   * parquet to completion ([[graft.streaming.Replay.memory]]; the
    * trailing no-data micro-batch advances the watermark and fires the
    * event-time timeouts) and return the emitted sessions. Sessions
    * still open at the final watermark — those ending within ~2 gaps of
@@ -109,17 +108,9 @@ object Sessionize {
    * stream.
    */
   def runStreamToBatch(spark: org.apache.spark.sql.SparkSession, dir: String,
-                       gapMinutes: Int = 30): DataFrame = {
-    val name = "stream_sessions_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    graft.streaming.StreamingDemand.withStatePartitions(spark,
-      graft.streaming.StreamingDemand.statePartitionsFor(spark, dir)) { child =>
-      val stream = graft.streaming.StreamingDemand.eventsStream(child, dir)
-      val q = sessionizeStream(stream, gapMinutes).toDF()
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      drain(child, name)
+                       gapMinutes: Int = 30): DataFrame =
+    graft.streaming.Replay.memory(spark, dir, "append") { child =>
+      sessionizeStream(
+        graft.streaming.StreamingDemand.eventsStream(child, dir), gapMinutes).toDF()
     }
-  }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.streaming.StreamingDemand.drain
 import graft.text.TextAnalysis
 
 /**
@@ -46,8 +45,8 @@ object StreamingDedup {
 
   /**
    * Drive the document-stream dedup over the finite harness parquet to
-   * completion (memory sink + processAllAvailable — the same
-   * runToBatch recipe as [[StreamingDemand]]) and return the surviving
+   * completion ([[Replay.memory]], the same driver as
+   * [[StreamingDemand]]'s runners) and return the surviving
    * rows. The documents table carries no event time, so arrival time is
    * simulated as `timestamp_seconds(doc_id + 86400)` — ingestion order
    * by id, the stand-in for a firehose's append order. The one-day
@@ -55,22 +54,15 @@ object StreamingDedup {
    * a stateful operator drops input at-or-below the watermark as late,
    * which would silently swallow the first document.
    */
-  def runDocDedupToBatch(spark: SparkSession, dir: String): DataFrame = {
-    val name = "stream_dedup_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    StreamingDemand.withStatePartitions(spark,
-      StreamingDemand.statePartitionsFor(spark, dir, "documents.parquet")) { child =>
+  def runDocDedupToBatch(spark: SparkSession, dir: String): DataFrame =
+    Replay.memory(spark, dir, "append", table = "documents.parquet") { child =>
       val stream = child.readStream
         .schema(docsSchema)
         .option("pathGlobFilter", "documents.parquet")
         .parquet(dir)
         .withColumn("_ts", timestamp_seconds(col("doc_id") + lit(86400L)))
-      val q = dedupDocStream(stream, "_ts").drop("_ts")
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      drain(child, name)
+      dedupDocStream(stream, "_ts").drop("_ts")
     }
-  }
 
   /**
    * STREAMING NEAR-DUP INGEST — the "new data arrives" path of a 100 TB
@@ -100,9 +92,7 @@ object StreamingDedup {
         .filter(size(TextAnalysis.tokens(col("text"))) >= 3)
         .select(col("doc_id").as("j"),
           posexplode(bandsOf(col("text"))).as(Seq("bi", "bk"))))
-    val name = "stream_neardup_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    StreamingDemand.withStatePartitions(spark,
-      StreamingDemand.statePartitionsFor(spark, dir, "documents.parquet")) { child =>
+    Replay.memory(spark, dir, "complete", table = "documents.parquet") { child =>
       val index = child.read.parquet(indexPath)
       val stream = child.readStream
         .schema(docsSchema)
@@ -111,14 +101,9 @@ object StreamingDedup {
         .filter(size(TextAnalysis.tokens(col("text"))) >= 3)
         .select(col("doc_id").as("i"),
           posexplode(bandsOf(col("text"))).as(Seq("bi", "bk")))
-      val cand = stream.join(index, Seq("bi", "bk"))
+      stream.join(index, Seq("bi", "bk"))
         .filter(col("i") =!= col("j")) // a doc always re-finds itself
         .groupBy("i", "j").agg(count(lit(1)).as("n_bands"))
-      val q = cand
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      drain(child, name)
     }
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /**
  * Streaming micro-batch commits into a [[graft.lake.Versions]] table —
@@ -26,17 +25,6 @@ import org.apache.spark.sql.types._
  */
 object StreamingLake {
 
-  private val stagedSchema = StructType(Seq(
-    StructField("event_type", StringType), StructField("event_id", LongType)))
-
-  /** One micro-batch into the versioned view: skip if already applied
-    * (batchId ≤ the txn recorded by the LAST commit — batchIds are
-    * monotone), else delta-aggregate + merge with the stored view +
-    * commit with the batchId as the commit's txn. Exposed for the
-    * redelivery test — calling it twice with the same batchId must
-    * commit exactly once, and because the txn rides the pointer flip
-    * there is no crash window where the view is committed but the
-    * batch not marked. */
   private def aggOf(batch: DataFrame): DataFrame =
     batch.groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("event_id").as("id_sum"))
@@ -55,6 +43,14 @@ object StreamingLake {
               .as("id_sum"))
     }
 
+  /** One micro-batch into the versioned view: skip if already applied
+    * (batchId ≤ the txn recorded by the LAST commit — batchIds are
+    * monotone), else delta-aggregate + merge with the stored view +
+    * commit with the batchId as the commit's txn. Exposed for the
+    * redelivery test — calling it twice with the same batchId must
+    * commit exactly once, and because the txn rides the pointer flip
+    * there is no crash window where the view is committed but the
+    * batch not marked. */
   private[graft] def applyBatch(root: String, batch: DataFrame,
                                 batchId: Long): Unit = {
     import graft.lake.Versions
@@ -88,7 +84,7 @@ object StreamingLake {
   private[graft] def applyBatchCas(root: String, batch: DataFrame,
                                    batchId: Long,
                                    maxRetries: Int = 100): Boolean = {
-    import graft.lake.{CommitConflict, TxLog}
+    import graft.lake.TxLog
     if (batchId <= TxLog.lastTxn(root)) return false // redelivered epoch
     val spark = batch.sparkSession
     // checkpointed so retries never rescan the batch; explicitly
@@ -96,25 +92,38 @@ object StreamingLake {
     // the slow-creep class the round-10 listener-bus fix taught us to
     // never leave to the GC on a long-running stream
     val agg = aggOf(batch).localCheckpoint()
-    var attempt = 0
-    try {
-      while (true) {
-        if (batchId <= TxLog.lastTxn(root)) return false
-        val v = TxLog.current(root)
-        val base = if (v < 0) None else Some(TxLog.read(spark, root, v))
-        casInterleave()
-        try {
-          TxLog.commit(mergeInto(base, agg), root, expected = v, txn = batchId)
-          return true
-        } catch {
-          case c: CommitConflict => // rebase and retry, boundedly
-            attempt += 1
-            if (attempt > maxRetries) throw c
-            Thread.sleep(math.min(10L * attempt, 200L)) // break phase-lock
-        }
-      }
-      false // unreachable
+    try rebasing(maxRetries, batchId <= TxLog.lastTxn(root)) {
+      val v = TxLog.current(root)
+      (v, if (v < 0) None else Some(TxLog.read(spark, root, v)))
+    } { case (v, base) =>
+      TxLog.commit(mergeInto(base, agg), root, expected = v, txn = batchId)
     } finally { agg.unpersist(); () }
+  }
+
+  /** The bounded rebase loop both CAS appliers share: unless `applied`
+    * (the skip test, re-checked every round in case another worker
+    * applied this very epoch), `read` the current state, pass the
+    * [[casInterleave]] point and `commit` against it. A
+    * [[graft.lake.CommitConflict]] means another commit won the
+    * version: back off linearly and rebase, at most `maxRetries` times
+    * before the conflict surfaces. Returns true if THIS call committed. */
+  private def rebasing[S](maxRetries: Int, applied: => Boolean)(read: => S)(
+                          commit: S => Unit): Boolean = {
+    var attempt = 0
+    while (!applied) {
+      val state = read
+      casInterleave()
+      try {
+        commit(state)
+        return true
+      } catch {
+        case c: graft.lake.CommitConflict =>
+          attempt += 1
+          if (attempt > maxRetries) throw c
+          Thread.sleep(math.min(10L * attempt, 200L)) // break phase-lock
+      }
+    }
+    false
   }
 
   /** Test-only interleave point between the stream's state read and
@@ -182,91 +191,67 @@ object StreamingLake {
                                        compactAt: Int = 0,
                                        viewCore: graft.lake.Core =
                                          graft.lake.Versions): Boolean = {
-    import graft.lake.{Catalog, CommitConflict, TxLog}
+    import graft.lake.{Catalog, TxLog}
     import graft.lake.Catalog.{MemberUpdate, Put, UpsertRows}
     if (batchId <= Catalog.lastTxn(root, app)) return false // redelivered
     val spark = batch.sparkSession
     val agg = aggWithMax(batch).localCheckpoint()
-    var attempt = 0
-    try {
-      while (true) {
-        if (batchId <= Catalog.lastTxn(root, app)) return false
-        val expected = Catalog.catalogVersion(root)
-        val snap = if (expected < 0) Map.empty[String, Int]
-                   else Catalog.snapshotAt(root, expected)
-        val merged = mergeWithMax(
-          if (snap.contains("view"))
-            Some(Catalog.read(spark, root, "view", snap)) else None, agg)
-        // the index row for a touched type is the CUMULATIVE max (from
-        // the merged view, so view and index can never disagree), but
-        // only the types this batch touched upsert — O(|batch keys|)
-        val idxRows = merged
-          .join(agg.select("event_type"), Seq("event_type"), "left_semi")
-          .select(col("event_type"), col("id_max").as("last_id"))
-        // the view member's core is the caller's call: single-writer
-        // loops keep the Versions manifest (q353); CONCURRENT writers
-        // must declare TxLog — racing Puts on a Versions member
-        // would race its manifest outside any CAS (the documented
-        // disjointness contract)
-        val updates = Map[String, MemberUpdate](
-          "view" -> Put(merged, viewCore),
-          "index" -> (if (snap.contains("index"))
-            UpsertRows(idxRows, "event_type")
-          else Put(idxRows, TxLog)))
-        casInterleave()
-        try {
-          Catalog.commitUpdates(root, updates, expected, txn = batchId,
-            txnApp = app)
-          // bound the index's read plan: fold its overlay chain through
-          // a Compact transaction once this batch pushed it past the
-          // threshold (re-checked inside — a racing compactor already
-          // paid makes this a no-op)
-          if (compactAt > 0) {
-            Catalog.compactMemberIfDeeper(spark, root, "index", compactAt)
-            ()
-          }
-          return true
-        } catch {
-          case c: CommitConflict =>
-            attempt += 1
-            if (attempt > maxRetries) throw c
-            Thread.sleep(math.min(10L * attempt, 200L)) // break phase-lock
-        }
+    try rebasing(maxRetries, batchId <= Catalog.lastTxn(root, app)) {
+      val expected = Catalog.catalogVersion(root)
+      val snap = if (expected < 0) Map.empty[String, Int]
+                 else Catalog.snapshotAt(root, expected)
+      val merged = mergeWithMax(
+        if (snap.contains("view"))
+          Some(Catalog.read(spark, root, "view", snap)) else None, agg)
+      // the index row for a touched type is the CUMULATIVE max (from
+      // the merged view, so view and index can never disagree), but
+      // only the types this batch touched upsert — O(|batch keys|)
+      val idxRows = merged
+        .join(agg.select("event_type"), Seq("event_type"), "left_semi")
+        .select(col("event_type"), col("id_max").as("last_id"))
+      // the view member's core is the caller's call: single-writer
+      // loops keep the Versions manifest (q353); CONCURRENT writers
+      // must declare TxLog — racing Puts on a Versions member
+      // would race its manifest outside any CAS (the documented
+      // disjointness contract)
+      val updates = Map[String, MemberUpdate](
+        "view" -> Put(merged, viewCore),
+        "index" -> (if (snap.contains("index"))
+          UpsertRows(idxRows, "event_type")
+        else Put(idxRows, TxLog)))
+      (expected, updates)
+    } { case (expected, updates) =>
+      Catalog.commitUpdates(root, updates, expected, txn = batchId,
+        txnApp = app)
+      // bound the index's read plan: fold its overlay chain through
+      // a Compact transaction once this batch pushed it past the
+      // threshold (re-checked inside — a racing compactor already
+      // paid makes this a no-op)
+      if (compactAt > 0) {
+        Catalog.compactMemberIfDeeper(spark, root, "index", compactAt)
+        ()
       }
-      false // unreachable
     } finally { agg.unpersist(); () }
   }
 
-  /** Drive the events table through [[applyBatchCatalog]] in `nFiles`
-    * controlled micro-batches (staged files + maxFilesPerTrigger=1).
-    * Returns micro-batches processed; the caller reads view and index
-    * back through [[graft.lake.Catalog.read]]. `compactAt` bounds the
-    * index member's chain depth (0 = never compact, the q353 shape). */
-  def runViewIndexCatalog(spark: SparkSession, dir: String, root: String,
-                          nFiles: Int = 4, compactAt: Int = 0): Long = {
-    val stage = graft.io.Sources.scratchDir("graft_streamcat")
+  /** The staged input of every streamed view: (event_type, event_id)
+    * of the typed events. */
+  private def typedEvents(spark: SparkSession, dir: String): DataFrame =
     graft.io.Sources.table(spark, dir, "events")
       .filter(col("event_type").isNotNull)
       .select(col("event_type"), col("event_id"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(stage)
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val q = spark.readStream
-      .schema(stagedSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatchCatalog(root, batch, batchId, compactAt = compactAt)
-        batches.incrementAndGet()
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally { q.stop(); graft.io.Sources.removeScratchDir(stage)
-      StreamingDemand.sweepCloneListenerBuses(spark) }
-    batches.get()
-  }
+
+  /** Drive the events table through [[applyBatchCatalog]] in `nFiles`
+    * controlled micro-batches ([[Replay.staged]]: one staged file per
+    * trigger). Returns micro-batches processed; the caller reads view
+    * and index back through [[graft.lake.Catalog.read]]. `compactAt`
+    * bounds the index member's chain depth (0 = never compact, the
+    * q353 shape). */
+  def runViewIndexCatalog(spark: SparkSession, dir: String, root: String,
+                          nFiles: Int = 4, compactAt: Int = 0): Long =
+    Replay.staged(spark, nFiles)(Replay.Staged("graft_streamcat",
+      typedEvents(spark, dir),
+      applyBatchCatalog(root, _, _, compactAt = compactAt))).head
 
   /** TWO CONCURRENT STREAMING WRITERS into ONE catalog — two real
     * structured-streaming queries (separate sources, checkpoints, and
@@ -281,97 +266,33 @@ object StreamingLake {
   def runTwoStreamCatalog(spark: SparkSession, dir: String, root: String,
                           nFiles: Int = 4,
                           compactAt: Int = 0): (Long, Long) = {
-    val ev = graft.io.Sources.table(spark, dir, "events")
-      .filter(col("event_type").isNotNull)
-      .select(col("event_type"), col("event_id"))
-    def runOne(app: String, slice: DataFrame) = {
-      val stage = graft.io.Sources.scratchDir(s"graft_stream2_$app")
-      slice.repartition(nFiles).write.mode("overwrite").parquet(stage)
-      val batches = new java.util.concurrent.atomic.AtomicLong(0)
-      val q = spark.readStream
-        .schema(stagedSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          applyBatchCatalog(root, batch, batchId, app = app,
-            compactAt = compactAt, viewCore = graft.lake.TxLog)
-          batches.incrementAndGet()
-          ()
-        }
-        .start()
-      (q, stage, batches)
-    }
-    val (qa, stageA, batchesA) = runOne("even", ev.filter(col("event_id") % 2 === 0))
-    val (qb, stageB, batchesB) = runOne("odd", ev.filter(col("event_id") % 2 =!= 0))
-    try { qa.processAllAvailable(); qb.processAllAvailable() }
-    finally {
-      qa.stop(); qb.stop()
-      graft.io.Sources.removeScratchDir(stageA)
-      graft.io.Sources.removeScratchDir(stageB)
-      StreamingDemand.sweepCloneListenerBuses(spark)
-    }
-    (batchesA.get(), batchesB.get())
+    val ev = typedEvents(spark, dir)
+    def stream(app: String, slice: DataFrame) =
+      Replay.Staged(s"graft_stream2_$app", slice,
+        applyBatchCatalog(root, _, _, app = app, compactAt = compactAt,
+          viewCore = graft.lake.TxLog))
+    val Seq(a, b) = Replay.staged(spark, nFiles)(
+      stream("even", ev.filter(col("event_id") % 2 === 0)),
+      stream("odd", ev.filter(col("event_id") % 2 =!= 0)))
+    (a, b)
   }
 
   /** Drive the events table through the stream in `nFiles` controlled
-    * micro-batches (staged files + maxFilesPerTrigger=1, the
-    * StreamingSketch pattern), committing one view version per batch
-    * into `root`. Returns the number of micro-batches processed; the
-    * caller reads the final view back through [[graft.lake.Versions]].
+    * micro-batches ([[Replay.staged]]: one staged file per trigger),
+    * committing one view version per batch into `root`. Returns the
+    * number of micro-batches processed; the caller reads the final
+    * view back through [[graft.lake.Versions]].
     */
+  def runViewCommits(spark: SparkSession, dir: String, root: String,
+                     nFiles: Int = 4): Long =
+    Replay.staged(spark, nFiles)(Replay.Staged("graft_streamlake",
+      typedEvents(spark, dir), applyBatch(root, _, _))).head
+
   /** [[runViewCommits]] against a [[graft.lake.TxLog]] table via
     * [[applyBatchCas]] — safe to run WHILE other writers commit to the
     * same root. Returns micro-batches processed. */
   def runViewCommitsCas(spark: SparkSession, dir: String, root: String,
-                        nFiles: Int = 4): Long = {
-    val stage = graft.io.Sources.scratchDir("graft_streamcas")
-    graft.io.Sources.table(spark, dir, "events")
-      .filter(col("event_type").isNotNull)
-      .select(col("event_type"), col("event_id"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(stage)
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val q = spark.readStream
-      .schema(stagedSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatchCas(root, batch, batchId)
-        batches.incrementAndGet()
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally { q.stop(); graft.io.Sources.removeScratchDir(stage)
-      StreamingDemand.sweepCloneListenerBuses(spark) }
-    batches.get()
-  }
-
-  def runViewCommits(spark: SparkSession, dir: String, root: String,
-                     nFiles: Int = 4): Long = {
-    val stage = graft.io.Sources.scratchDir("graft_streamlake")
-    graft.io.Sources.table(spark, dir, "events")
-      .filter(col("event_type").isNotNull)
-      .select(col("event_type"), col("event_id"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(stage)
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val q = spark.readStream
-      .schema(stagedSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(root, batch, batchId)
-        batches.incrementAndGet()
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally { q.stop(); graft.io.Sources.removeScratchDir(stage)
-      StreamingDemand.sweepCloneListenerBuses(spark) }
-    batches.get()
-  }
+                        nFiles: Int = 4): Long =
+    Replay.staged(spark, nFiles)(Replay.Staged("graft_streamcas",
+      typedEvents(spark, dir), applyBatchCas(root, _, _))).head
 }

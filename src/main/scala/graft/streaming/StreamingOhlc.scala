@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /**
  * Incremental OHLC bar building: the event stream folds into per-
@@ -17,11 +16,6 @@ import org.apache.spark.sql.types._
  */
 object StreamingOhlc {
 
-  private val stagedSchema = StructType(Seq(
-    StructField("day", StringType), StructField("event_type", StringType),
-    StructField("event_id", LongType), StructField("us", LongType),
-    StructField("value", DoubleType)))
-
   /** Partial bars for one slice of events: the (time, id) prefix of the
     * o/c structs makes min/max pick the earliest/latest event; `value`
     * rides along and never decides (ids are unique). */
@@ -33,54 +27,33 @@ object StreamingOhlc {
         count(lit(1)).as("volume"))
 
   /** Merge partial bars (same shape as [[bars]] output) — the monoid
-    * combine: struct extrema re-minimize/maximize, volumes add. */
+    * combine: struct extrema re-minimize/maximize, volumes add. The
+    * volume sum is never null (every group has a count); the coalesce
+    * keeps [[bars]]' non-null type, so merged bars, a single batch's
+    * bars and the empty fold all share one schema. */
   private def merge(df: DataFrame): DataFrame =
     df.groupBy("day", "event_type")
       .agg(min(col("o")).as("o"), max(col("high")).as("high"),
         min(col("low")).as("low"), max(col("c")).as("c"),
-        sum(col("volume")).as("volume"))
+        coalesce(sum(col("volume")), lit(0L)).as("volume"))
 
   /**
    * Stage the events table into `nFiles` parquet files, stream them
    * back one file per micro-batch, and fold each batch's partial bars
-   * into the accumulated bar table. State is the bar table itself
-   * (localCheckpointed per batch — bounded lineage), sized by
-   * days×types, never by events. Returns the final bars with q150's
+   * into the accumulated bar table ([[Replay.fold]]). State is the bar
+   * table itself (localCheckpointed per batch — bounded lineage), sized
+   * by days×types, never by events. Returns the final bars with q150's
    * exact column set.
    */
   def runOhlcToBatch(spark: SparkSession, dir: String,
                      nFiles: Int = 4): DataFrame = {
-    val stage = graft.io.Sources.scratchDir("graft_ohlc")
-    graft.io.Sources.table(spark, dir, "events")
+    val staged = graft.io.Sources.table(spark, dir, "events")
       .select(date_format(col("ts"), "yyyy-MM-dd").as("day"),
         col("event_type"), col("event_id"),
         unix_micros(col("ts")).as("us"), col("value"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(stage)
-
-    @volatile var target: DataFrame = null
-    val q = spark.readStream
-      .schema(stagedSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val delta = bars(batch)
-        target = merge(if (target == null) delta else target.unionByName(delta))
-          .localCheckpoint()
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally { q.stop(); graft.io.Sources.removeScratchDir(stage)
-      StreamingDemand.sweepCloneListenerBuses(spark) }
-    // zero micro-batches: bars over an empty staged batch gives the
-    // correctly-schemed empty bar table instead of a null dereference
-    val out = if (target == null)
-      bars(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stagedSchema))
-    else target
-    out.select(col("day"), col("event_type"), col("o.value").as("open"),
-      col("high"), col("low"), col("c.value").as("close"), col("volume"))
+    Replay.fold(spark, "graft_ohlc", staged, nFiles)(bars)(
+      (target, d) => merge(target.unionByName(d)))
+      .select(col("day"), col("event_type"), col("o.value").as("open"),
+        col("high"), col("low"), col("c.value").as("close"), col("volume"))
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /**
  * Streaming sketch folds: each micro-batch's partial sketch merges into
@@ -15,59 +14,26 @@ import org.apache.spark.sql.types._
  */
 object StreamingSketch {
 
-  private val stagedSchema = StructType(Seq(StructField("user_id", LongType)))
-
-  /** Shared harness: stage the event keys into `nFiles` parquet files,
-    * stream them back one file per micro-batch, and fold each batch's
-    * `delta` sketch into the running one with `merge`. The fold target
-    * is localCheckpointed per batch so lineage stays one batch deep. */
-  private def runFoldToBatch(spark: SparkSession, dir: String,
-                             stageName: String, nFiles: Int)(
-                             delta: DataFrame => DataFrame)(
-                             merge: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val stage = graft.io.Sources.scratchDir(stageName)
-    graft.io.Sources.table(spark, dir, "events")
-      .select(col("user_id"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(stage)
-
-    @volatile var target: DataFrame = null
-    val q = spark.readStream
-      .schema(stagedSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val d = delta(batch)
-        target = (if (target == null) d else merge(target, d))
-          .localCheckpoint()
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally { q.stop(); graft.io.Sources.removeScratchDir(stage)
-      StreamingDemand.sweepCloneListenerBuses(spark) }
-    // zero micro-batches (empty events table / no staged files): fold an
-    // empty staged batch so callers get a correctly-schemed empty sketch
-    // instead of a null dereference
-    if (target == null)
-      delta(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stagedSchema))
-    else target
-  }
+  /** The event keys every user-keyed sketch stages ([[Replay.fold]]
+    * streams them back one file per micro-batch). */
+  private def userIds(spark: SparkSession, dir: String): DataFrame =
+    graft.io.Sources.table(spark, dir, "events").select(col("user_id"))
 
   /** Streaming count-min sketch: per-batch cell counts fold by
     * cell-wise ADDITION — hash-identical to the one-shot
     * [[graft.sketch.Sketches.countMinBuild]] at any batch boundary.
-    * Returns the final (d, pos, c) sketch (≤ depth×width rows). */
+    * An added cell is never null; the coalesce keeps the build's
+    * non-null `c`, so a merged sketch, a single batch's sketch and the
+    * empty fold share one schema. Returns the final (d, pos, c) sketch
+    * (≤ depth×width rows). */
   def runCountMinToBatch(spark: SparkSession, dir: String,
                          depth: Int = 3, width: Int = 1024,
                          nFiles: Int = 4): DataFrame =
-    runFoldToBatch(spark, dir, "graft_cms", nFiles)(
+    Replay.fold(spark, "graft_cms", userIds(spark, dir), nFiles)(
       batch => graft.sketch.Sketches
         .countMinBuild(batch, col("user_id"), depth, width))(
       (target, d) => target.unionByName(d)
-        .groupBy("d", "pos").agg(sum("c").as("c")))
+        .groupBy("d", "pos").agg(coalesce(sum("c"), lit(0L)).as("c")))
 
   /** Streaming KMV distinct sketch: per-batch bottom-`k` distinct-hash
     * sets fold by union → distinct → bottom-k. Min-k over a union
@@ -78,15 +44,12 @@ object StreamingSketch {
     * k-row hash table (h). */
   def runKmvToBatch(spark: SparkSession, dir: String, k: Int = 64,
                     nFiles: Int = 4): DataFrame =
-    runFoldToBatch(spark, dir, "graft_kmv", nFiles)(
+    Replay.fold(spark, "graft_kmv", userIds(spark, dir), nFiles)(
       batch => batch
         .select(graft.ops.Exprs.md5Long(col("user_id")).as("h"))
         .distinct().orderBy(col("h").asc).limit(k))(
       (target, d) => target.unionByName(d).distinct()
         .orderBy(col("h").asc).limit(k))
-
-  private val qStagedSchema = StructType(Seq(
-    StructField("event_id", LongType), StructField("value", DoubleType)))
 
   /** Streaming bottom-k QUANTILE-sample fold: per-batch bottom-k
     * (md5(event_id), value) pairs — the
@@ -100,39 +63,18 @@ object StreamingSketch {
     * sample. */
   def runBottomKToBatch(spark: SparkSession, dir: String, k: Int = 256,
                         nFiles: Int = 4): DataFrame = {
-    val stage = graft.io.Sources.scratchDir("graft_qsk_stream")
-    graft.io.Sources.table(spark, dir, "events")
-      .filter(col("value").isNotNull)
-      .select(col("event_id"), col("value"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(stage)
-
     def bottomK(df: DataFrame): DataFrame =
       df.orderBy(col("h").asc, col("v").asc).limit(k)
-    @volatile var target: DataFrame = null
-    val q = spark.readStream
-      .schema(qStagedSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val d = bottomK(batch
-          .agg(graft.sketch.Sketches.bottomKSketch(
-            graft.ops.Exprs.md5Long(col("event_id")), col("value"), k)
-            .as("sk"))
-          .select(explode(col("sk")).as("e"))
-          .select(col("e.h").as("h"), col("e.v").as("v")))
-        target = (if (target == null) d else bottomK(target.unionByName(d)))
-          .localCheckpoint()
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally { q.stop(); graft.io.Sources.removeScratchDir(stage)
-      StreamingDemand.sweepCloneListenerBuses(spark) }
-    if (target == null)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("h", LongType), StructField("v", DoubleType))))
-    else target
+    val staged = graft.io.Sources.table(spark, dir, "events")
+      .filter(col("value").isNotNull)
+      .select(col("event_id"), col("value"))
+    Replay.fold(spark, "graft_qsk_stream", staged, nFiles)(
+      batch => bottomK(batch
+        .agg(graft.sketch.Sketches.bottomKSketch(
+          graft.ops.Exprs.md5Long(col("event_id")), col("value"), k)
+          .as("sk"))
+        .select(explode(col("sk")).as("e"))
+        .select(col("e.h").as("h"), col("e.v").as("v"))))(
+      (target, d) => bottomK(target.unionByName(d)))
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /**
  * Incremental CDC apply: a change stream folded into a latest-wins
@@ -15,10 +14,6 @@ import org.apache.spark.sql.types._
  */
 object StreamingUpsert {
 
-  private val stagedSchema = StructType(Seq(
-    StructField("user_id", LongType), StructField("sec", LongType),
-    StructField("event_id", LongType), StructField("event_type", StringType)))
-
   /** Per-key latest-wins reduction: keep each user's event with the
     * greatest (sec, event_id). */
   private def latest(df: DataFrame): DataFrame =
@@ -26,11 +21,6 @@ object StreamingUpsert {
       .agg(max(struct(col("sec"), col("event_id"), col("event_type"))).as("m"))
       .select(col("user_id"), col("m.sec").as("sec"),
         col("m.event_id").as("event_id"), col("m.event_type").as("event_type"))
-
-  private val cdcSchema = StructType(Seq(
-    StructField("user_id", LongType), StructField("sec", LongType),
-    StructField("event_id", LongType), StructField("op", StringType),
-    StructField("v", LongType)))
 
   /** Latest-wins WITH the op carried: the retraction-aware CDC state.
     * Still a per-key max(struct) — commutative/associative, so the
@@ -50,85 +40,38 @@ object StreamingUpsert {
    * op is an upsert — a deletion retracts the row unless a later
    * upsert re-creates it. Ops are derived deterministically from the
    * events table (event_id % 7 = 0 → delete; value quantized to
-   * integer milli). Same staged-files / one-file-per-micro-batch
-   * harness as [[runLatestWinsToBatch]]; state is the keyed target
-   * itself, localCheckpointed per batch.
+   * integer milli). Same [[Replay.fold]] harness as
+   * [[runLatestWinsToBatch]]; state is the keyed target itself.
    */
   def runCdcDeletesToBatch(spark: SparkSession, dir: String,
                            nFiles: Int = 4): DataFrame = {
-    val stage = graft.io.Sources.scratchDir("graft_cdc_del")
-    graft.io.Sources.table(spark, dir, "events")
+    val staged = graft.io.Sources.table(spark, dir, "events")
       .filter(col("value").isNotNull)
       .select(col("user_id"), unix_timestamp(col("ts")).as("sec"),
         col("event_id"),
         when(col("event_id") % 7 === 0, "D").otherwise("U").as("op"),
         round(col("value") * 1000, 0).cast("long").as("v"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(stage)
-
-    @volatile var target: DataFrame = null
-    val q = spark.readStream
-      .schema(cdcSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val delta = latestOp(batch)
-        target = latestOp(if (target == null) delta
-                          else target.unionByName(delta))
-          .localCheckpoint()
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally { q.stop(); graft.io.Sources.removeScratchDir(stage)
-      StreamingDemand.sweepCloneListenerBuses(spark) }
-    val folded = if (target == null)
-      latestOp(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cdcSchema))
-    else target
-    folded.filter(col("op") === "U") // deletions retract their key
+    Replay.fold(spark, "graft_cdc_del", staged, nFiles)(latestOp)(
+      (target, d) => latestOp(target.unionByName(d)))
+      .filter(col("op") === "U") // deletions retract their key
       .select("user_id", "sec", "event_id", "v")
   }
 
   /**
    * Stage the events table into `nFiles` parquet files, stream them
    * back ONE FILE PER MICRO-BATCH, and fold each batch into the
-   * accumulated target with the latest-wins merge. The target is
-   * localCheckpointed per batch — bounded lineage however many batches
-   * arrive (the state is the keyed target itself, not stream state).
-   * Returns the final target (one row per user: their latest event).
+   * accumulated target with the latest-wins merge ([[Replay.fold]]:
+   * the target is localCheckpointed per batch — bounded lineage however
+   * many batches arrive; the state is the keyed target itself, not
+   * stream state). Returns the final target (one row per user: their
+   * latest event).
    */
   def runLatestWinsToBatch(spark: SparkSession, dir: String,
                            nFiles: Int = 4): DataFrame = {
-    val stage = graft.io.Sources.scratchDir("graft_cdc")
-    graft.io.Sources.table(spark, dir, "events")
+    val staged = graft.io.Sources.table(spark, dir, "events")
       .select(col("user_id"), unix_timestamp(col("ts")).as("sec"),
         col("event_id"), col("event_type"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(stage)
-
-    @volatile var target: DataFrame = null
-    val q = spark.readStream
-      .schema(stagedSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val delta = latest(batch)
-        target = latest(if (target == null) delta else target.unionByName(delta))
-          .localCheckpoint()
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally { q.stop(); graft.io.Sources.removeScratchDir(stage)
-      StreamingDemand.sweepCloneListenerBuses(spark) }
-    // zero micro-batches: latest() over an empty staged batch gives the
-    // correctly-schemed empty table instead of a null dereference
-    if (target == null)
-      latest(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stagedSchema))
-    else target
+    Replay.fold(spark, "graft_cdc", staged, nFiles)(latest)(
+      (target, d) => latest(target.unionByName(d)))
   }
 }

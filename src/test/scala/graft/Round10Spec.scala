@@ -51,6 +51,25 @@ class Round10Spec extends AnyFunSuite with SparkSpec {
       s"listener buses grew $after1 -> $after3 across 2 more parent-session runs")
   }
 
+  test("only streaming/Replay.scala starts, drives or stages a stream under src/main") {
+    // the finite-replay policy (sink naming, drain, stop, stage cleanup,
+    // listener-bus sweep) lives in one driver; a runner that calls these
+    // itself has forked it again
+    val tokens = Seq(".writeStream", "processAllAvailable", "maxFilesPerTrigger")
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val sources = java.nio.file.Files.walk(root)
+    val offenders = try {
+      import scala.jdk.CollectionConverters._
+      sources.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { p =>
+        val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        tokens.filter(text.contains).map(t => s"${root.relativize(p)}: $t")
+      }.toList
+    } finally sources.close()
+    assert(offenders.nonEmpty, s"no stream driver found under $root")
+    assert(offenders.forall(_.startsWith("graft/streaming/Replay.scala:")),
+      s"stream plumbing outside the Replay driver:\n${offenders.mkString("\n")}")
+  }
+
   test("cached child sessions still isolate shuffle-partition conf from the parent") {
     val before = spark.conf.get("spark.sql.shuffle.partitions")
     graft.streaming.StreamingDemand.runToBatch(spark, sf001).collect()

@@ -9,6 +9,17 @@ import java.nio.file.{Files, Paths}
 object OracleDump {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("target/oracle_sql.json")
+    val json = oracleJson(SparkEntry.oracleSql)
+    Option(Paths.get(out).getParent).foreach(Files.createDirectories(_))
+    Files.writeString(Paths.get(out), json)
+    println(s"wrote ${SparkEntry.oracleSql.size} oracle SQLs to $out")
+  }
+
+  /** `sql` as one JSON object. Strings escape backslash, quote and ALL
+    * control chars (<0x20): a tab or CR in builder-authored SQL would
+    * otherwise make the driver's json.load fail and silently zero the
+    * round's correctness. */
+  private[graft] def oracleJson(sql: Map[String, String]): String = {
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -18,10 +29,6 @@ object OracleDump {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Option(Paths.get(out).getParent).foreach(Files.createDirectories(_))
-    Files.writeString(Paths.get(out), json)
-    println(s"wrote ${SparkEntry.oracleSql.size} oracle SQLs to $out")
+    sql.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
   }
 }

@@ -192,6 +192,52 @@ object Sources {
   def lastColumnContaining(df: DataFrame, sub: String): Option[String] =
     df.columns.reverseIterator.find(_.toLowerCase.contains(sub.toLowerCase))
 
+  /** The shutdown hook of every live [[scratchDir]], by path, so
+    * [[removeScratchDir]] can deregister it: a hook left behind is a
+    * never-started `Thread` held until JVM exit, and the JDK starts
+    * every remaining hook at once on exit. */
+  private val scratchHooks =
+    new java.util.concurrent.ConcurrentHashMap[String, Thread]()
+
+  /** Temp scratch directory deleted on JVM exit (shutdown hook,
+    * recursive): the round-trip/layout queries stage full table copies —
+    * without cleanup every bench/verify run would leak one copy per
+    * query under /tmp. A directory the caller is done with before exit
+    * goes through [[withScratch]] or [[removeScratchDir]]. */
+  def scratchDir(prefix: String): String = {
+    val p = java.nio.file.Files.createTempDirectory(prefix).toString
+    // the hook deletes directly: removeShutdownHook throws once
+    // shutdown has begun
+    val hook = new Thread(() => FileTree.rmTree(new java.io.File(p)))
+    Runtime.getRuntime.addShutdownHook(hook)
+    scratchHooks.put(p, hook)
+    p
+  }
+
+  /** Eager recursive delete of a [[scratchDir]], deregistering its
+    * shutdown hook — for callers whose result is fully materialized
+    * before return (the streaming run*ToBatch family drains to a
+    * LocalRelation / localCheckpoint), so their staged files are dead
+    * the moment the stream stops. Without this a 300+-query bench
+    * marathon accumulates one staged table copy per streaming run until
+    * JVM exit (round-8 finding: repeated in-session q297 runs grew
+    * 3.1→6.1 s under marathon pressure). Idempotent. */
+  def removeScratchDir(path: String): Unit = {
+    Option(scratchHooks.remove(path)).foreach { hook =>
+      try Runtime.getRuntime.removeShutdownHook(hook)
+      catch { case _: IllegalStateException => () } // exiting: the hook runs
+    }
+    FileTree.rmTree(new java.io.File(path))
+  }
+
+  /** Run `body` over a fresh [[scratchDir]] and remove the directory
+    * when it returns or throws. `body`'s result must not reference the
+    * directory's files (a lifecycle query seals its report first). */
+  def withScratch[A](prefix: String)(body: String => A): A = {
+    val root = scratchDir(prefix)
+    try body(root) finally removeScratchDir(root)
+  }
+
   /**
    * Header-offset scan (SURVEY.md S3 — the reference's
    * `pd.read_excel(..., header=N)` pattern: N junk rows precede the real
@@ -202,27 +248,6 @@ object Sources {
    * drop is exact at any parallelism; everything downstream is a normal
    * CSV scan Catalyst can prune.
    */
-  /** Temp scratch directory deleted on JVM exit (shutdown hook,
-    * recursive): the round-trip/layout queries stage full table copies —
-    * without cleanup every bench/verify run would leak one copy per
-    * query under /tmp. */
-  def scratchDir(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => removeScratchDir(p.toString)))
-    p.toString
-  }
-
-  /** Eager recursive delete of a [[scratchDir]] — for callers whose
-    * result is fully materialized before return (the streaming
-    * run*ToBatch family drains to a LocalRelation / localCheckpoint),
-    * so their staged files are dead the moment the stream stops.
-    * Without this a 300+-query bench marathon accumulates one staged
-    * table copy per streaming run until JVM exit (round-8 finding:
-    * repeated in-session q297 runs grew 3.1→6.1 s under marathon
-    * pressure). Idempotent with the shutdown hook. */
-  def removeScratchDir(path: String): Unit =
-    FileTree.rmTree(new java.io.File(path))
-
   def csvHeaderOffset(spark: SparkSession, path: String, skipLines: Int,
                       sep: String = ","): DataFrame = {
     import spark.implicits._

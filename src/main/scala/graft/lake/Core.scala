@@ -57,6 +57,25 @@ trait Core {
     * task files. */
   private[graft] val orphanGraceMs: Long = 10 * 60 * 1000L
 
+  /** The versions age-based retention ([[vacuumAged]]) reclaims out of
+    * the listed `versions`: those below the current `cur`, outside
+    * `keep`, and at least `maxAgeMs` past their commit stamp
+    * (`stampMs`), except any member of a RETAINED version's
+    * merge-on-read chain (current, kept, or simply young) — age cutoffs
+    * can leave holes, and a hole under a retained overlay would break
+    * its chain, so chains are protected as units. Ascending. */
+  protected def agedVictims(root: String, versions: Seq[Int], cur: Int,
+                            maxAgeMs: Long, keep: Set[Int])(
+                            stampMs: Int => Long): Seq[Int] = {
+    val now = System.currentTimeMillis()
+    val sorted = versions.sorted
+    val aged = sorted.filter(v =>
+      v < cur && !keep(v) && now - stampMs(v) >= maxAgeMs).toSet
+    val protectChains = sorted.filterNot(aged)
+      .flatMap(v => Mor.fullBase(versionDir(root, _), v) to v).toSet
+    sorted.filter(v => aged(v) && !protectChains(v))
+  }
+
   override def toString: String = getClass.getSimpleName.stripSuffix("$")
 
   /** Overlay-chain depth of version `v` (default: current) — how many

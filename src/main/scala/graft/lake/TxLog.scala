@@ -241,17 +241,10 @@ object TxLog extends Core {
     val cur = current(root)
     if (cur < 0) return 0
     checkpoint(root)
-    val now = System.currentTimeMillis()
-    val versions = listedRecords(root).sorted
-    def ageMs(v: Int): Long = now - recordTs(root, v).getOrElse(
-      recordFile(root, v).lastModified()) // pre-stamp records only
-    val aged = versions.filter(v =>
-      v < cur && !keep(v) && ageMs(v) >= maxAgeMs).toSet
-    // protect the FULL chain of every survivor (current, kept, or
-    // simply young): a retained overlay must keep its base readable
-    val protectChains = versions.filterNot(aged)
-      .flatMap(v => Mor.fullBase(versionDir(root, _), v) to v).toSet
-    versions.filter(v => aged(v) && !protectChains(v)).count(reclaim(root, _))
+    agedVictims(root, listedRecords(root), cur, maxAgeMs, keep)(v =>
+      recordTs(root, v).getOrElse(
+        recordFile(root, v).lastModified())) // pre-stamp records only
+      .count(reclaim(root, _))
   }
 
   /** The physical data directory of version `v`, resolved THROUGH the

@@ -467,19 +467,12 @@ object Versions extends Core {
                  keep: Set[Int] = Set.empty): Int = {
     val cur = current(root)
     if (cur < 0) return 0
-    val now = System.currentTimeMillis()
     val versions = Option(new java.io.File(root).listFiles()).toSeq.flatten
       .filter(f => f.isDirectory && f.getName.matches("v\\d+"))
-      .map(_.getName.stripPrefix("v").toInt).sorted
-    def ageMs(v: Int): Long = now - stampOf(root, v).getOrElse(
-      newestMtime(new java.io.File(root, s"v$v"))) // pre-stamp versions
-    val aged = versions.filter(v =>
-      v < cur && !keep(v) && ageMs(v) >= maxAgeMs).toSet
-    // protect the FULL chain of every survivor (current, kept, or
-    // simply young): a retained overlay must keep its base readable
-    val protectChains = versions.filterNot(aged)
-      .flatMap(v => fullBase(root, v) to v).toSet
-    val victims = versions.filter(v => aged(v) && !protectChains(v))
+      .map(_.getName.stripPrefix("v").toInt)
+    val victims = agedVictims(root, versions, cur, maxAgeMs, keep)(v =>
+      stampOf(root, v).getOrElse(
+        newestMtime(new java.io.File(root, s"v$v")))) // pre-stamp versions
     victims.foreach { v =>
       val d = new java.io.File(root, s"v$v")
       new java.io.File(d, "_SUCCESS").delete() // invalidate before delete

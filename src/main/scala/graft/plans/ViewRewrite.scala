@@ -499,6 +499,14 @@ object ViewRewrite {
       }
     }.flatten
 
+  /** Whether the view under `viewRoot` answers `df`: its optimized
+    * plan scans that root and no path containing `base`. */
+  private[graft] def answeredBy(viewRoot: String, base: String)(
+      df: org.apache.spark.sql.DataFrame): Boolean = {
+    val p = scannedPaths(df)
+    p.exists(_.contains(viewRoot)) && !p.exists(_.contains(base))
+  }
+
   /** INCREMENTAL REFRESH with freshness tied to the commit — the one
     * entry point a maintenance loop calls per delta batch (the q325
     * O(|delta|) recipe generalized over the registration's declared

@@ -422,12 +422,10 @@ object CurationQueries {
         (avg(when(col("label") === 1.0, col("sc"))) -
           avg(when(col("label") === 0.0, col("sc"))) >= 0.2).as("sep"))
       .collect()(0)
-    import s.implicits._
-    Seq(("auc_floor", aucOk), ("deterministic", deterministic),
+    Q.gateReport(s, ("auc_floor", aucOk), ("deterministic", deterministic),
       ("formula_exact", formulaExact),
       ("scores_in_range", gates.getBoolean(0)),
       ("separation", gates.getBoolean(1)))
-      .toDF("chk", "ok").orderBy("chk")
   }
 
   /** STREAMING near-dup ingest against the persisted MinHash index

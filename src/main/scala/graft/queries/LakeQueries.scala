@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.io.Sources.table
+import graft.io.Sources.{table, withScratch}
 import graft.curation.Curation
 import graft.ops.{Layout, Relational}
 import graft.text.TextAnalysis
@@ -662,8 +662,7 @@ object LakeQueries {
       // is driver-local stats; sel re-reads the ORIGINAL table), so the
       // scratch dir is removed eagerly — per-run accumulation on the
       // shared bench JVM, not just the shutdown hook (r9 ADVICE)
-      val dir = graft.io.Sources.scratchDir("graft_footer_zm")
-      val stats: Seq[(Long, Long, Long, Long)] = try {
+      val stats: Seq[(Long, Long, Long, Long)] = withScratch("graft_footer_zm") { dir =>
         f.repartition(col("rfile"))
           .write.mode("overwrite").partitionBy("rfile").parquet(dir)
         // footer walk: one open per file, blocks -> (rows, dday min/max)
@@ -691,7 +690,7 @@ object LakeQueries {
               } finally rd.close()
             }
           }
-      } finally graft.io.Sources.removeScratchDir(dir)
+      }
       import s.implicits._
       val zm = stats.toDF("rfile", "mn", "mx", "nrows")
         .groupBy("rfile").agg(min("mn").as("mn"), max("mx").as("mx"),
@@ -822,8 +821,7 @@ object LakeQueries {
        SELECT * FROM (SELECT * FROM segs UNION ALL SELECT * FROM acts
                       UNION ALL SELECT * FROM vers)
        ORDER BY tag""") { (s, d) =>
-    val dir = graft.io.Sources.scratchDir("graft_merge_vers")
-    try {
+    withScratch("graft_merge_vers") { dir =>
       graft.lake.Versions.commit(mergeTarget(s, d), dir)
       // the merge reads the PERSISTED v0, as a real MERGE INTO would
       val t = graft.lake.Versions.read(s, dir, 0)
@@ -850,7 +848,7 @@ object LakeQueries {
       // not reference the removed files)
       segs.unionByName(acts).unionByName(vers).orderBy("tag")
         .localCheckpoint()
-    } finally graft.io.Sources.removeScratchDir(dir)
+    }
   }
 
   /** INCREMENTAL materialized-view maintenance ([[graft.lake.Versions]]
@@ -873,8 +871,7 @@ object LakeQueries {
               CAST(sum(cents) AS BIGINT) AS cents_sum,
               CAST(max(cents) AS BIGINT) AS cents_max
        FROM o GROUP BY 1 ORDER BY 1""") { (s, d) =>
-    val root = graft.io.Sources.scratchDir("graft_incr_view")
-    try {
+    withScratch("graft_incr_view") { root =>
       val o = table(s, d, "orders").select(
         col("o_orderkey"),
         (year(col("o_orderdate")) * 100 + month(col("o_orderdate")))
@@ -902,7 +899,7 @@ object LakeQueries {
             .as("cents_max"))
       graft.lake.Versions.commit(merged, root)
       Q.sealResult(graft.lake.Versions.read(s, root).orderBy("month"))
-    } finally graft.io.Sources.removeScratchDir(root)
+    }
   }
 
   /** TIME TRAVEL + VACUUM on a [[graft.lake.Versions]] table: two
@@ -929,8 +926,7 @@ object LakeQueries {
                       UNION ALL SELECT 'v1:' || seg, n, cents_sum FROM v1
                       UNION ALL SELECT * FROM chk)
        ORDER BY tag""") { (s, d) =>
-    val root = graft.io.Sources.scratchDir("graft_timetravel")
-    try {
+    withScratch("graft_timetravel") { root =>
       import graft.lake.Versions
       val cust = table(s, d, "customer").select(
         col("c_custkey").as("k"), col("c_mktsegment").as("seg"),
@@ -947,17 +943,14 @@ object LakeQueries {
       val v0Gone =
         try { Versions.read(s, root, 0); false }
         catch { case _: IllegalArgumentException => true }
-      import s.implicits._
-      val chks = Seq(
+      val gates = Seq(
         ("chk:current_stable", Versions.current(root) == 1),
         ("chk:v0_unreadable", v0Gone),
         ("chk:v1_stable", Versions.read(s, root, 1).count() == v1Before),
         ("chk:vacuumed_one", reclaimed == 1)
-      ).toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("cents_sum"))
-      rows.unionByName(chks).orderBy("tag").localCheckpoint()
-    } finally graft.io.Sources.removeScratchDir(root)
+      )
+      Q.sealReport(rows, gates, rows)
+    }
   }
 
   /** STREAMING micro-batch commits into a [[graft.lake.Versions]]
@@ -986,8 +979,7 @@ object LakeQueries {
        SELECT * FROM (SELECT 'et:' || event_type AS tag, n, id_sum FROM v
                       UNION ALL SELECT * FROM chk)
        ORDER BY tag""") { (s, d) =>
-    val root = graft.io.Sources.scratchDir("graft_stream_view")
-    try {
+    withScratch("graft_stream_view") { root =>
       import graft.lake.Versions
       val nBatches = graft.streaming.StreamingLake
         .runViewCommits(s, d, root, nFiles = 4)
@@ -1003,15 +995,13 @@ object LakeQueries {
       import s.implicits._
       graft.streaming.StreamingLake.applyBatch(root,
         Seq(("view", 999999L)).toDF("event_type", "event_id"), batchId = 0L)
-      val chks = Seq(
+      val gates = Seq(
         ("chk:monotone_versions", monotone),
         ("chk:one_commit_per_batch", cur.toLong == nBatches - 1),
         ("chk:redelivery_idempotent", Versions.current(root) == cur)
-      ).toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("id_sum"))
-      ets.unionByName(chks).orderBy("tag").localCheckpoint()
-    } finally graft.io.Sources.removeScratchDir(root)
+      )
+      Q.sealReport(ets, gates)
+    }
   }
 
   /** VERSION DIFF — the change-data-feed derivation (Delta's
@@ -1053,8 +1043,7 @@ object LakeQueries {
        SELECT action, CAST(count(*) AS BIGINT) AS n,
               CAST(bit_xor(${graft.ops.Exprs.md5LongSql.format("k")}) AS BIGINT) AS key_xor
        FROM d GROUP BY action ORDER BY action""") { (s, d) =>
-    val root = graft.io.Sources.scratchDir("graft_version_diff")
-    try {
+    withScratch("graft_version_diff") { root =>
       import graft.lake.Versions
       val t = mergeTarget(s, d)
       Versions.commit(t.select(col("k"), col("seg"), col("tc").as("cents")),
@@ -1078,7 +1067,7 @@ object LakeQueries {
         .agg(count(lit(1)).as("n"), expr("bit_xor(h)").as("key_xor"))
         .orderBy("action")
       Q.sealResult(diff)
-    } finally graft.io.Sources.removeScratchDir(root)
+    }
   }
 
   /** N-VERSION CHANGE-DATA-FEED REPLAY (Delta CDF's
@@ -1153,8 +1142,7 @@ object LakeQueries {
        SELECT * FROM (SELECT * FROM acts UNION ALL SELECT * FROM noops
                       UNION ALL SELECT * FROM chk)
        ORDER BY tag""") { (s, d) =>
-    val root = graft.io.Sources.scratchDir("graft_cdf_replay")
-    try {
+    withScratch("graft_cdf_replay") { root =>
       import graft.lake.Versions
       val c = table(s, d, "customer").select(col("c_custkey").as("k"),
         round(col("c_acctbal") * 100, 0).cast("long").as("c"))
@@ -1241,18 +1229,14 @@ object LakeQueries {
         .map(r => r.getInt(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
       val transOk = nc(0) > 0 && nc(1) == 0 && nc(2) == 0
       val revsOk = nc(3) > 0 && nc(4) == 0 && nc(5) == 0
-      import s.implicits._
-      val chks = Seq(
+      val gates = Seq(
         ("chk:composed_equals_direct", composedEq),
         ("chk:four_versions", Versions.current(root) == 3),
         ("chk:reverts_net_noop", revsOk),
         ("chk:transients_net_noop", transOk)
-      ).toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("cents_delta"), lit(0L).as("key_xor"))
-      Q.sealResult(acts.unionByName(chks).orderBy("tag"),
-        cdf, net, trans, revs) // result outlives the removed files
-    } finally graft.io.Sources.removeScratchDir(root)
+      )
+      Q.sealReport(acts, gates, cdf, net, trans, revs)
+    }
   }
 
   /** SCHEMA EVOLUTION ACROSS TABLE VERSIONS
@@ -1292,8 +1276,7 @@ object LakeQueries {
                       FROM u GROUP BY 1
                       UNION ALL SELECT * FROM chk)
        ORDER BY tag""") { (s, d) =>
-    val root = graft.io.Sources.scratchDir("graft_schema_evo")
-    try {
+    withScratch("graft_schema_evo") { root =>
       import graft.lake.Versions
       val cust = table(s, d, "customer").select(
         col("c_custkey").as("k"),
@@ -1309,17 +1292,14 @@ object LakeQueries {
         .groupBy(concat(col("ver"), lit(":"),
           coalesce(col("seg"), lit("(pre-evolution)"))).as("tag"))
         .agg(count(lit(1)).as("n"), sum("cents").as("cents_sum"))
-      import s.implicits._
-      val chks = Seq(
+      val gates = Seq(
         ("chk:evolved_schema_is_current",
           v0e.schema == v1.schema),
         ("chk:plain_read_unevolved",
           Versions.read(s, root, 0).columns.toSeq == Seq("k", "cents"))
-      ).toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("cents_sum"))
-      Q.sealResult(rows.unionByName(chks).orderBy("tag"))
-    } finally graft.io.Sources.removeScratchDir(root)
+      )
+      Q.sealReport(rows, gates)
+    }
   }
 
   /** ZERO-COPY BRANCH / SHALLOW CLONE of a versioned table
@@ -1360,52 +1340,46 @@ object LakeQueries {
                             ('chk:zero_copy')) t(chk))
        SELECT * FROM (SELECT * FROM sigs UNION ALL SELECT * FROM chk)
        ORDER BY tag""") { (s, d) =>
-    val src = graft.io.Sources.scratchDir("graft_branch_src")
-    val dst = graft.io.Sources.scratchDir("graft_branch_dst")
-    try {
-      import graft.lake.Versions
-      val cust = table(s, d, "customer").select(col("c_custkey").as("k"),
-        round(col("c_acctbal") * 100, 0).cast("long").as("cents"))
-      Versions.commit(cust.filter(col("k") % 3 =!= 0), src, txn = 7L) // v0
-      Versions.branch(src, dst, version = 0)
-      // source keeps evolving AFTER the branch was cut
-      Versions.commit(cust.select(col("k"),
-        (col("cents") + when(col("k") % 2 === 0, 10L).otherwise(0L))
-          .as("cents")), src)                                        // src v1
-      // divergent branch commit, derived from the branch's own v0
-      // READ BACK through the base pointer
-      val bv0 = Versions.read(s, dst, 0)
-      Versions.commit(bv0.filter(col("k") % 7 =!= 0)
-        .select(col("k"), (col("cents") + 100L).as("cents")), dst)   // br v1
-      def sig(root: String, v: Int, tag: String) =
-        Versions.read(s, root, v)
-          .agg(count(lit(1)).as("n"), sum("cents").as("cents_sum"))
-          .select(lit(tag).as("tag"), col("n"), col("cents_sum"))
-      val rows = sig(src, 0, "src:v0").unionByName(sig(src, 1, "src:v1"))
-        .unionByName(sig(dst, 0, "branch:v0"))
-        .unionByName(sig(dst, 1, "branch:v1"))
-      val sv0 = Versions.read(s, src, 0)
-      val sameV0 = Checks.multisetEqual(bv0, sv0)
-      val diverged = Versions.read(s, dst, 1)
-        .exceptAll(Versions.read(s, src, 1)).count() > 0
-      import s.implicits._
-      val chks = Seq(
-        ("chk:branch_v0_equals_src_v0", sameV0),
-        ("chk:diverged", diverged),
-        // the branch commit must not have moved the source's pointer or
-        // txn mark, and the branch starts its own txn ledger at -1
-        ("chk:src_undisturbed",
-          Versions.current(src) == 1 && Versions.lastTxn(src) == 7L &&
-            Versions.lastTxn(dst) == -1L),
-        ("chk:zero_copy", !new java.io.File(dst, "v0").exists() &&
-          new java.io.File(dst, "v1").isDirectory)
-      ).toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("cents_sum"))
-      Q.sealResult(rows.unionByName(chks).orderBy("tag"))
-    } finally {
-      graft.io.Sources.removeScratchDir(dst)
-      graft.io.Sources.removeScratchDir(src)
+    withScratch("graft_branch_src") { src =>
+      withScratch("graft_branch_dst") { dst =>
+        import graft.lake.Versions
+        val cust = table(s, d, "customer").select(col("c_custkey").as("k"),
+          round(col("c_acctbal") * 100, 0).cast("long").as("cents"))
+        Versions.commit(cust.filter(col("k") % 3 =!= 0), src, txn = 7L) // v0
+        Versions.branch(src, dst, version = 0)
+        // source keeps evolving AFTER the branch was cut
+        Versions.commit(cust.select(col("k"),
+          (col("cents") + when(col("k") % 2 === 0, 10L).otherwise(0L))
+            .as("cents")), src)                                        // src v1
+        // divergent branch commit, derived from the branch's own v0
+        // READ BACK through the base pointer
+        val bv0 = Versions.read(s, dst, 0)
+        Versions.commit(bv0.filter(col("k") % 7 =!= 0)
+          .select(col("k"), (col("cents") + 100L).as("cents")), dst)   // br v1
+        def sig(root: String, v: Int, tag: String) =
+          Versions.read(s, root, v)
+            .agg(count(lit(1)).as("n"), sum("cents").as("cents_sum"))
+            .select(lit(tag).as("tag"), col("n"), col("cents_sum"))
+        val rows = sig(src, 0, "src:v0").unionByName(sig(src, 1, "src:v1"))
+          .unionByName(sig(dst, 0, "branch:v0"))
+          .unionByName(sig(dst, 1, "branch:v1"))
+        val sv0 = Versions.read(s, src, 0)
+        val sameV0 = Checks.multisetEqual(bv0, sv0)
+        val diverged = Versions.read(s, dst, 1)
+          .exceptAll(Versions.read(s, src, 1)).count() > 0
+        val gates = Seq(
+          ("chk:branch_v0_equals_src_v0", sameV0),
+          ("chk:diverged", diverged),
+          // the branch commit must not have moved the source's pointer or
+          // txn mark, and the branch starts its own txn ledger at -1
+          ("chk:src_undisturbed",
+            Versions.current(src) == 1 && Versions.lastTxn(src) == 7L &&
+              Versions.lastTxn(dst) == -1L),
+          ("chk:zero_copy", !new java.io.File(dst, "v0").exists() &&
+            new java.io.File(dst, "v1").isDirectory)
+        )
+        Q.sealReport(rows, gates)
+      }
     }
   }
 
@@ -1454,8 +1428,7 @@ object LakeQueries {
                       SELECT * FROM curtotal UNION ALL
                       SELECT * FROM chk)
        ORDER BY tag""") { (s, d) =>
-    val root = graft.io.Sources.scratchDir("graft_snapshot_iso")
-    try {
+    withScratch("graft_snapshot_iso") { root =>
       import graft.lake.Versions
       val cust = table(s, d, "customer").select(col("c_custkey").as("k"),
         round(col("c_acctbal") * 100, 0).cast("long").as("cents"))
@@ -1487,18 +1460,14 @@ object LakeQueries {
         .select(lit("cur:total").as("tag"), col("n"), col("cents_sum"))
       val late = Versions.read(s, root, snap)
       val repeatable = Checks.multisetEqual(late, early)
-      import s.implicits._
-      val chks = Seq(
+      val gates = Seq(
         ("chk:pin_stable", snap == 0 && Versions.snapshot(root) == 2),
         ("chk:repeatable_read", repeatable),
         ("chk:writers_not_blocked", Versions.current(root) == 2)
-      ).toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("cents_sum"))
-      Q.sealResult(total.unionByName(buckets).unionByName(top)
-        .unionByName(cur).unionByName(chks).orderBy("tag"),
-        early) // result outlives the removed files
-    } finally graft.io.Sources.removeScratchDir(root)
+      )
+      Q.sealReport(total.unionByName(buckets).unionByName(top)
+        .unionByName(cur), gates, early)
+    }
   }
 
   /** OPTIMISTIC CONCURRENCY — multi-writer commits with conflict
@@ -1540,8 +1509,7 @@ object LakeQueries {
                             ('chk:txn_highwater')) t(chk))
        SELECT * FROM (SELECT * FROM sigs UNION ALL SELECT * FROM chk)
        ORDER BY tag""") { (s, d) =>
-    val root = graft.io.Sources.scratchDir("graft_txlog")
-    try {
+    withScratch("graft_txlog") { root =>
       import graft.lake.{CommitConflict, TxLog}
       val cust = table(s, d, "customer").select(col("c_custkey").as("k"),
         round(col("c_acctbal") * 100, 0).cast("long").as("cents"))
@@ -1566,18 +1534,15 @@ object LakeQueries {
         .unionByName(sig(2, "v2"))
       val dataDirs = Option(new java.io.File(root).listFiles()).toSeq
         .flatten.count(f => f.isDirectory && f.getName.startsWith("d"))
-      import s.implicits._
-      val chks = Seq(
+      val gates = Seq(
         ("chk:conflict_detected", conflicted),
         // the loser cleaned up after itself: one data dir per record
         ("chk:no_orphans", dataDirs == 3),
         ("chk:total_order", TxLog.current(root) == 2),
         ("chk:txn_highwater", TxLog.lastTxn(root) == 3L)
-      ).toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("cents_sum"))
-      Q.sealResult(rows.unionByName(chks).orderBy("tag"))
-    } finally graft.io.Sources.removeScratchDir(root)
+      )
+      Q.sealReport(rows, gates)
+    }
   }
 
   /** DELETION VECTORS — merge-on-read deletes for a versioned table
@@ -1620,8 +1585,7 @@ object LakeQueries {
                             ('chk:vacuum_after_compact')) t(chk))
        SELECT * FROM (SELECT * FROM sigs UNION ALL SELECT * FROM chk)
        ORDER BY tag""") { (s, d) =>
-    val root = graft.io.Sources.scratchDir("graft_dv")
-    try {
+    withScratch("graft_dv") { root =>
       import graft.lake.Versions
       val cust = table(s, d, "customer").select(col("c_custkey").as("k"),
         round(col("c_acctbal") * 100, 0).cast("long").as("cents"))
@@ -1655,19 +1619,15 @@ object LakeQueries {
         Checks.multisetEqual(Versions.read(s, root, 3), v2Resolved)
       val postReclaim = Versions.vacuum(root, keepFrom = 3)
       val survived = Versions.read(s, root).count() == v2Resolved.count()
-      import s.implicits._
-      val chks = Seq(
+      val gates = Seq(
         ("chk:base_untouched", baseUntouched),
         ("chk:compacted_equiv", compactEquiv),
         ("chk:dv_is_o_keys", dvOk),
         ("chk:vacuum_floor_guard", preReclaim == 0 && chainStillReads),
         ("chk:vacuum_after_compact", postReclaim == 3 && survived)
-      ).toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("cents_sum"))
-      Q.sealResult(rows.unionByName(chks).orderBy("tag"),
-        rows, v2Resolved) // result outlives the removed files
-    } finally graft.io.Sources.removeScratchDir(root)
+      )
+      Q.sealReport(rows, gates, rows, v2Resolved)
+    }
   }
 
   /** MERGE-ON-READ UPSERT ([[graft.lake.Versions.commitUpsert]] — the
@@ -1710,56 +1670,49 @@ object LakeQueries {
                             ('chk:delta_is_o_rows')) t(chk))
        SELECT * FROM (SELECT * FROM sigs UNION ALL SELECT * FROM chk)
        ORDER BY tag""") { (s, d) =>
-    val root = graft.io.Sources.scratchDir("graft_mor")
-    val br = graft.io.Sources.scratchDir("graft_mor_branch")
-    try {
-      import graft.lake.Versions
-      val cust = table(s, d, "customer").select(col("c_custkey").as("k"),
-        round(col("c_acctbal") * 100, 0).cast("long").as("cents"))
-      Versions.commit(cust, root)                                   // v0
-      def filesOf(v: Int) = Option(
-        new java.io.File(root, s"v$v").listFiles()).toSeq.flatten
-        .map(f => (f.getName, f.length)).toSet
-      val baseBefore = filesOf(0)
-      val delta = cust.filter(col("k") % 6 === 0)
-        .select(col("k"), (col("cents") + 55L).as("cents"))
-        .unionByName(cust.filter(col("k") % 10 === 3)
-          .select((col("k") + 10000000L).as("k"),
-            (col("k") * 3L + 1L).as("cents")))
-      Versions.commitUpsert(delta, root, "k")                       // v1 (MOR)
-      Versions.commitDelete(
-        Versions.read(s, root).filter(col("k") % 4 === 0)
-          .select("k"), root, "k")                                  // v2 (DV)
-      val baseUntouched = filesOf(0) == baseBefore
-      def sig(v: Int, tag: String) = Versions.read(s, root, v)
-        .agg(count(lit(1)).as("n"), sum("cents").as("cents_sum"))
-        .select(lit(tag).as("tag"), col("n"), col("cents_sum"))
-      val rows = sig(0, "v0").unionByName(sig(1, "v1"))
-        .unionByName(sig(2, "v2")).localCheckpoint()
-      val deltaCnt = Checks.counts(
-        Seq(s.read.parquet(s"$root/v1"), delta)) // one job
-      val deltaOk = deltaCnt(0) == deltaCnt(1)
-      val branchRefused =
-        try { Versions.branch(root, br); false }
-        catch { case _: IllegalArgumentException => true }
-      val v2Resolved = Versions.read(s, root, 2).localCheckpoint()
-      Versions.compactDeletes(s, root)                              // v3 full
-      val v3 = Versions.read(s, root, 3)
-      val compactEquiv = Checks.multisetEqual(v3, v2Resolved)
-      import s.implicits._
-      val chks = Seq(
-        ("chk:base_untouched", baseUntouched),
-        ("chk:branch_refused", branchRefused),
-        ("chk:compacted_equiv", compactEquiv),
-        ("chk:delta_is_o_rows", deltaOk)
-      ).toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("cents_sum"))
-      Q.sealResult(rows.unionByName(chks).orderBy("tag"),
-        rows, v2Resolved) // result outlives the removed files
-    } finally {
-      graft.io.Sources.removeScratchDir(br)
-      graft.io.Sources.removeScratchDir(root)
+    withScratch("graft_mor") { root =>
+      withScratch("graft_mor_branch") { br =>
+        import graft.lake.Versions
+        val cust = table(s, d, "customer").select(col("c_custkey").as("k"),
+          round(col("c_acctbal") * 100, 0).cast("long").as("cents"))
+        Versions.commit(cust, root)                                   // v0
+        def filesOf(v: Int) = Option(
+          new java.io.File(root, s"v$v").listFiles()).toSeq.flatten
+          .map(f => (f.getName, f.length)).toSet
+        val baseBefore = filesOf(0)
+        val delta = cust.filter(col("k") % 6 === 0)
+          .select(col("k"), (col("cents") + 55L).as("cents"))
+          .unionByName(cust.filter(col("k") % 10 === 3)
+            .select((col("k") + 10000000L).as("k"),
+              (col("k") * 3L + 1L).as("cents")))
+        Versions.commitUpsert(delta, root, "k")                       // v1 (MOR)
+        Versions.commitDelete(
+          Versions.read(s, root).filter(col("k") % 4 === 0)
+            .select("k"), root, "k")                                  // v2 (DV)
+        val baseUntouched = filesOf(0) == baseBefore
+        def sig(v: Int, tag: String) = Versions.read(s, root, v)
+          .agg(count(lit(1)).as("n"), sum("cents").as("cents_sum"))
+          .select(lit(tag).as("tag"), col("n"), col("cents_sum"))
+        val rows = sig(0, "v0").unionByName(sig(1, "v1"))
+          .unionByName(sig(2, "v2")).localCheckpoint()
+        val deltaCnt = Checks.counts(
+          Seq(s.read.parquet(s"$root/v1"), delta)) // one job
+        val deltaOk = deltaCnt(0) == deltaCnt(1)
+        val branchRefused =
+          try { Versions.branch(root, br); false }
+          catch { case _: IllegalArgumentException => true }
+        val v2Resolved = Versions.read(s, root, 2).localCheckpoint()
+        Versions.compactDeletes(s, root)                              // v3 full
+        val v3 = Versions.read(s, root, 3)
+        val compactEquiv = Checks.multisetEqual(v3, v2Resolved)
+        val gates = Seq(
+          ("chk:base_untouched", baseUntouched),
+          ("chk:branch_refused", branchRefused),
+          ("chk:compacted_equiv", compactEquiv),
+          ("chk:delta_is_o_rows", deltaOk)
+        )
+        Q.sealReport(rows, gates, rows, v2Resolved)
+      }
     }
   }
 
@@ -1798,8 +1751,7 @@ object LakeQueries {
        SELECT * FROM (SELECT 'et:' || event_type AS tag, n, id_sum FROM v
                       UNION ALL SELECT * FROM chk)
        ORDER BY tag""") { (s, d) =>
-    val root = graft.io.Sources.scratchDir("graft_stream_cas")
-    try {
+    withScratch("graft_stream_cas") { root =>
       import graft.lake.{CommitConflict, TxLog}
       val nBatches = graft.streaming.StreamingLake
         .runViewCommitsCas(s, d, root, nFiles = 4)
@@ -1823,7 +1775,7 @@ object LakeQueries {
       val ets = TxLog.read(s, root)
         .select(concat(lit("et:"), col("event_type")).as("tag"),
           col("n"), col("id_sum"))
-      val chks = Seq(
+      val gates = Seq(
         ("chk:maintenance_preserves", preserved),
         ("chk:one_commit_per_batch", preMaint.toLong == nBatches - 1),
         ("chk:replay_skipped",
@@ -1831,11 +1783,9 @@ object LakeQueries {
         ("chk:stale_commit_conflicts", conflicted),
         ("chk:txn_survives_maintenance",
           TxLog.lastTxn(root) == nBatches - 1)
-      ).toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("id_sum"))
-      Q.sealResult(ets.unionByName(chks).orderBy("tag"), viewBefore)
-    } finally graft.io.Sources.removeScratchDir(root)
+      )
+      Q.sealReport(ets, gates, viewBefore)
+    }
   }
 
   /** COMMIT-LOG CHECKPOINT + RETENTION for the multi-writer table
@@ -1873,8 +1823,7 @@ object LakeQueries {
                             ('chk:vacuumed_ten')) t(chk))
        SELECT * FROM (SELECT * FROM sigs UNION ALL SELECT * FROM chk)
        ORDER BY tag""") { (s, d) =>
-    val root = graft.io.Sources.scratchDir("graft_txlog_ckpt")
-    try {
+    withScratch("graft_txlog_ckpt") { root =>
       import graft.lake.TxLog
       val cust = table(s, d, "customer").select(col("c_custkey").as("k"),
         round(col("c_acctbal") * 100, 0).cast("long").as("cents"))
@@ -1900,8 +1849,7 @@ object LakeQueries {
         .listFiles()).toSeq.flatten.map(_.getName).toSet
       // a new commit rides the vacuumed log without missing a beat
       TxLog.commit(TxLog.read(s, root), root, expected = 11)
-      import s.implicits._
-      val chks = Seq(
+      val gates = Seq(
         ("chk:commits_continue", TxLog.current(root) == 12),
         ("chk:current_stable", stableAfterVacuum),
         ("chk:lasttxn_stable", TxLog.lastTxn(root) == 109L),
@@ -1910,11 +1858,9 @@ object LakeQueries {
             "_checkpoint.0000000011")),
         ("chk:old_read_fails", oldFails),
         ("chk:vacuumed_ten", reclaimed == 10)
-      ).toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("cents_sum"))
-      Q.sealResult(rows.unionByName(chks).orderBy("tag"))
-    } finally graft.io.Sources.removeScratchDir(root)
+      )
+      Q.sealReport(rows, gates)
+    }
   }
 
   /** MATERIALIZED-VIEW REWRITE ([[graft.plans.ViewRewrite]] — an
@@ -1949,8 +1895,7 @@ object LakeQueries {
                             ('chk:rewrite_fired')) t(chk))
        SELECT * FROM (SELECT * FROM v UNION ALL SELECT * FROM chk)
        ORDER BY tag""") { (s, d) =>
-    val root = graft.io.Sources.scratchDir("graft_mv")
-    try {
+    withScratch("graft_mv") { root =>
       import graft.lake.Versions
       import graft.plans.{MatView, ViewRewrite}
       val ev = table(s, d, "events").select("event_type", "event_id")
@@ -1966,9 +1911,7 @@ object LakeQueries {
       val (rows, fired, ctrlDistinct, ctrlFilter, composes) =
         ViewRewrite.withRule(s, spec) {
           val q = userAgg()
-          val paths = ViewRewrite.scannedPaths(q)
-          val fired = paths.exists(_.contains(root)) &&
-            !paths.exists(_.contains("events.parquet"))
+          val fired = ViewRewrite.answeredBy(root, "events.parquet")(q)
           val out = q.select(
             concat(lit("et:"),
               coalesce(col("event_type"), lit("(null)"))).as("tag"),
@@ -1987,18 +1930,14 @@ object LakeQueries {
           (out, fired, d1.exists(_.contains("events.parquet")),
             d2.exists(_.contains("events.parquet")), composes)
         }
-      import s.implicits._
-      val chks = Seq(
+      val gates = Seq(
         ("chk:composes_above", composes),
         ("chk:distinct_unrewritten", ctrlDistinct),
         ("chk:filter_unrewritten", ctrlFilter),
         ("chk:rewrite_fired", fired)
-      ).toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("id_sum"))
-      Q.sealResult(rows.unionByName(chks).orderBy("tag"),
-        rows) // result outlives the removed files
-    } finally graft.io.Sources.removeScratchDir(root)
+      )
+      Q.sealReport(rows, gates, rows)
+    }
   }
 
   /** MATERIALIZED-VIEW RE-AGGREGATION ([[graft.plans.ViewRewrite]]'s
@@ -2045,8 +1984,7 @@ object LakeQueries {
        SELECT * FROM (SELECT * FROM by_t UNION ALL SELECT * FROM allr
                       UNION ALL SELECT * FROM chk)
        ORDER BY tag""") { (s, d) =>
-    val root = graft.io.Sources.scratchDir("graft_mv_rollup")
-    try {
+    withScratch("graft_mv_rollup") { root =>
       import graft.lake.Versions
       import graft.plans.{MatView, ViewRewrite}
       val ev = table(s, d, "events")
@@ -2061,10 +1999,7 @@ object LakeQueries {
         countCol = Some("n"),
         sumCols = Map("event_id" -> "id_sum"),
         nonNullCols = Set("event_id"))
-      def fired(df: org.apache.spark.sql.DataFrame): Boolean = {
-        val p = ViewRewrite.scannedPaths(df)
-        p.exists(_.contains(root)) && !p.exists(_.contains("events.parquet"))
-      }
+      val fired = ViewRewrite.answeredBy(root, "events.parquet") _
       def scansBase(df: org.apache.spark.sql.DataFrame): Boolean =
         ViewRewrite.scannedPaths(df).exists(_.contains("events.parquet"))
       val (rows, gates) = ViewRewrite.withRule(s, spec) {
@@ -2095,13 +2030,8 @@ object LakeQueries {
           ("chk:rollup_fired", fired(byType)))
         (out, gates)
       }
-      import s.implicits._
-      val chks = gates.toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("id_sum"), lit(0.0).as("avg_id"))
-      Q.sealResult(rows.unionByName(chks).orderBy("tag"),
-        rows) // result outlives the removed files
-    } finally graft.io.Sources.removeScratchDir(root)
+      Q.sealReport(rows, gates, rows)
+    }
   }
 
   /** MULTI-TABLE ATOMIC COMMITS ([[graft.lake.Catalog]] — the Iceberg
@@ -2163,8 +2093,7 @@ object LakeQueries {
                             ('chk:vacuum_safe')) t(chk))
        SELECT * FROM (SELECT * FROM sigs UNION ALL SELECT * FROM chk)
        ORDER BY tag""") { (s, d) =>
-    val root = graft.io.Sources.scratchDir("graft_catalog")
-    try {
+    withScratch("graft_catalog") { root =>
       import graft.lake.{Catalog, Versions}
       // checkpointed once: ~8 commits and a dozen probes scan this
       val cust = table(s, d, "customer").select(col("c_custkey").as("k"),
@@ -2272,8 +2201,7 @@ object LakeQueries {
         .unionByName(Catalog.read(s, root, "ledger")
           .agg(count(lit(1)).as("n"), sum("amount").as("cents_sum"))
           .select(lit("ledger").as("tag"), col("n"), col("cents_sum")))
-      import s.implicits._
-      val chks = Seq(
+      val gates = Seq(
         ("chk:asof_consistent", asofOk),
         ("chk:conflict_loud", conflictLoud),
         ("chk:crash_invisible", crashInvisible),
@@ -2281,11 +2209,9 @@ object LakeQueries {
         ("chk:rebase_applied", rebaseApplied),
         ("chk:torn_would_break", tornBreaks),
         ("chk:vacuum_safe", vacuumSafe)
-      ).toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("cents_sum"))
-      Q.sealResult(rows.unionByName(chks).orderBy("tag"), cust)
-    } finally graft.io.Sources.removeScratchDir(root)
+      )
+      Q.sealReport(rows, gates, cust)
+    }
   }
 
   /** MERGE-ON-READ ON THE MULTI-WRITER LOG ([[graft.lake.Mor]] — the
@@ -2333,8 +2259,7 @@ object LakeQueries {
                             ('chk:vacuumed_after_compact')) t(chk))
        SELECT * FROM (SELECT * FROM sigs UNION ALL SELECT * FROM chk)
        ORDER BY tag""") { (s, d) =>
-    val root = graft.io.Sources.scratchDir("graft_txlog_mor")
-    try {
+    withScratch("graft_txlog_mor") { root =>
       import graft.lake.{CommitConflict, TxLog}
       // checkpointed once: the commits and physical proofs rescan it
       val cust = table(s, d, "customer").select(col("c_custkey").as("k"),
@@ -2395,8 +2320,7 @@ object LakeQueries {
         catch { case _: IllegalArgumentException => true }
       val vacuumedAfter = reclaimed == 3 && oldLoud &&
         TxLog.read(s, root).count() == finCount
-      import s.implicits._
-      val chks = Seq(
+      val gates = Seq(
         ("chk:compact_equiv", compactEquiv),
         ("chk:conflict_rebased", conflictRebased),
         ("chk:dv_physical_keys", dvPhysical),
@@ -2404,12 +2328,9 @@ object LakeQueries {
         ("chk:upsert_physical_delta", upPhysical),
         ("chk:vacuum_floor", vacuumFloor),
         ("chk:vacuumed_after_compact", vacuumedAfter)
-      ).toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("cents_sum"))
-      Q.sealResult(sigRows.unionByName(chks).orderBy("tag"),
-        sigRows, cust)
-    } finally graft.io.Sources.removeScratchDir(root)
+      )
+      Q.sealReport(sigRows, gates, sigRows, cust)
+    }
   }
 
   /** MV AUTO-SELECTION ([[graft.plans.MultiViewRewrite]] — the
@@ -2453,8 +2374,7 @@ object LakeQueries {
                       UNION ALL SELECT * FROM flt
                       UNION ALL SELECT * FROM chk)
        ORDER BY tag""") { (s, d) =>
-    val root = graft.io.Sources.scratchDir("graft_mv_select")
-    try {
+    withScratch("graft_mv_select") { root =>
       import graft.plans.{MatView, ViewRewrite}
       val ev = table(s, d, "events")
         .select("event_type", "user_id", "event_id")
@@ -2534,13 +2454,8 @@ object LakeQueries {
           ("chk:zonemap_picks_sorted", chose(qFiltered, "finez")))
         (out, gates)
       }
-      import s.implicits._
-      val chks = gates.toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("id_sum"))
-      Q.sealResult(rows.unionByName(chks).orderBy("tag"),
-        rows) // result outlives the removed files
-    } finally graft.io.Sources.removeScratchDir(root)
+      Q.sealReport(rows, gates, rows)
+    }
   }
 
   /** AGE-BASED RETENTION WITH CATALOGED-SNAPSHOT SAFETY
@@ -2591,90 +2506,84 @@ object LakeQueries {
                             ('chk:records_pruned')) t(chk))
        SELECT * FROM (SELECT * FROM sigs UNION ALL SELECT * FROM chk)
        ORDER BY tag""") { (s, d) =>
-    val cat = graft.io.Sources.scratchDir("graft_aged_cat")
-    val chain = graft.io.Sources.scratchDir("graft_aged_chain")
-    try {
-      import graft.lake.{Catalog, Versions}
-      val hourMs = 60L * 60L * 1000L
-      val agedTs = System.currentTimeMillis() - 2 * hourMs
-      // retention reads the stamped commit time, not inode mtimes —
-      // freshening every mtime here proves mtime can't RESCUE an aged
-      // version (the object-store-restore scenario), while the stamp
-      // rewind is the supported aging channel
-      def freshenTree(f: java.io.File): Unit = {
-        f.setLastModified(System.currentTimeMillis())
-        Option(f.listFiles()).toSeq.flatten.foreach(freshenTree)
+    withScratch("graft_aged_cat") { cat =>
+      withScratch("graft_aged_chain") { chain =>
+        import graft.lake.{Catalog, Versions}
+        val hourMs = 60L * 60L * 1000L
+        val agedTs = System.currentTimeMillis() - 2 * hourMs
+        // retention reads the stamped commit time, not inode mtimes —
+        // freshening every mtime here proves mtime can't RESCUE an aged
+        // version (the object-store-restore scenario), while the stamp
+        // rewind is the supported aging channel
+        def freshenTree(f: java.io.File): Unit = {
+          f.setLastModified(System.currentTimeMillis())
+          Option(f.listFiles()).toSeq.flatten.foreach(freshenTree)
+        }
+        val cust = table(s, d, "customer").select(col("c_custkey").as("k"),
+          round(col("c_acctbal") * 100, 0).cast("long").as("cents"))
+        // fixture A: three catalog transactions
+        Catalog.commitAll(cat, Map(
+          "accounts" -> cust.select(col("k"), col("cents").as("bal")),
+          "ledger" -> cust.select(col("k"), col("cents").as("amount"))))
+        Catalog.commitAll(cat, Map(
+          "accounts" -> Catalog.read(s, cat, "accounts").select(col("k"),
+            (col("bal") + when(col("k") % 3 === 0, 7L).otherwise(0L))
+              .as("bal")),
+          "ledger" -> Catalog.read(s, cat, "ledger").unionByName(
+            cust.filter(col("k") % 3 === 0)
+              .select(col("k"), lit(7L).as("amount")))))
+        Catalog.commitAll(cat, Map(
+          "accounts" -> Catalog.read(s, cat, "accounts").select(col("k"),
+            (col("bal") + when(col("k") % 10 === 0, 100L).otherwise(0L))
+              .as("bal")),
+          "ledger" -> Catalog.read(s, cat, "ledger").unionByName(
+            cust.filter(col("k") % 10 === 0)
+              .select(col("k"), lit(100L).as("amount")))))
+        // age (by STAMP): old records, old member versions, AND the
+        // currently-cataloged accounts version (v2) — cataloged must
+        // beat aged; mtimes are freshened everywhere to prove a restore
+        // that resets them can neither rescue nor doom anything
+        Seq(0, 1).foreach(n => Catalog.restamp(cat, n, agedTs))
+        Seq(0, 1, 2).foreach(v => Versions.restamp(s"$cat/accounts", v, agedTs))
+        Seq(0, 1).foreach(v => Versions.restamp(s"$cat/ledger", v, agedTs))
+        freshenTree(new java.io.File(cat))
+        val reclaimed = Catalog.vacuumAged(cat, maxAgeMs = hourMs)
+        val recordsPruned = Catalog.catalogVersion(cat) == 2 &&
+          (try { Catalog.snapshotAt(cat, 0); false }
+           catch { case _: IllegalArgumentException => true })
+        def balSum(df: org.apache.spark.sql.DataFrame, c: String): Long =
+          df.agg(sum(c)).collect()(0).getLong(0) // bounded: one agg row
+        val catalogedSurvives =
+          balSum(Catalog.read(s, cat, "accounts"), "bal") ==
+            balSum(Catalog.read(s, cat, "ledger"), "amount")
+        val oldLoud =
+          try { Versions.read(s, s"$cat/accounts", 0); false }
+          catch { case _: IllegalArgumentException => true }
+        // fixture B: a retained DV head over an AGED base — the chain
+        // veto must keep the base despite its age
+        Versions.commit(cust, chain)
+        Versions.commitDelete(
+          cust.filter(col("k") % 4 === 0).select("k"), chain, "k")
+        Versions.restamp(chain, 0, agedTs)
+        val chainReclaim = Versions.vacuumAged(chain, maxAgeMs = hourMs)
+        val chainProtected = chainReclaim == 0 &&
+          Versions.read(s, chain).count() ==
+            cust.filter(col("k") % 4 =!= 0).count()
+        val rows = Catalog.read(s, cat, "accounts")
+          .agg(count(lit(1)).as("n"), sum("bal").as("cents_sum"))
+          .select(lit("accounts").as("tag"), col("n"), col("cents_sum"))
+          .unionByName(Catalog.read(s, cat, "ledger")
+            .agg(count(lit(1)).as("n"), sum("amount").as("cents_sum"))
+            .select(lit("ledger").as("tag"), col("n"), col("cents_sum")))
+        val gates = Seq(
+          ("chk:aged_reclaimed", reclaimed == 4),
+          ("chk:cataloged_survives", catalogedSurvives),
+          ("chk:chain_protected", chainProtected),
+          ("chk:old_read_loud", oldLoud),
+          ("chk:records_pruned", recordsPruned)
+        )
+        Q.sealReport(rows, gates)
       }
-      val cust = table(s, d, "customer").select(col("c_custkey").as("k"),
-        round(col("c_acctbal") * 100, 0).cast("long").as("cents"))
-      // fixture A: three catalog transactions
-      Catalog.commitAll(cat, Map(
-        "accounts" -> cust.select(col("k"), col("cents").as("bal")),
-        "ledger" -> cust.select(col("k"), col("cents").as("amount"))))
-      Catalog.commitAll(cat, Map(
-        "accounts" -> Catalog.read(s, cat, "accounts").select(col("k"),
-          (col("bal") + when(col("k") % 3 === 0, 7L).otherwise(0L))
-            .as("bal")),
-        "ledger" -> Catalog.read(s, cat, "ledger").unionByName(
-          cust.filter(col("k") % 3 === 0)
-            .select(col("k"), lit(7L).as("amount")))))
-      Catalog.commitAll(cat, Map(
-        "accounts" -> Catalog.read(s, cat, "accounts").select(col("k"),
-          (col("bal") + when(col("k") % 10 === 0, 100L).otherwise(0L))
-            .as("bal")),
-        "ledger" -> Catalog.read(s, cat, "ledger").unionByName(
-          cust.filter(col("k") % 10 === 0)
-            .select(col("k"), lit(100L).as("amount")))))
-      // age (by STAMP): old records, old member versions, AND the
-      // currently-cataloged accounts version (v2) — cataloged must
-      // beat aged; mtimes are freshened everywhere to prove a restore
-      // that resets them can neither rescue nor doom anything
-      Seq(0, 1).foreach(n => Catalog.restamp(cat, n, agedTs))
-      Seq(0, 1, 2).foreach(v => Versions.restamp(s"$cat/accounts", v, agedTs))
-      Seq(0, 1).foreach(v => Versions.restamp(s"$cat/ledger", v, agedTs))
-      freshenTree(new java.io.File(cat))
-      val reclaimed = Catalog.vacuumAged(cat, maxAgeMs = hourMs)
-      val recordsPruned = Catalog.catalogVersion(cat) == 2 &&
-        (try { Catalog.snapshotAt(cat, 0); false }
-         catch { case _: IllegalArgumentException => true })
-      def balSum(df: org.apache.spark.sql.DataFrame, c: String): Long =
-        df.agg(sum(c)).collect()(0).getLong(0) // bounded: one agg row
-      val catalogedSurvives =
-        balSum(Catalog.read(s, cat, "accounts"), "bal") ==
-          balSum(Catalog.read(s, cat, "ledger"), "amount")
-      val oldLoud =
-        try { Versions.read(s, s"$cat/accounts", 0); false }
-        catch { case _: IllegalArgumentException => true }
-      // fixture B: a retained DV head over an AGED base — the chain
-      // veto must keep the base despite its age
-      Versions.commit(cust, chain)
-      Versions.commitDelete(
-        cust.filter(col("k") % 4 === 0).select("k"), chain, "k")
-      Versions.restamp(chain, 0, agedTs)
-      val chainReclaim = Versions.vacuumAged(chain, maxAgeMs = hourMs)
-      val chainProtected = chainReclaim == 0 &&
-        Versions.read(s, chain).count() ==
-          cust.filter(col("k") % 4 =!= 0).count()
-      val rows = Catalog.read(s, cat, "accounts")
-        .agg(count(lit(1)).as("n"), sum("bal").as("cents_sum"))
-        .select(lit("accounts").as("tag"), col("n"), col("cents_sum"))
-        .unionByName(Catalog.read(s, cat, "ledger")
-          .agg(count(lit(1)).as("n"), sum("amount").as("cents_sum"))
-          .select(lit("ledger").as("tag"), col("n"), col("cents_sum")))
-      import s.implicits._
-      val chks = Seq(
-        ("chk:aged_reclaimed", reclaimed == 4),
-        ("chk:cataloged_survives", catalogedSurvives),
-        ("chk:chain_protected", chainProtected),
-        ("chk:old_read_loud", oldLoud),
-        ("chk:records_pruned", recordsPruned)
-      ).toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("cents_sum"))
-      Q.sealResult(rows.unionByName(chks).orderBy("tag"))
-    } finally {
-      graft.io.Sources.removeScratchDir(cat)
-      graft.io.Sources.removeScratchDir(chain)
     }
   }
 
@@ -2715,8 +2624,7 @@ object LakeQueries {
        SELECT * FROM (SELECT * FROM filt UNION ALL SELECT * FROM rng
                       UNION ALL SELECT * FROM chk)
        ORDER BY tag""") { (s, d) =>
-    val root = graft.io.Sources.scratchDir("graft_mv_filter")
-    try {
+    withScratch("graft_mv_filter") { root =>
       import graft.lake.Versions
       import graft.plans.{MatView, ViewRewrite}
       val ev = table(s, d, "events")
@@ -2730,10 +2638,7 @@ object LakeQueries {
         countCol = Some("n"),
         sumCols = Map("event_id" -> "id_sum"),
         nonNullCols = Set("event_id"))
-      def fired(df: org.apache.spark.sql.DataFrame): Boolean = {
-        val p = ViewRewrite.scannedPaths(df)
-        p.exists(_.contains(root)) && !p.exists(_.contains("events.parquet"))
-      }
+      val fired = ViewRewrite.answeredBy(root, "events.parquet") _
       val (rows, gates) = ViewRewrite.withRule(s, spec) {
         // IN-filter on one key, roll-up to it, with derived avg
         val byType = ev.filter(col("event_type").isin("click", "view"))
@@ -2764,13 +2669,8 @@ object LakeQueries {
           ("chk:rollup_filtered_fired", fired(byType)))
         (out, gates)
       }
-      import s.implicits._
-      val chks = gates.toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("id_sum"), lit(0.0).as("avg_id"))
-      Q.sealResult(rows.unionByName(chks).orderBy("tag"),
-        rows) // result outlives the removed files
-    } finally graft.io.Sources.removeScratchDir(root)
+      Q.sealReport(rows, gates, rows)
+    }
   }
 
   /** CATALOG TRANSACTIONS OVER EITHER COMMIT CORE ([[graft.lake
@@ -2849,8 +2749,7 @@ object LakeQueries {
        SELECT * FROM (SELECT * FROM sigs UNION ALL SELECT * FROM audit
                       UNION ALL SELECT * FROM chk)
        ORDER BY tag""") { (s, d) =>
-    val root = graft.io.Sources.scratchDir("graft_cat_cores")
-    try {
+    withScratch("graft_cat_cores") { root =>
       import graft.lake.{Catalog, CommitConflict, TxLog, Versions}
       import graft.lake.Catalog.{DeleteKeys, Put, UpsertRows}
       import s.implicits._
@@ -2986,7 +2885,7 @@ object LakeQueries {
         invariantAt(Catalog.snapshot(root)) &&
         (try { Catalog.snapshotAt(root, 0); false }
          catch { case _: IllegalArgumentException => true })
-      val chks = Seq(
+      val gates = Seq(
         ("chk:asof_consistent", asofOk),
         ("chk:catalog_conflict_loud", catalogConflictLoud),
         ("chk:dv_physical", dvPhysical),
@@ -2996,11 +2895,9 @@ object LakeQueries {
         ("chk:repaired_content", repairedContent),
         ("chk:upsert_physical", upPhysical),
         ("chk:vacuum_safe", vacuumSafe)
-      ).toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("cents_sum"))
-      Q.sealResult(sigRows.unionByName(chks).orderBy("tag"), sigRows, cust)
-    } finally graft.io.Sources.removeScratchDir(root)
+      )
+      Q.sealReport(sigRows, gates, sigRows, cust)
+    }
   }
 
   /** MV LADDER: MIN/MAX ([[graft.plans.ViewRewrite]]'s next rungs — the
@@ -3036,8 +2933,7 @@ object LakeQueries {
        SELECT * FROM (SELECT * FROM by_t UNION ALL SELECT * FROM allr
                       UNION ALL SELECT * FROM chk)
        ORDER BY tag""") { (s, d) =>
-    val root = graft.io.Sources.scratchDir("graft_mv_minmax")
-    try {
+    withScratch("graft_mv_minmax") { root =>
       import graft.lake.Versions
       import graft.plans.{MatView, ViewRewrite}
       val ev = table(s, d, "events")
@@ -3052,10 +2948,7 @@ object LakeQueries {
         countCol = Some("n"),
         minCols = Map("event_id" -> "id_min"),
         maxCols = Map("event_id" -> "id_max"))
-      def fired(df: org.apache.spark.sql.DataFrame): Boolean = {
-        val p = ViewRewrite.scannedPaths(df)
-        p.exists(_.contains(root)) && !p.exists(_.contains("events.parquet"))
-      }
+      val fired = ViewRewrite.answeredBy(root, "events.parquet") _
       val (rows, gates) = ViewRewrite.withRule(s, spec) {
         val byType = ev.groupBy("event_type")
           .agg(count(lit(1)).as("n"), min("event_id").as("id_min"),
@@ -3081,12 +2974,8 @@ object LakeQueries {
             .exists(_.contains("events.parquet"))))
         (out, gates)
       }
-      import s.implicits._
-      val chks = gates.toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("id_min"), lit(0L).as("id_max"))
-      Q.sealResult(rows.unionByName(chks).orderBy("tag"), rows)
-    } finally graft.io.Sources.removeScratchDir(root)
+      Q.sealReport(rows, gates, rows)
+    }
   }
 
   /** MV FRESHNESS TIED TO THE REFRESH COMMIT ([[graft.plans.MatView]]
@@ -3125,8 +3014,7 @@ object LakeQueries {
                             ('chk:stale_consistent')) t(chk))
        SELECT * FROM (SELECT * FROM by_t UNION ALL SELECT * FROM chk)
        ORDER BY tag""") { (s, d) =>
-    val root = graft.io.Sources.scratchDir("graft_mv_live")
-    try {
+    withScratch("graft_mv_live") { root =>
       import graft.lake.Versions
       import graft.plans.{MatView, ViewRewrite}
       val ev = table(s, d, "events")
@@ -3145,10 +3033,7 @@ object LakeQueries {
         minCols = Map("event_id" -> "id_min"),
         maxCols = Map("event_id" -> "id_max"),
         viewRoot = Some(root)) // LIVE: resolved at plan time
-      def fired(df: org.apache.spark.sql.DataFrame): Boolean = {
-        val p = ViewRewrite.scannedPaths(df)
-        p.exists(_.contains(root)) && !p.exists(_.contains("events.parquet"))
-      }
+      val fired = ViewRewrite.answeredBy(root, "events.parquet") _
       val (rows, gates) = ViewRewrite.withRule(s, spec) {
         def ask() = ev.groupBy("event_type")
           .agg(count(lit(1)).as("n"), sum("event_id").as("id_sum"),
@@ -3177,12 +3062,8 @@ object LakeQueries {
         stale.unpersist()
         (out, gates)
       }
-      import s.implicits._
-      val chks = gates.toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("id_sum"), lit(0L).as("id_min"), lit(0L).as("id_max"))
-      Q.sealResult(rows.unionByName(chks).orderBy("tag"), rows)
-    } finally graft.io.Sources.removeScratchDir(root)
+      Q.sealReport(rows, gates, rows)
+    }
   }
 
   /** STREAMING MULTI-TABLE COMMITS ([[graft.streaming.StreamingLake
@@ -3226,8 +3107,7 @@ object LakeQueries {
                         CAST(0 AS BIGINT), id_max FROM v
                       UNION ALL SELECT * FROM chk)
        ORDER BY tag""") { (s, d) =>
-    val root = graft.io.Sources.scratchDir("graft_stream_catalog")
-    try {
+    withScratch("graft_stream_catalog") { root =>
       import graft.lake.{Catalog, Versions}
       val nBatches = graft.streaming.StreamingLake
         .runViewIndexCatalog(s, d, root, nFiles = 4)
@@ -3272,17 +3152,15 @@ object LakeQueries {
           .select(concat(lit("ix:"), col("event_type")).as("tag"),
             lit(1L).as("n"), lit(0L).as("id_sum"),
             col("last_id").as("id_max")))
-      val chks = Seq(
+      val gates = Seq(
         ("chk:atomic_pair_all_snapshots", atomicPair),
         ("chk:crash_invisible", crashInvisible),
         ("chk:index_is_mor", indexIsMor),
         ("chk:one_txn_per_batch", oneTxnPerBatch),
         ("chk:replay_skipped", replaySkipped)
-      ).toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("id_sum"), lit(0L).as("id_max"))
-      Q.sealResult(rows.unionByName(chks).orderBy("tag"))
-    } finally graft.io.Sources.removeScratchDir(root)
+      )
+      Q.sealReport(rows, gates)
+    }
   }
 
   /** CATALOG-AWARE COMPACTION ([[graft.lake.Catalog.Compact]] +
@@ -3325,8 +3203,7 @@ object LakeQueries {
                         CAST(0 AS BIGINT), id_max FROM v
                       UNION ALL SELECT * FROM chk)
        ORDER BY tag""") { (s, d) =>
-    val root = graft.io.Sources.scratchDir("graft_cat_compact_q")
-    try {
+    withScratch("graft_cat_compact_q") { root =>
       import graft.lake.{Catalog, TxLog}
       val threshold = 3
       val nBatches = graft.streaming.StreamingLake
@@ -3380,18 +3257,16 @@ object LakeQueries {
           .select(concat(lit("ix:"), col("event_type")).as("tag"),
             lit(1L).as("n"), lit(0L).as("id_sum"),
             col("last_id").as("id_max")))
-      val chks = Seq(
+      val gates = Seq(
         ("chk:atomic_pair_all_snapshots", atomicPair),
         ("chk:compactions_fired", compactionsFired),
         ("chk:depth_bounded_each_batch", depthBounded),
         ("chk:plan_bounded", planBounded),
         ("chk:replay_skipped", replaySkipped),
         ("chk:snapshots_readable", snapshotsReadable)
-      ).toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("id_sum"), lit(0L).as("id_max"))
-      Q.sealResult(rows.unionByName(chks).orderBy("tag"))
-    } finally graft.io.Sources.removeScratchDir(root)
+      )
+      Q.sealReport(rows, gates)
+    }
   }
 
   /** RETRACTION-AWARE MV REFRESH ([[graft.plans.ViewRewrite.refresh]]
@@ -3436,8 +3311,7 @@ object LakeQueries {
                             ('chk:unclaimed_sum_loud')) t(chk))
        SELECT * FROM (SELECT * FROM by_t UNION ALL SELECT * FROM chk)
        ORDER BY tag""") { (s, d) =>
-    val root = graft.io.Sources.scratchDir("graft_mv_retract_q")
-    try {
+    withScratch("graft_mv_retract_q") { root =>
       import graft.lake.Versions
       import graft.plans.{MatView, ViewRewrite}
       val ev = table(s, d, "events").filter(col("event_type").isNotNull)
@@ -3495,8 +3369,7 @@ object LakeQueries {
       val rows = got.select(
         concat(lit("et:"), col("event_type")).as("tag"),
         col("n"), col("id_sum"), col("id_min"), col("id_max"))
-      import s.implicits._
-      val chks = Seq(
+      val gates = Seq(
         ("chk:evict_rescans_only_evicted",
           s2.rescannedGroups == nTypes && s2.emptiedGroups == 0),
         ("chk:interior_is_algebraic",
@@ -3504,12 +3377,9 @@ object LakeQueries {
         ("chk:matches_recompute", matches),
         ("chk:rule_fires_after_retract", ruleFires),
         ("chk:unclaimed_sum_loud", unclaimedLoud)
-      ).toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("id_sum"), lit(0L).as("id_min"), lit(0L).as("id_max"))
-      Q.sealResult(rows.unionByName(chks).orderBy("tag"),
-        ranked, del1, del2, rem1, rem2, got)
-    } finally graft.io.Sources.removeScratchDir(root)
+      )
+      Q.sealReport(rows, gates, ranked, del1, del2, rem1, rem2, got)
+    }
   }
 
   /** SCHEMA-EVOLVING MERGE-ON-READ UPSERTS ([[graft.lake.Mor
@@ -3547,67 +3417,64 @@ object LakeQueries {
                             ('chk:reject_names_optin')) t(chk))
        SELECT * FROM (SELECT * FROM sig UNION ALL SELECT * FROM chk)
        ORDER BY tier, seg""") { (s, d) =>
-    val vRoot = graft.io.Sources.scratchDir("graft_evolve_vq")
-    val tRoot = graft.io.Sources.scratchDir("graft_evolve_tq")
-    try {
-      import graft.lake.{TxLog, Versions}
-      val base = table(s, d, "customer").select(
-        col("c_custkey").as("k"), col("c_mktsegment").as("seg"),
-        round(col("c_acctbal") * 100, 0).cast("long").as("cents"))
-      val widened = base.filter(col("k") % 7 === 0)
-        .select(col("k"), col("seg"), (col("cents") + 100L).as("cents"),
-          lit("gold").as("tier"))
-      val nBase = base.count()
-      Versions.commit(base, vRoot)
-      TxLog.commit(base, tRoot, expected = -1)
-      // the loud contract: a widened batch without the opt-in is
-      // rejected AT COMMIT, and the error names the fix
-      val rejectLoud =
-        try { Versions.commitUpsert(widened, vRoot, "k"); false }
-        catch { case e: IllegalArgumentException =>
-          e.getMessage.contains("evolveSchema") &&
-            Versions.current(vRoot) == 0 }
-      // opted in: the overlay commits, old rows null-backfill, and a
-      // deletion vector composes on top of the evolved chain
-      Versions.commitUpsert(widened, vRoot, "k", evolveSchema = true,
-        autoCompactAt = 0)
-      Versions.commitDelete(base.filter(col("k") % 10 === 3)
-        .select("k"), vRoot, "k", autoCompactAt = 0)
-      TxLog.commitUpsert(widened, tRoot, "k", expected = 0,
-        evolveSchema = true, autoCompactAt = 0)
-      TxLog.commitDelete(base.filter(col("k") % 10 === 3).select("k"),
-        tRoot, "k", expected = 1, autoCompactAt = 0)
-      val gotV = Versions.read(s, vRoot).localCheckpoint()
-      val gotT = TxLog.read(s, tRoot)
-      val coresAgree = Checks.multisetEqual(gotV, gotT)
-      // all scalar probes over the checkpointed read in ONE aggregation
-      // (this ran six separate count() actions before r14)
-      val p = gotV.agg(
-        sum(when(col("tier").isNull, 1L).otherwise(0L)),
-        sum(when(col("tier") === "gold", 1L).otherwise(0L)),
-        count(lit(1)),
-        sum(when(col("k") % 10 === 3, 1L).otherwise(0L))).collect()(0)
-      val (nNullTier, nGold, nAll, nDv3) =
-        (p.getLong(0), p.getLong(1), p.getLong(2), p.getLong(3))
-      val nullBackfilled = nNullTier == nAll - nGold && nNullTier > 0
-      val dvComposes = nDv3 == 0 && nAll < nBase
-      val rows = gotV.groupBy(
-          coalesce(col("tier"), lit("(base)")).as("tier"), col("seg"))
-        .agg(count(lit(1)).as("n"), sum("cents").as("cents_sum"))
-      import s.implicits._
-      val chks = Seq(
-        ("chk:cores_agree", coresAgree),
-        ("chk:dv_composes_on_evolved", dvComposes),
-        ("chk:null_backfilled", nullBackfilled),
-        ("chk:reject_names_optin", rejectLoud)
-      ).toDF("tier", "ok")
-        .select(col("tier"), lit("chk").as("seg"),
-          when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("cents_sum"))
-      Q.sealResult(rows.unionByName(chks).orderBy("tier", "seg"), gotV)
-    } finally {
-      graft.io.Sources.removeScratchDir(vRoot)
-      graft.io.Sources.removeScratchDir(tRoot)
+    withScratch("graft_evolve_vq") { vRoot =>
+      withScratch("graft_evolve_tq") { tRoot =>
+        import graft.lake.{TxLog, Versions}
+        val base = table(s, d, "customer").select(
+          col("c_custkey").as("k"), col("c_mktsegment").as("seg"),
+          round(col("c_acctbal") * 100, 0).cast("long").as("cents"))
+        val widened = base.filter(col("k") % 7 === 0)
+          .select(col("k"), col("seg"), (col("cents") + 100L).as("cents"),
+            lit("gold").as("tier"))
+        val nBase = base.count()
+        Versions.commit(base, vRoot)
+        TxLog.commit(base, tRoot, expected = -1)
+        // the loud contract: a widened batch without the opt-in is
+        // rejected AT COMMIT, and the error names the fix
+        val rejectLoud =
+          try { Versions.commitUpsert(widened, vRoot, "k"); false }
+          catch { case e: IllegalArgumentException =>
+            e.getMessage.contains("evolveSchema") &&
+              Versions.current(vRoot) == 0 }
+        // opted in: the overlay commits, old rows null-backfill, and a
+        // deletion vector composes on top of the evolved chain
+        Versions.commitUpsert(widened, vRoot, "k", evolveSchema = true,
+          autoCompactAt = 0)
+        Versions.commitDelete(base.filter(col("k") % 10 === 3)
+          .select("k"), vRoot, "k", autoCompactAt = 0)
+        TxLog.commitUpsert(widened, tRoot, "k", expected = 0,
+          evolveSchema = true, autoCompactAt = 0)
+        TxLog.commitDelete(base.filter(col("k") % 10 === 3).select("k"),
+          tRoot, "k", expected = 1, autoCompactAt = 0)
+        val gotV = Versions.read(s, vRoot).localCheckpoint()
+        val gotT = TxLog.read(s, tRoot)
+        val coresAgree = Checks.multisetEqual(gotV, gotT)
+        // all scalar probes over the checkpointed read in ONE aggregation
+        // (this ran six separate count() actions before r14)
+        val p = gotV.agg(
+          sum(when(col("tier").isNull, 1L).otherwise(0L)),
+          sum(when(col("tier") === "gold", 1L).otherwise(0L)),
+          count(lit(1)),
+          sum(when(col("k") % 10 === 3, 1L).otherwise(0L))).collect()(0)
+        val (nNullTier, nGold, nAll, nDv3) =
+          (p.getLong(0), p.getLong(1), p.getLong(2), p.getLong(3))
+        val nullBackfilled = nNullTier == nAll - nGold && nNullTier > 0
+        val dvComposes = nDv3 == 0 && nAll < nBase
+        val rows = gotV.groupBy(
+            coalesce(col("tier"), lit("(base)")).as("tier"), col("seg"))
+          .agg(count(lit(1)).as("n"), sum("cents").as("cents_sum"))
+        import s.implicits._
+        val chks = Seq(
+          ("chk:cores_agree", coresAgree),
+          ("chk:dv_composes_on_evolved", dvComposes),
+          ("chk:null_backfilled", nullBackfilled),
+          ("chk:reject_names_optin", rejectLoud)
+        ).toDF("tier", "ok")
+          .select(col("tier"), lit("chk").as("seg"),
+            when(col("ok"), 1L).otherwise(0L).as("n"),
+            lit(0L).as("cents_sum"))
+        Q.sealResult(rows.unionByName(chks).orderBy("tier", "seg"), gotV)
+      }
     }
   }
 
@@ -3648,8 +3515,7 @@ object LakeQueries {
                         CAST(0 AS BIGINT), id_max FROM v
                       UNION ALL SELECT * FROM chk)
        ORDER BY tag""") { (s, d) =>
-    val root = graft.io.Sources.scratchDir("graft_two_streams_q")
-    try {
+    withScratch("graft_two_streams_q") { root =>
       import graft.lake.Catalog
       val (a, b) = graft.streaming.StreamingLake
         .runTwoStreamCatalog(s, d, root, nFiles = 3)
@@ -3698,17 +3564,15 @@ object LakeQueries {
           .select(concat(lit("ix:"), col("event_type")).as("tag"),
             lit(1L).as("n"), lit(0L).as("id_sum"),
             col("last_id").as("id_max")))
-      val chks = Seq(
+      val gates = Seq(
         ("chk:atomic_pair_all_snapshots", atomicPair),
         ("chk:ledgers_independent", ledgersIndependent),
         ("chk:lineage_monotone", lineageMonotone),
         ("chk:one_record_per_batch", oneRecordPerBatch),
         ("chk:replay_skipped_per_app", replaySkipped)
-      ).toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("id_sum"), lit(0L).as("id_max"))
-      Q.sealResult(rows.unionByName(chks).orderBy("tag"))
-    } finally graft.io.Sources.removeScratchDir(root)
+      )
+      Q.sealReport(rows, gates)
+    }
   }
 
   /** CHANGE DATA FEED ([[graft.lake.ChangeFeed]] — the Delta-CDF /
@@ -3773,136 +3637,128 @@ object LakeQueries {
        SELECT * FROM (SELECT * FROM steps UNION ALL SELECT * FROM segs
                       UNION ALL SELECT * FROM chk)
        ORDER BY tag""") { (s, d) =>
-    val tRoot = graft.io.Sources.scratchDir("graft_cdf_tq")
-    val vRoot = graft.io.Sources.scratchDir("graft_cdf_vq")
-    try {
-      import graft.lake.{ChangeFeed, Versions}
-      import graft.plans.{MatView, ViewRewrite}
-      val t0 = table(s, d, "customer").select(
-        col("c_custkey").cast("long").as("k"),
-        col("c_mktsegment").as("seg"),
-        round(col("c_acctbal") * 100, 0).cast("long").as("cents"))
-        .localCheckpoint()
-      Versions.commit(t0, tRoot) // v0
-      val batch1 = t0.filter(col("k") % 7 === 0)
-        .select(col("k"), col("seg"), (col("cents") + 100L).as("cents"))
-        .unionByName(t0.filter(col("k") % 11 === 0)
-          .select((col("k") + 1000000L).as("k"), col("seg"), col("cents")))
-      Versions.commitUpsert(batch1, tRoot, "k", autoCompactAt = 0) // v1
-      // the vector names an ABSENT key too — it must stay silent
-      val delKeys = Versions.read(s, tRoot, 1).filter(col("k") % 10 === 3)
-        .select("k").unionByName(s.range(1).select(lit(-999L).as("k")))
-      Versions.commitDelete(delKeys, tRoot, "k", autoCompactAt = 0) // v2
-      Versions.compactDeletes(s, tRoot) // v3: content-preserving
-      val rep4 = Versions.read(s, tRoot, 3).filter(col("k") % 13 === 0)
-        .select(col("k"), col("seg"), (col("cents") + 7L).as("cents"),
-          lit("gold").as("tier"))
-      Versions.commitUpsert(rep4, tRoot, "k", evolveSchema = true,
-        autoCompactAt = 0) // v4
-      val feed = ChangeFeed.changesBetween(s, tRoot).localCheckpoint()
-      val ct = col(ChangeFeed.ChangeType)
-      val cv = col(ChangeFeed.CommitVersion)
-      // per-step exactness: prev ⊎ inserts ∖ deletes = next, every
-      // step — telescoped to `prev ⊎ ins ≡ next ⊎ del` (identical for
-      // any correct feed, stricter on a phantom delete) and ALL five
-      // steps batched into ONE job ([[Checks.allMultisetEqual]]; this
-      // ran 2 shuffling actions per version before r14)
-      def evolved(v: Int) = Versions.readEvolved(s, tRoot, v)
-      // the feed DRIVES the retraction-aware MV refresh end-to-end
-      val mv = MatView(basePath = s"$tRoot/unused", keyCols = Seq("seg"),
-        countCol = Some("n"), sumCols = Map("cents" -> "cents_sum"),
-        nonNullCols = Set("cents"),
-        minCols = Map("cents" -> "cents_min"),
-        maxCols = Map("cents" -> "cents_max"),
-        viewRoot = Some(vRoot))
-      def viewOf(df: org.apache.spark.sql.DataFrame) =
-        df.groupBy("seg").agg(count(lit(1)).as("n"),
-          sum("cents").as("cents_sum"), min("cents").as("cents_min"),
-          max("cents").as("cents_max"))
-      // the four remaining pieces are INDEPENDENT of each other — three
-      // pure-read gates over the checkpointed feed + immutable tRoot
-      // versions, and the vRoot refresh protocol (its commits touch
-      // vRoot alone) — so they run CONCURRENTLY (guide §2.6): the
-      // refresh loop's driver-side commit work overlaps the gate jobs.
-      var got: org.apache.spark.sql.DataFrame = null
-      var silences: org.apache.spark.sql.Row = null
-      val gates = Checks.inParallel(Seq(
+    withScratch("graft_cdf_tq") { tRoot =>
+      withScratch("graft_cdf_vq") { vRoot =>
+        import graft.lake.{ChangeFeed, Versions}
+        import graft.plans.{MatView, ViewRewrite}
+        val t0 = table(s, d, "customer").select(
+          col("c_custkey").cast("long").as("k"),
+          col("c_mktsegment").as("seg"),
+          round(col("c_acctbal") * 100, 0).cast("long").as("cents"))
+          .localCheckpoint()
+        Versions.commit(t0, tRoot) // v0
+        val batch1 = t0.filter(col("k") % 7 === 0)
+          .select(col("k"), col("seg"), (col("cents") + 100L).as("cents"))
+          .unionByName(t0.filter(col("k") % 11 === 0)
+            .select((col("k") + 1000000L).as("k"), col("seg"), col("cents")))
+        Versions.commitUpsert(batch1, tRoot, "k", autoCompactAt = 0) // v1
+        // the vector names an ABSENT key too — it must stay silent
+        val delKeys = Versions.read(s, tRoot, 1).filter(col("k") % 10 === 3)
+          .select("k").unionByName(s.range(1).select(lit(-999L).as("k")))
+        Versions.commitDelete(delKeys, tRoot, "k", autoCompactAt = 0) // v2
+        Versions.compactDeletes(s, tRoot) // v3: content-preserving
+        val rep4 = Versions.read(s, tRoot, 3).filter(col("k") % 13 === 0)
+          .select(col("k"), col("seg"), (col("cents") + 7L).as("cents"),
+            lit("gold").as("tier"))
+        Versions.commitUpsert(rep4, tRoot, "k", evolveSchema = true,
+          autoCompactAt = 0) // v4
+        val feed = ChangeFeed.changesBetween(s, tRoot).localCheckpoint()
+        val ct = col(ChangeFeed.ChangeType)
+        val cv = col(ChangeFeed.CommitVersion)
         // per-step exactness: prev ⊎ inserts ∖ deletes = next, every
         // step — telescoped to `prev ⊎ ins ≡ next ⊎ del` (identical for
-        // any correct feed, stricter on a phantom delete), ALL five
-        // steps batched into ONE job ([[Checks.allMultisetEqual]])
-        () => Checks.allMultisetEqual((1 to 4).map { v =>
-          val ins = feed.filter(cv === v && ct === "insert")
-            .select("k", "seg", "cents", "tier")
-          val del = feed.filter(cv === v && ct === "delete")
-            .select("k", "seg", "cents", "tier")
-          (evolved(v - 1).unionByName(ins), evolved(v).unionByName(del))
-        } :+ {
-          (feed.filter(cv === 0).select("k", "seg", "cents", "tier"),
-            evolved(0))
-        }),
-        // whole-window telescoping, same telescoped single-job form
-        () => {
-          val (insAll, delAll) = ChangeFeed.splitFeed(feed)
-          Checks.multisetEqual(
-            insAll.get, evolved(4).unionByName(delAll.get))
-        },
-        // three silence probes over the checkpointed feed in ONE
-        // aggregation job (each was its own filter+isEmpty action)
-        () => {
-          silences = feed.agg(
-            max(col("k") === -999L).as("absent"),
-            max(cv === 3).as("maint"),
-            max(cv < 4 && col("tier").isNotNull).as("preEvo")).collect()(0)
-          true
-        },
-        // the vRoot refresh protocol: sequential WITHIN this thunk
-        // (commit order is the feature), independent of the gates
-        () => {
-          Versions.commit(viewOf(Versions.read(s, tRoot, 0)), vRoot)
-          // which (version, side) pairs are present, in ONE job — the
-          // loop probed the feed with 2 isEmpty actions per version
-          // before r14
-          val present = feed.groupBy(cv, ct).count().collect()
-            .map(r => (r.getInt(0), r.getString(1))).toSet
-          val payload = Seq("k", "seg", "cents", "tier")
-          (1 to 4).foreach { v =>
-            def sideOf(tpe: String) =
-              if (!present((v, tpe))) None
-              else Some(feed.filter(cv === v && ct === tpe)
-                .select(payload.map(col): _*))
-            val (ins, del) = (sideOf("insert"), sideOf("delete"))
-            if (ins.isDefined || del.isDefined)
-              ViewRewrite.refresh(s, mv, ins, del,
-                base = Some(Versions.read(s, tRoot, v)))
-          }
-          got = Versions.read(s, vRoot).localCheckpoint()
-          Checks.multisetEqual(got, viewOf(evolved(4)))
-        }))
-      val stepsMatch = gates(0)
-      val telescopes = gates(1)
-      val viewMatches = gates(3)
-      val stepRows = feed.groupBy(
-          concat(lit("v"), cv, lit(":"), ct).as("tag"))
-        .agg(count(lit(1)).as("n"), sum("cents").as("cents_sum"))
-      val segRows = got.select(concat(lit("seg:"), col("seg")).as("tag"),
-        col("n"), col("cents_sum"))
-      import s.implicits._
-      val chks = Seq(
-        ("chk:absent_key_silent", silences.getBoolean(0) == false),
-        ("chk:compaction_silent", silences.getBoolean(1) == false),
-        ("chk:pre_evolution_null", silences.getBoolean(2) == false),
-        ("chk:steps_match_diffs", stepsMatch),
-        ("chk:telescopes", telescopes),
-        ("chk:view_matches_recompute", viewMatches)
-      ).toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("cents_sum"))
-      Q.sealResult(stepRows.unionByName(segRows).unionByName(chks)
-        .orderBy("tag"), t0, feed, got)
-    } finally {
-      graft.io.Sources.removeScratchDir(tRoot)
-      graft.io.Sources.removeScratchDir(vRoot)
+        // any correct feed, stricter on a phantom delete) and ALL five
+        // steps batched into ONE job ([[Checks.allMultisetEqual]]; this
+        // ran 2 shuffling actions per version before r14)
+        def evolved(v: Int) = Versions.readEvolved(s, tRoot, v)
+        // the feed DRIVES the retraction-aware MV refresh end-to-end
+        val mv = MatView(basePath = s"$tRoot/unused", keyCols = Seq("seg"),
+          countCol = Some("n"), sumCols = Map("cents" -> "cents_sum"),
+          nonNullCols = Set("cents"),
+          minCols = Map("cents" -> "cents_min"),
+          maxCols = Map("cents" -> "cents_max"),
+          viewRoot = Some(vRoot))
+        def viewOf(df: org.apache.spark.sql.DataFrame) =
+          df.groupBy("seg").agg(count(lit(1)).as("n"),
+            sum("cents").as("cents_sum"), min("cents").as("cents_min"),
+            max("cents").as("cents_max"))
+        // the four remaining pieces are INDEPENDENT of each other — three
+        // pure-read gates over the checkpointed feed + immutable tRoot
+        // versions, and the vRoot refresh protocol (its commits touch
+        // vRoot alone) — so they run CONCURRENTLY (guide §2.6): the
+        // refresh loop's driver-side commit work overlaps the gate jobs.
+        var got: org.apache.spark.sql.DataFrame = null
+        var silences: org.apache.spark.sql.Row = null
+        val gates = Checks.inParallel(Seq(
+          // per-step exactness: prev ⊎ inserts ∖ deletes = next, every
+          // step — telescoped to `prev ⊎ ins ≡ next ⊎ del` (identical for
+          // any correct feed, stricter on a phantom delete), ALL five
+          // steps batched into ONE job ([[Checks.allMultisetEqual]])
+          () => Checks.allMultisetEqual((1 to 4).map { v =>
+            val ins = feed.filter(cv === v && ct === "insert")
+              .select("k", "seg", "cents", "tier")
+            val del = feed.filter(cv === v && ct === "delete")
+              .select("k", "seg", "cents", "tier")
+            (evolved(v - 1).unionByName(ins), evolved(v).unionByName(del))
+          } :+ {
+            (feed.filter(cv === 0).select("k", "seg", "cents", "tier"),
+              evolved(0))
+          }),
+          // whole-window telescoping, same telescoped single-job form
+          () => {
+            val (insAll, delAll) = ChangeFeed.splitFeed(feed)
+            Checks.multisetEqual(
+              insAll.get, evolved(4).unionByName(delAll.get))
+          },
+          // three silence probes over the checkpointed feed in ONE
+          // aggregation job (each was its own filter+isEmpty action)
+          () => {
+            silences = feed.agg(
+              max(col("k") === -999L).as("absent"),
+              max(cv === 3).as("maint"),
+              max(cv < 4 && col("tier").isNotNull).as("preEvo")).collect()(0)
+            true
+          },
+          // the vRoot refresh protocol: sequential WITHIN this thunk
+          // (commit order is the feature), independent of the gates
+          () => {
+            Versions.commit(viewOf(Versions.read(s, tRoot, 0)), vRoot)
+            // which (version, side) pairs are present, in ONE job — the
+            // loop probed the feed with 2 isEmpty actions per version
+            // before r14
+            val present = feed.groupBy(cv, ct).count().collect()
+              .map(r => (r.getInt(0), r.getString(1))).toSet
+            val payload = Seq("k", "seg", "cents", "tier")
+            (1 to 4).foreach { v =>
+              def sideOf(tpe: String) =
+                if (!present((v, tpe))) None
+                else Some(feed.filter(cv === v && ct === tpe)
+                  .select(payload.map(col): _*))
+              val (ins, del) = (sideOf("insert"), sideOf("delete"))
+              if (ins.isDefined || del.isDefined)
+                ViewRewrite.refresh(s, mv, ins, del,
+                  base = Some(Versions.read(s, tRoot, v)))
+            }
+            got = Versions.read(s, vRoot).localCheckpoint()
+            Checks.multisetEqual(got, viewOf(evolved(4)))
+          }))
+        val stepsMatch = gates(0)
+        val telescopes = gates(1)
+        val viewMatches = gates(3)
+        val stepRows = feed.groupBy(
+            concat(lit("v"), cv, lit(":"), ct).as("tag"))
+          .agg(count(lit(1)).as("n"), sum("cents").as("cents_sum"))
+        val segRows = got.select(concat(lit("seg:"), col("seg")).as("tag"),
+          col("n"), col("cents_sum"))
+        Q.sealReport(stepRows.unionByName(segRows), Seq(
+          ("chk:absent_key_silent", silences.getBoolean(0) == false),
+          ("chk:compaction_silent", silences.getBoolean(1) == false),
+          ("chk:pre_evolution_null", silences.getBoolean(2) == false),
+          ("chk:steps_match_diffs", stepsMatch),
+          ("chk:telescopes", telescopes),
+          ("chk:view_matches_recompute", viewMatches)
+        ), t0, feed, got)
+      }
     }
   }
 
@@ -3942,8 +3798,7 @@ object LakeQueries {
                       UNION ALL SELECT 'vw:' || et, n, id_sum, id_max FROM v
                       UNION ALL SELECT * FROM chk)
        ORDER BY tag""") { (s, d) =>
-    val root = graft.io.Sources.scratchDir("graft_cat_feed_q")
-    try {
+    withScratch("graft_cat_feed_q") { root =>
       import graft.lake.{Catalog, ChangeFeed}
       graft.streaming.StreamingLake
         .runViewIndexCatalog(s, d, root, nFiles = 5, compactAt = 3)
@@ -4054,19 +3909,15 @@ object LakeQueries {
         .unionByName(memberAt("view", cur)
           .select(concat(lit("vw:"), col("event_type")).as("tag"),
             col("n"), col("id_sum"), col("id_max")))
-      import s.implicits._
-      val chks = Seq(
+      Q.sealReport(rows, Seq(
         ("chk:compaction_steps_silent", compactionSilent),
         ("chk:replica_converges", replicaConverges),
         ("chk:steps_apply_exactly", stepsApply),
         ("chk:telescopes", telescopes),
         ("chk:untouched_steps_empty", untouchedEmpty),
         ("chk:view_diffs_apply", viewDiffsApply)
-      ).toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("id_sum"), lit(0L).as("id_max"))
-      Q.sealResult(rows.unionByName(chks).orderBy("tag"), ixFeed, vwFeed)
-    } finally graft.io.Sources.removeScratchDir(root)
+      ), ixFeed, vwFeed)
+    }
   }
 
   val all: Seq[Q] = Seq(q93JsonlRoundtrip, q94Scd2, q95BigramSurprisal,

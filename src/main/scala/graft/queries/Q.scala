@@ -1,6 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.{BooleanType, NumericType, StringType, StructField,
+  StructType}
 
 /**
  * One registered engine query: a Spark plan builder plus (when
@@ -53,4 +56,39 @@ object Q {
     }
     r
   }
+
+  /** The lifecycle report every lake-protocol, ANN-maintenance and CDC
+    * query returns: its signature `rows` (keyed by a string `tag`,
+    * counted in a long `n`) plus one row per gate, whose `tag` is the
+    * gate's name, whose `n` is 1 when the gate held and 0 when it
+    * failed, and whose every other column is a zero of that column's
+    * own type. The rows are ordered by `tag` and sealed
+    * ([[sealResult]], which unpersists `intermediates`). The DuckDB
+    * oracles check a gate only through this encoding. */
+  def sealReport(rows: DataFrame, gates: Seq[(String, Boolean)],
+                 intermediates: DataFrame*): DataFrame = {
+    require(rows.columns.contains("tag") && rows.columns.contains("n"),
+      s"sealReport: rows need tag and n columns, got ${rows.columns.mkString(", ")}")
+    val spark = rows.sparkSession
+    import spark.implicits._
+    val verdicts = gates.map { case (tag, held) => (tag, if (held) 1L else 0L) }
+      .toDF("tag", "n")
+    val gateRows = verdicts.select(rows.schema.map { f =>
+      if (f.name == "tag" || f.name == "n") col(f.name)
+      else {
+        require(f.dataType.isInstanceOf[NumericType],
+          s"sealReport: measure ${f.name} is ${f.dataType.simpleString}, not numeric")
+        lit(0).cast(f.dataType).as(f.name)
+      }
+    }: _*)
+    sealResult(rows.unionByName(gateRows).orderBy("tag"), intermediates: _*)
+  }
+
+  /** A report of gates alone: one `(chk, ok)` row per gate, ordered by
+    * `chk`, built on the driver. */
+  def gateReport(spark: SparkSession, gates: (String, Boolean)*): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(gates.sortBy(_._1).map { case (chk, ok) => Row(chk, ok) }: _*),
+      StructType(Seq(StructField("chk", StringType),
+        StructField("ok", BooleanType, nullable = false))))
 }

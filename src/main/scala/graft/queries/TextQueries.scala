@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.io.Sources.table
+import graft.io.Sources.{table, withScratch}
 import graft.dedup.Dedup
 import graft.sim.Similarity
 import graft.text.TextAnalysis
@@ -1308,97 +1308,91 @@ object TextQueries {
     import graft.sim.{Ivf, Similarity}
     val emb = table(s, d, "embeddings")
       .filter(col("embedding").isNotNull).localCheckpoint()
-    val idx = graft.io.Sources.scratchDir("graft_seq_idx")
-    val idx2 = graft.io.Sources.scratchDir("graft_seq_idx2")
-    try {
-      val seq = Some("seq")
-      val v0 = emb.select("vec_id", "embedding")
-        .filter(pmod(col("vec_id"), lit(5)) =!= 4)
-        .withColumn("seq", lit(0L))
-      // the CDC batch at corpus seq 1
-      val del = v0.filter(pmod(col("vec_id"), lit(7)) === 0)
-        .select(col("vec_id"), lit(1L).as("seq"))
-      val upd = v0.filter(pmod(col("vec_id"), lit(7)) =!= 0 &&
-          pmod(col("vec_id"), lit(11)) === 0)
-        .select(col("vec_id"), reverse(col("embedding")).as("embedding"),
-          lit(1L).as("seq"))
-      val ins = emb.select("vec_id", "embedding")
-        .filter(pmod(col("vec_id"), lit(5)) === 4)
-        .withColumn("seq", lit(1L))
-      val tombIds = del.unionByName(upd.select("vec_id", "seq"))
-      val readds = upd.unionByName(ins)
-      Ivf.persistIndex(v0, idx, nClusters = 16, seqCol = seq)
-      def centroidFiles(p: String) = Option(
-        new java.io.File(p, "centroids").listFiles()).toSeq.flatten
-        .map(f => (f.getName, f.length)).toSet
-      val centroidsBefore = centroidFiles(idx)
-      // ONE pass, ADVERSE order: re-adds FIRST, tombstones after —
-      // unsequenced tombstones would kill every updated id here
-      Ivf.appendToIndex(readds, idx, seqCol = seq)
-      Ivf.deleteFromIndex(tombIds, idx, seqCol = seq)
-      // a stale replay (seq 0) of a deleted id, arriving AFTER its
-      // tombstone: sequence beats arrival time, it must stay dead
-      val stale = v0.filter(pmod(col("vec_id"), lit(7)) === 0)
-      Ivf.appendToIndex(stale, idx, seqCol = seq)
-      // the second index applies the SAME batch in the opposite order
-      Ivf.persistIndex(v0, idx2, nClusters = 16, seqCol = seq)
-      Ivf.deleteFromIndex(tombIds, idx2, seqCol = seq)
-      Ivf.appendToIndex(readds, idx2, seqCol = seq)
-      // gates
-      val v1r = v0.filter(pmod(col("vec_id"), lit(7)) =!= 0)
-        .select(col("vec_id"),
-          when(pmod(col("vec_id"), lit(11)) === 0,
-            reverse(col("embedding"))).otherwise(col("embedding"))
-            .as("embedding"))
-        .unionByName(emb.select("vec_id", "embedding")
-          .filter(pmod(col("vec_id"), lit(5)) === 4))
-        .localCheckpoint()
-      val live = Ivf.liveAssigned(s, idx).select("vec_id").localCheckpoint()
-      val live2 = Ivf.liveAssigned(s, idx2).select("vec_id")
-      val orderFree = Checks.multisetEqual(live, live2)
-      val queries = v1r.filter(col("vec_id") < 40)
-      val got = Ivf.probeIndex(queries, idx, k = 10, nProbe = 8)
-        .select("qid", "nid")
-      val truth = Similarity.bruteForceTopK(queries, v1r, k = 10)
-        .select("qid", "nid")
-      // all seven gate counts in ONE tagged job (was 7 actions: the
-      // two liveEq anti-join probes, tombstone/count pair, stale-readd
-      // probe, and the recall hit/truth pair)
-      val c = Checks.counts(Seq(
-        live.join(v1r, Seq("vec_id"), "left_anti"),
-        v1r.select("vec_id").join(live, Seq("vec_id"), "left_anti"),
-        s.read.parquet(s"$idx/tombstones"),
-        tombIds,
-        live.join(stale.select("vec_id"), Seq("vec_id"), "left_semi"),
-        got.join(truth, Seq("qid", "nid"), "left_semi"),
-        truth))
-      val liveEq = c(0) == 0 && c(1) == 0
-      val onePass = c(2) == c(3) // still unfolded: no compact
-      val staleDead = c(4) == 0
-      val recallOk = c(5).toDouble / c(6) >= 0.6
-      val rows = del.select(lit("act:deleted").as("tag"), col("vec_id"))
-        .groupBy("tag").agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum"))
-        .unionByName(ins.groupBy(lit("act:inserted").as("tag"))
-          .agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum")))
-        .unionByName(upd.groupBy(lit("act:updated").as("tag"))
-          .agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum")))
-        .unionByName(v1r.groupBy(lit("live:index").as("tag"))
-          .agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum")))
-      import s.implicits._
-      val chks = Seq(
-        ("chk:live_set_equals_v1", liveEq),
-        ("chk:no_retrain", centroidFiles(idx) == centroidsBefore),
-        ("chk:one_pass_no_compact", onePass),
-        ("chk:order_free", orderFree),
-        ("chk:recall_floor", recallOk),
-        ("chk:stale_readd_dead", staleDead)
-      ).toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("id_sum"))
-      Q.sealResult(rows.unionByName(chks).orderBy("tag"), v1r, live, emb)
-    } finally {
-      graft.io.Sources.removeScratchDir(idx)
-      graft.io.Sources.removeScratchDir(idx2)
+    withScratch("graft_seq_idx") { idx =>
+      withScratch("graft_seq_idx2") { idx2 =>
+        val seq = Some("seq")
+        val v0 = emb.select("vec_id", "embedding")
+          .filter(pmod(col("vec_id"), lit(5)) =!= 4)
+          .withColumn("seq", lit(0L))
+        // the CDC batch at corpus seq 1
+        val del = v0.filter(pmod(col("vec_id"), lit(7)) === 0)
+          .select(col("vec_id"), lit(1L).as("seq"))
+        val upd = v0.filter(pmod(col("vec_id"), lit(7)) =!= 0 &&
+            pmod(col("vec_id"), lit(11)) === 0)
+          .select(col("vec_id"), reverse(col("embedding")).as("embedding"),
+            lit(1L).as("seq"))
+        val ins = emb.select("vec_id", "embedding")
+          .filter(pmod(col("vec_id"), lit(5)) === 4)
+          .withColumn("seq", lit(1L))
+        val tombIds = del.unionByName(upd.select("vec_id", "seq"))
+        val readds = upd.unionByName(ins)
+        Ivf.persistIndex(v0, idx, nClusters = 16, seqCol = seq)
+        def centroidFiles(p: String) = Option(
+          new java.io.File(p, "centroids").listFiles()).toSeq.flatten
+          .map(f => (f.getName, f.length)).toSet
+        val centroidsBefore = centroidFiles(idx)
+        // ONE pass, ADVERSE order: re-adds FIRST, tombstones after —
+        // unsequenced tombstones would kill every updated id here
+        Ivf.appendToIndex(readds, idx, seqCol = seq)
+        Ivf.deleteFromIndex(tombIds, idx, seqCol = seq)
+        // a stale replay (seq 0) of a deleted id, arriving AFTER its
+        // tombstone: sequence beats arrival time, it must stay dead
+        val stale = v0.filter(pmod(col("vec_id"), lit(7)) === 0)
+        Ivf.appendToIndex(stale, idx, seqCol = seq)
+        // the second index applies the SAME batch in the opposite order
+        Ivf.persistIndex(v0, idx2, nClusters = 16, seqCol = seq)
+        Ivf.deleteFromIndex(tombIds, idx2, seqCol = seq)
+        Ivf.appendToIndex(readds, idx2, seqCol = seq)
+        // gates
+        val v1r = v0.filter(pmod(col("vec_id"), lit(7)) =!= 0)
+          .select(col("vec_id"),
+            when(pmod(col("vec_id"), lit(11)) === 0,
+              reverse(col("embedding"))).otherwise(col("embedding"))
+              .as("embedding"))
+          .unionByName(emb.select("vec_id", "embedding")
+            .filter(pmod(col("vec_id"), lit(5)) === 4))
+          .localCheckpoint()
+        val live = Ivf.liveAssigned(s, idx).select("vec_id").localCheckpoint()
+        val live2 = Ivf.liveAssigned(s, idx2).select("vec_id")
+        val orderFree = Checks.multisetEqual(live, live2)
+        val queries = v1r.filter(col("vec_id") < 40)
+        val got = Ivf.probeIndex(queries, idx, k = 10, nProbe = 8)
+          .select("qid", "nid")
+        val truth = Similarity.bruteForceTopK(queries, v1r, k = 10)
+          .select("qid", "nid")
+        // all seven gate counts in ONE tagged job (was 7 actions: the
+        // two liveEq anti-join probes, tombstone/count pair, stale-readd
+        // probe, and the recall hit/truth pair)
+        val c = Checks.counts(Seq(
+          live.join(v1r, Seq("vec_id"), "left_anti"),
+          v1r.select("vec_id").join(live, Seq("vec_id"), "left_anti"),
+          s.read.parquet(s"$idx/tombstones"),
+          tombIds,
+          live.join(stale.select("vec_id"), Seq("vec_id"), "left_semi"),
+          got.join(truth, Seq("qid", "nid"), "left_semi"),
+          truth))
+        val liveEq = c(0) == 0 && c(1) == 0
+        val onePass = c(2) == c(3) // still unfolded: no compact
+        val staleDead = c(4) == 0
+        val recallOk = c(5).toDouble / c(6) >= 0.6
+        val rows = del.select(lit("act:deleted").as("tag"), col("vec_id"))
+          .groupBy("tag").agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum"))
+          .unionByName(ins.groupBy(lit("act:inserted").as("tag"))
+            .agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum")))
+          .unionByName(upd.groupBy(lit("act:updated").as("tag"))
+            .agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum")))
+          .unionByName(v1r.groupBy(lit("live:index").as("tag"))
+            .agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum")))
+        val gates = Seq(
+          ("chk:live_set_equals_v1", liveEq),
+          ("chk:no_retrain", centroidFiles(idx) == centroidsBefore),
+          ("chk:one_pass_no_compact", onePass),
+          ("chk:order_free", orderFree),
+          ("chk:recall_floor", recallOk),
+          ("chk:stale_readd_dead", staleDead)
+        )
+        Q.sealReport(rows, gates, v1r, live, emb)
+      }
     }
   }
 
@@ -1452,10 +1446,8 @@ object TextQueries {
     // a 1-cell probe can hold fewer than k candidates — completeness
     // is required of the WIDEST probe only; narrower ones may undershoot
     val rowsOk = sweep.last._3 == nQ * k && sweep.forall(_._3 <= nQ * k)
-    import s.implicits._
-    Seq(("monotone_recall", monotone), ("recall8_floor", floor8),
+    Q.gateReport(s, ("monotone_recall", monotone), ("recall8_floor", floor8),
       ("rows_complete", rowsOk))
-      .toDF("chk", "ok").orderBy("chk")
   }
 
   /** IVF-PQ composed ANN ([[graft.sim.IvfPq]] — the production
@@ -1545,10 +1537,8 @@ object TextQueries {
     val monotone = sweep.sliding(2).forall(w => w(1)._2 >= w(0)._2)
     val floor32 = sweep.last._2.toDouble / (nQ * k) >= 0.60
     val rowsOk = sweep.forall(_._3 == nQ * k)
-    import s.implicits._
-    Seq(("monotone_recall", monotone), ("recall32_floor", floor32),
+    Q.gateReport(s, ("monotone_recall", monotone), ("recall32_floor", floor32),
       ("rows_complete", rowsOk))
-      .toDF("chk", "ok").orderBy("chk")
   }
 
   /** BPE APPLY — the inference path of q262's training: the 6 learned
@@ -1637,8 +1627,7 @@ object TextQueries {
       .filter(col("embedding").isNotNull).localCheckpoint()
     val base = emb.filter(pmod(col("vec_id"), lit(10)) =!= 0)
     val delta = emb.filter(pmod(col("vec_id"), lit(10)) === 0)
-    val dir = graft.io.Sources.scratchDir("graft_ivf_append")
-    try {
+    withScratch("graft_ivf_append") { dir =>
       Ivf.persistIndex(base, dir, nClusters = 64)
       val q = emb.filter(col("vec_id") < 50)
       val k = 5
@@ -1668,15 +1657,14 @@ object TextQueries {
       val (nTruth, hitsBase, hitsMerged) = (c(0), c(1), c(2))
       val (nAssigned, nDistinct, nExpected) = (c(3), c(4), c(5) + c(6))
       val deltaSeen = c(7)
-      import s.implicits._
-      Seq(
+      Q.gateReport(s,
         ("assignments_roundtrip", roundtrip),
         ("delta_visible", deltaSeen > 0),
         ("merged_complete", nAssigned == nExpected && nDistinct == nExpected),
         ("recall_floor", hitsMerged * 4 >= nTruth),
         ("recall_monotone", hitsMerged >= hitsBase)
-      ).toDF("chk", "ok").orderBy("chk")
-    } finally graft.io.Sources.removeScratchDir(dir)
+      )
+    }
   }
 
   /** IVF-PQ composed-index APPEND ([[graft.sim.IvfPq.appendToIndex]] —
@@ -1704,8 +1692,7 @@ object TextQueries {
       .filter(col("embedding").isNotNull).localCheckpoint()
     val base = emb.filter(pmod(col("vec_id"), lit(10)) =!= 0)
     val delta = emb.filter(pmod(col("vec_id"), lit(10)) === 0)
-    val dir = graft.io.Sources.scratchDir("graft_ivfpq_append")
-    try {
+    withScratch("graft_ivfpq_append") { dir =>
       IvfPq.persistIndex(base, dir, dim = 64, nClusters = 64, m = 16, ksub = 16)
       val q = emb.filter(col("vec_id") < 50)
       val k = 5
@@ -1750,15 +1737,14 @@ object TextQueries {
         .select((col("cl1") === col("cl0") &&
           col("codes") === col("codes0")).as("eq"))
         .agg(coalesce(bool_and(col("eq")), lit(false))).collect()(0).getBoolean(0)
-      import s.implicits._
-      Seq(
+      Q.gateReport(s,
         ("codes_roundtrip", roundtrip),
         ("delta_visible", deltaSeen > 0),
         ("merged_complete", nAssigned == nExpected && nDistinct == nExpected),
         ("recall_floor", hitsMerged * 4 >= nTruth),
         ("recall_not_worse", hitsMerged + 2 >= hitsBase)
-      ).toDF("chk", "ok").orderBy("chk")
-    } finally graft.io.Sources.removeScratchDir(dir)
+      )
+    }
   }
 
   /** ANN index DELETE + COMPACTION ([[graft.sim.Ivf.deleteFromIndex]] /
@@ -1786,8 +1772,7 @@ object TextQueries {
     import graft.sim.Ivf
     val emb = table(s, d, "embeddings")
       .filter(col("embedding").isNotNull).localCheckpoint()
-    val dir = graft.io.Sources.scratchDir("graft_ivf_delete")
-    try {
+    withScratch("graft_ivf_delete") { dir =>
       Ivf.persistIndex(emb, dir, nClusters = 64)
       val q = emb.filter(col("vec_id") < 50)
       val k = 5
@@ -1813,8 +1798,7 @@ object TextQueries {
         pre.filter(pmod(col("nid"), lit(7)) === 3),
         mid.filter(pmod(col("nid"), lit(7)) === 3)))
       val (nTruth, hitsMid) = (c(0), c(1))
-      import s.implicits._
-      Seq(
+      Q.gateReport(s,
         ("compact_conserves",
           removed == nDel && after == before - nDel && before == c(2)),
         ("deleted_was_hit", c(3) > 0),
@@ -1823,8 +1807,8 @@ object TextQueries {
         ("recall_floor", hitsMid * 4 >= nTruth),
         ("tombstones_cleared",
           !new java.io.File(s"$dir/tombstones").isDirectory)
-      ).toDF("chk", "ok").orderBy("chk")
-    } finally graft.io.Sources.removeScratchDir(dir)
+      )
+    }
   }
 
   /** ANN index DRIFT MONITORING — the "when to retrain" signal that
@@ -1856,8 +1840,7 @@ object TextQueries {
       .filter(col("embedding").isNotNull).localCheckpoint()
     val base = emb.filter(pmod(col("vec_id"), lit(4)) =!= 0)
     val held = emb.filter(pmod(col("vec_id"), lit(4)) === 0)
-    val dir = graft.io.Sources.scratchDir("graft_ivf_drift")
-    try {
+    withScratch("graft_ivf_drift") { dir =>
       Ivf.persistIndex(base, dir, nClusters = 64)
       val centers = s.read.parquet(s"$dir/centroids")
         .orderBy("cluster").collect() // bounded: nClusters rows
@@ -1885,13 +1868,12 @@ object TextQueries {
         expr("transform(embedding, x -> x + 3.0d)").as("embedding"))
       val (l1Drift, nDrift) = l1Ppm(collapsed)
       val nHeld = held.count()
-      import s.implicits._
-      Seq(
+      Q.gateReport(s,
         ("assign_conserves", nIn == nHeld && nDrift == nHeld),
         ("drift_material", l1Drift > 200000L),
         ("drift_over_baseline", l1Drift > l1In)
-      ).toDF("chk", "ok").orderBy("chk")
-    } finally graft.io.Sources.removeScratchDir(dir)
+      )
+    }
   }
 
   /** DRIFT-TRIGGERED PARTIAL RETRAIN ([[graft.sim.Ivf.partialRetrain]])
@@ -1943,8 +1925,7 @@ object TextQueries {
         "transform(embedding, (x, i) -> x + 3.0d + " +
           "(case when i div 8 = pmod(vec_id div 8, 8) then 1.0d " +
           "else 0.0d end))").as("embedding"))
-    val dir = graft.io.Sources.scratchDir("graft_ivf_retrain")
-    try {
+    withScratch("graft_ivf_retrain") { dir =>
       Ivf.persistIndex(base, dir, nClusters = 64)
       Ivf.appendToIndex(drifted(heldA), dir) // the drift arrives
       // ---- monitor: route a fresh drifted batch, flag funneled cells
@@ -1998,16 +1979,15 @@ object TextQueries {
       val postMaxPpm = rPost.agg(max(expr(s"n_b * 1000000 div $nB")))
         .collect()(0).getLong(0)
       val hPost = entropyMb(rPost)
-      import s.implicits._
-      Seq(
+      Q.gateReport(s,
         ("conserves", post.count() == nAll),
         ("drift_flagged", flagged.nonEmpty),
         ("entropy_recovers", hPost - hPre >= 300L),
         ("routing_spread_improved", postMaxPpm < preMaxPpm),
         ("routing_spread_material", preMaxPpm - postMaxPpm > 100000L),
         ("untouched_stable", stable)
-      ).toDF("chk", "ok").orderBy("chk")
-    } finally graft.io.Sources.removeScratchDir(dir)
+      )
+    }
   }
 
   /** Perceptual-hash image near-dup ([[graft.multimodal.Multimodal
@@ -2114,87 +2094,80 @@ object TextQueries {
     import graft.sim.{Ivf, Similarity}
     val emb = table(s, d, "embeddings")
       .filter(col("embedding").isNotNull).localCheckpoint()
-    val root = graft.io.Sources.scratchDir("graft_cdc_corpus")
-    val idx = graft.io.Sources.scratchDir("graft_cdc_idx")
-    try {
-      val v0 = emb.select("vec_id", "embedding")
-        .filter(pmod(col("vec_id"), lit(5)) =!= 4)
-      Versions.commit(v0, root) // corpus v0
-      val v1 = v0.filter(pmod(col("vec_id"), lit(7)) =!= 0)
-        .select(col("vec_id"),
-          when(pmod(col("vec_id"), lit(11)) === 0,
-            reverse(col("embedding"))).otherwise(col("embedding"))
-            .as("embedding"))
-        .unionByName(emb.select("vec_id", "embedding")
-          .filter(pmod(col("vec_id"), lit(5)) === 4))
-      Versions.commit(v1, root) // corpus v1
-      Ivf.persistIndex(Versions.read(s, root, 0), idx, nClusters = 16)
-      def centroidFiles = Option(
-        new java.io.File(idx, "centroids").listFiles()).toSeq.flatten
-        .map(f => (f.getName, f.length)).toSet
-      val centroidsBefore = centroidFiles
-      // the change feed, derived from STORAGE alone (q328 shape, with
-      // the embedding array itself as the update detector)
-      val a = Versions.read(s, root, 0)
-        .select(col("vec_id").as("k"), col("embedding").as("oe"))
-      val b = Versions.read(s, root, 1)
-        .select(col("vec_id").as("k1"), col("embedding").as("ne"))
-      val cdf = a.join(b, col("k") === col("k1"), "full_outer")
-        .select(coalesce(col("k"), col("k1")).as("vec_id"),
-          when(col("k").isNull, "inserted")
-            .when(col("k1").isNull, "deleted")
-            .when(col("oe") =!= col("ne"), "updated")
-            .otherwise("unchanged").as("action"),
-          col("ne"))
-        .filter(col("action") =!= "unchanged").localCheckpoint()
-      // apply the feed: tombstone the dead ids (deleted AND updated —
-      // an update is delete-then-add), FOLD the tombstones so the
-      // re-added ids aren't killed by their own delete (the Lucene
-      // delete-then-add recipe; tombstones carry no sequence numbers,
-      // so the fold is one batched compaction per CDC batch, never per
-      // row), then route the new rows. No retrain anywhere.
-      Ivf.deleteFromIndex(cdf.filter(col("action").isin("deleted", "updated"))
-        .select("vec_id"), idx)
-      val tombs = s.read.parquet(s"$idx/tombstones").count()
-      Ivf.compactIndex(s, idx)
-      Ivf.appendToIndex(cdf.filter(col("action").isin("inserted", "updated"))
-        .select(col("vec_id"), col("ne").as("embedding")), idx)
-      // gates
-      val v1r = Versions.read(s, root, 1).localCheckpoint()
-      val live = Ivf.liveAssigned(s, idx).select("vec_id")
-      val queries = v1r.filter(col("vec_id") < 40)
-      val got = Ivf.probeIndex(queries, idx, k = 10, nProbe = 8)
-        .select("qid", "nid")
-      val truth = Similarity.bruteForceTopK(queries, v1r, k = 10)
-        .select("qid", "nid")
-      // all six gate counts in ONE tagged job (was 6 actions)
-      val c = Checks.counts(Seq(
-        live.join(v1r, Seq("vec_id"), "left_anti"),
-        v1r.select("vec_id").join(live, Seq("vec_id"), "left_anti"),
-        cdf.filter(col("action").isin("deleted", "updated")),
-        got.join(truth, Seq("qid", "nid"), "left_semi"),
-        truth))
-      val liveEq = c(0) == 0 && c(1) == 0
-      val nDelUpd = c(2)
-      val recallOk = c(3).toDouble / c(4) >= 0.6
-      val rows = cdf.groupBy(concat(lit("act:"), col("action")).as("tag"))
-        .agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum"))
-        .unionByName(v1r.agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum"))
-          .select(lit("live:index").as("tag"), col("n"), col("id_sum")))
-      import s.implicits._
-      val chks = Seq(
-        ("chk:live_set_equals_v1", liveEq),
-        ("chk:no_retrain", centroidFiles == centroidsBefore),
-        ("chk:recall_floor", recallOk),
-        ("chk:tombstones_bounded", tombs == nDelUpd)
-      ).toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("id_sum"))
-      Q.sealResult(rows.unionByName(chks).orderBy("tag"),
-        emb, cdf, v1r) // result outlives the removed files
-    } finally {
-      graft.io.Sources.removeScratchDir(idx)
-      graft.io.Sources.removeScratchDir(root)
+    withScratch("graft_cdc_corpus") { root =>
+      withScratch("graft_cdc_idx") { idx =>
+        val v0 = emb.select("vec_id", "embedding")
+          .filter(pmod(col("vec_id"), lit(5)) =!= 4)
+        Versions.commit(v0, root) // corpus v0
+        val v1 = v0.filter(pmod(col("vec_id"), lit(7)) =!= 0)
+          .select(col("vec_id"),
+            when(pmod(col("vec_id"), lit(11)) === 0,
+              reverse(col("embedding"))).otherwise(col("embedding"))
+              .as("embedding"))
+          .unionByName(emb.select("vec_id", "embedding")
+            .filter(pmod(col("vec_id"), lit(5)) === 4))
+        Versions.commit(v1, root) // corpus v1
+        Ivf.persistIndex(Versions.read(s, root, 0), idx, nClusters = 16)
+        def centroidFiles = Option(
+          new java.io.File(idx, "centroids").listFiles()).toSeq.flatten
+          .map(f => (f.getName, f.length)).toSet
+        val centroidsBefore = centroidFiles
+        // the change feed, derived from STORAGE alone (q328 shape, with
+        // the embedding array itself as the update detector)
+        val a = Versions.read(s, root, 0)
+          .select(col("vec_id").as("k"), col("embedding").as("oe"))
+        val b = Versions.read(s, root, 1)
+          .select(col("vec_id").as("k1"), col("embedding").as("ne"))
+        val cdf = a.join(b, col("k") === col("k1"), "full_outer")
+          .select(coalesce(col("k"), col("k1")).as("vec_id"),
+            when(col("k").isNull, "inserted")
+              .when(col("k1").isNull, "deleted")
+              .when(col("oe") =!= col("ne"), "updated")
+              .otherwise("unchanged").as("action"),
+            col("ne"))
+          .filter(col("action") =!= "unchanged").localCheckpoint()
+        // apply the feed: tombstone the dead ids (deleted AND updated —
+        // an update is delete-then-add), FOLD the tombstones so the
+        // re-added ids aren't killed by their own delete (the Lucene
+        // delete-then-add recipe; tombstones carry no sequence numbers,
+        // so the fold is one batched compaction per CDC batch, never per
+        // row), then route the new rows. No retrain anywhere.
+        Ivf.deleteFromIndex(cdf.filter(col("action").isin("deleted", "updated"))
+          .select("vec_id"), idx)
+        val tombs = s.read.parquet(s"$idx/tombstones").count()
+        Ivf.compactIndex(s, idx)
+        Ivf.appendToIndex(cdf.filter(col("action").isin("inserted", "updated"))
+          .select(col("vec_id"), col("ne").as("embedding")), idx)
+        // gates
+        val v1r = Versions.read(s, root, 1).localCheckpoint()
+        val live = Ivf.liveAssigned(s, idx).select("vec_id")
+        val queries = v1r.filter(col("vec_id") < 40)
+        val got = Ivf.probeIndex(queries, idx, k = 10, nProbe = 8)
+          .select("qid", "nid")
+        val truth = Similarity.bruteForceTopK(queries, v1r, k = 10)
+          .select("qid", "nid")
+        // all six gate counts in ONE tagged job (was 6 actions)
+        val c = Checks.counts(Seq(
+          live.join(v1r, Seq("vec_id"), "left_anti"),
+          v1r.select("vec_id").join(live, Seq("vec_id"), "left_anti"),
+          cdf.filter(col("action").isin("deleted", "updated")),
+          got.join(truth, Seq("qid", "nid"), "left_semi"),
+          truth))
+        val liveEq = c(0) == 0 && c(1) == 0
+        val nDelUpd = c(2)
+        val recallOk = c(3).toDouble / c(4) >= 0.6
+        val rows = cdf.groupBy(concat(lit("act:"), col("action")).as("tag"))
+          .agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum"))
+          .unionByName(v1r.agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum"))
+            .select(lit("live:index").as("tag"), col("n"), col("id_sum")))
+        val gates = Seq(
+          ("chk:live_set_equals_v1", liveEq),
+          ("chk:no_retrain", centroidFiles == centroidsBefore),
+          ("chk:recall_floor", recallOk),
+          ("chk:tombstones_bounded", tombs == nDelUpd)
+        )
+        Q.sealReport(rows, gates, emb, cdf, v1r)
+      }
     }
   }
 
@@ -2244,8 +2217,7 @@ object TextQueries {
     import graft.sim.{IvfPq, Ivf, Similarity}
     val emb = table(s, d, "embeddings")
       .filter(col("embedding").isNotNull).localCheckpoint()
-    val idx = graft.io.Sources.scratchDir("graft_seq_pq")
-    try {
+    withScratch("graft_seq_pq") { idx =>
       val seq = Some("seq")
       val v0 = emb.select("vec_id", "embedding")
         .filter(pmod(col("vec_id"), lit(5)) =!= 4)
@@ -2312,18 +2284,15 @@ object TextQueries {
           .agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum")))
         .unionByName(v1r.groupBy(lit("live:index").as("tag"))
           .agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum")))
-      import s.implicits._
-      val chks = Seq(
+      val gates = Seq(
         ("chk:live_set_equals_v1", liveEq),
         ("chk:no_refit", frozenFiles() == frozenBefore),
         ("chk:one_pass_no_compact", onePass),
         ("chk:recall_floor", recallOk),
         ("chk:stale_readd_dead", staleDead)
-      ).toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("id_sum"))
-      Q.sealResult(rows.unionByName(chks).orderBy("tag"), v1r, live, emb)
-    } finally graft.io.Sources.removeScratchDir(idx)
+      )
+      Q.sealReport(rows, gates, v1r, live, emb)
+    }
   }
 
   /** IVF-PQ MAINTENANCE PARITY ([[graft.sim.IvfPq.compactIndex]] +
@@ -2373,8 +2342,7 @@ object TextQueries {
     import graft.sim.{Ivf, IvfPq, Similarity}
     val emb = table(s, d, "embeddings")
       .filter(col("embedding").isNotNull).localCheckpoint()
-    val idx = graft.io.Sources.scratchDir("graft_pq_maintain")
-    try {
+    withScratch("graft_pq_maintain") { idx =>
       val seq = Some("seq")
       val v0 = emb.select("vec_id", "embedding")
         .filter(pmod(col("vec_id"), lit(5)) =!= 4)
@@ -2446,8 +2414,7 @@ object TextQueries {
         .agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum"))
         .unionByName(v2r.groupBy(lit("live:after_retrain_delete").as("tag"))
           .agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum")))
-      import s.implicits._
-      val chks = Seq(
+      val gates = Seq(
         ("chk:codebooks_frozen", codebooksFrozen),
         ("chk:compact_folds_exactly", compactExact),
         ("chk:probe_stable_over_compact", probeStable),
@@ -2455,11 +2422,8 @@ object TextQueries {
         ("chk:retrain_conserves_rows", retrainConserves),
         ("chk:seq_delete_after_retrain", seqDeleteWorks),
         ("chk:tombstones_dropped", tombstonesDropped)
-      ).toDF("tag", "ok")
-        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
-          lit(0L).as("id_sum"))
-      Q.sealResult(rows.unionByName(chks).orderBy("tag"),
-        emb, v1r, v2r, live, live2, wantProbe, probeAfter)
-    } finally graft.io.Sources.removeScratchDir(idx)
+      )
+      Q.sealReport(rows, gates, emb, v1r, v2r, live, live2, wantProbe, probeAfter)
+    }
   }
 }

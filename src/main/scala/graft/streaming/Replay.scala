@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
@@ -270,9 +270,10 @@ object Replay {
    * `delta` merges into the running target with `merge`, and the target
    * is localCheckpointed per batch so lineage stays one batch deep. The
    * final target is independent of batch boundaries exactly when
-   * `merge` is a monoid over `delta`'s outputs. One micro-batch returns
-   * `delta`'s frame and zero return `delta` of an empty staged batch,
-   * so `delta` and `merge` must return the same schema.
+   * `merge` is a monoid over `delta`'s outputs. Staging writes at least
+   * one parquet file even for an empty frame (schema only), so every
+   * fold runs at least one micro-batch; an empty frame folds to
+   * `delta` of its one empty batch.
    */
   private[graft] def fold(spark: SparkSession, prefix: String,
                           frame: DataFrame, nFiles: Int)(
@@ -283,8 +284,9 @@ object Replay {
       val d = delta(batch)
       target = (if (target == null) d else merge(target, d)).localCheckpoint()
     }))
-    if (target != null) target
-    else delta(spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], stagedSchema(frame)))
+    if (target == null) throw new IllegalStateException(
+      s"Replay.fold: staged returned 0 micro-batches for $prefix; " +
+        "staging always writes a file, so a fold runs at least one")
+    target
   }
 }

@@ -213,15 +213,14 @@ object StreamingDemand {
    * the window/watermark arithmetic is integer-exact.
    */
   def runLateDropToBatch(spark: SparkSession, dir: String): DataFrame = {
-    val src = graft.io.Sources.scratchDir("graft_late_src")
     val ev = graft.io.Sources.table(spark, dir, "events")
       .filter(col("ts").isNotNull && col("event_type").isNotNull)
       .select(col("event_id"), date_trunc("second", col("ts")).as("ts"),
         col("event_type"))
-    def wave(parity: Int): Unit =
-      ev.filter(pmod(col("event_id"), lit(2)) === parity)
-        .write.mode("append").parquet(src)
-    try {
+    graft.io.Sources.withScratch("graft_late_src") { src =>
+      def wave(parity: Int): Unit =
+        ev.filter(pmod(col("event_id"), lit(2)) === parity)
+          .write.mode("append").parquet(src)
       wave(1)
       // wave 1 runs to completion (watermark set) before the late wave lands
       Replay.memory(spark, dir, "append", arrivals = Seq(() => wave(0))) { child =>
@@ -235,7 +234,7 @@ object StreamingDemand {
           .select(unix_timestamp(col("window.start")).as("ws_sec"),
             col("event_type"), col("n"))
       }
-    } finally graft.io.Sources.removeScratchDir(src)
+    }
   }
 
   /**

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Job-count pins for the lake protocol's two metadata paths: a
   * committed version's schema comes off its parquet footer on the
   * driver (no schema-inference job), and [[graft.queries.Q.sealResult]]
-  * materializes a sorted, bounded result with one top-K job. */
+  * materializes a sorted, bounded result with one top-K job — also
+  * behind the lifecycle-report format ([[graft.queries.Q.sealReport]]). */
 class ProtocolJobsSpec extends AnyFunSuite with SparkSpec {
 
   import graft.io.Sources
@@ -59,6 +60,72 @@ class ProtocolJobsSpec extends AnyFunSuite with SparkSpec {
     assert(e.getMessage.contains(s"exceeds ${Q.sealBound} rows"))
     assert(Q.sealResult(spark.range(0L, Q.sealBound.toLong).toDF().orderBy("id"))
       .count() == Q.sealBound)
+  }
+
+  private val reportGates = Seq(("chk:held", true), ("chk:failed", false))
+
+  /** Signature rows over a parquet scan: a unique tag, a Long count, a
+    * Long sum and a Double mean per row. */
+  private def reportRows(dir: String) = {
+    spark.range(0, 40, 1, 4).write.mode("overwrite").parquet(s"$dir/t")
+    Sources.cachedParquet(spark, s"$dir/t")
+      .select(format_string("g:%02d", col("id")).as("tag"),
+        col("id").as("n"), (col("id") * 2).as("id_sum"),
+        (col("id") / 4.0).as("avg_id"))
+  }
+
+  test("sealReport: one job; a gate row is n = 1 or 0 with a zero of every other column's type") {
+    val dir = Sources.scratchDir("graft_jobs_report")
+    val (out, jobs) = try {
+      val rows = reportRows(dir)
+      JobCount(spark.sparkContext)(Q.sealReport(rows, reportGates))
+    } finally Sources.removeScratchDir(dir)
+    assert(jobs == 1, s"sealReport ran $jobs jobs")
+    assert(out.schema("id_sum").dataType == org.apache.spark.sql.types.LongType)
+    assert(out.schema("avg_id").dataType == org.apache.spark.sql.types.DoubleType)
+    val got = out.collect()
+    assert(got.length == 42)
+    assert(got.take(2).map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+      r.getDouble(3))).toSeq == Seq(("chk:failed", 0L, 0L, 0.0), ("chk:held", 1L, 0L, 0.0)))
+    assert(got.drop(2).map(_.getLong(1)).toSeq == (0L until 40L))
+    // a non-numeric measure has no zero: the report refuses it
+    val e = intercept[IllegalArgumentException](Q.sealReport(
+      spark.range(1).select(lit("t").as("tag"), col("id").as("n"),
+        lit("x").as("seg")), reportGates))
+    assert(e.getMessage.contains("seg is string, not numeric"), e.getMessage)
+  }
+
+  test("sealReport's schema equals the hand-built gate-row union's, nullability included") {
+    import spark.implicits._
+    val dir = Sources.scratchDir("graft_report_schema")
+    try {
+      val rows = reportRows(dir)
+      val handBuilt = rows.unionByName(reportGates.toDF("tag", "ok")
+        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
+          lit(0L).as("id_sum"), lit(0.0).as("avg_id")))
+        .orderBy("tag")
+      val report = Q.sealReport(rows, reportGates)
+      assert(report.schema == handBuilt.schema,
+        s"${report.schema.treeString} differs from ${handBuilt.schema.treeString}")
+      assert(report.collect().toSeq == handBuilt.collect().toSeq)
+      // non-nullable signature columns stay non-nullable
+      val strict = spark.range(0, 3).select(lit("r").as("tag"), col("id").as("n"),
+        col("id").as("id_sum"))
+      val strictHand = strict.unionByName(reportGates.toDF("tag", "ok")
+        .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
+          lit(0L).as("id_sum")))
+      assert(Q.sealReport(strict, reportGates).schema == strictHand.schema)
+    } finally Sources.removeScratchDir(dir)
+  }
+
+  test("gateReport: one (chk, ok) row per gate, ordered by chk, with no Spark job") {
+    val (out, jobs) = JobCount(spark.sparkContext)(
+      Q.gateReport(spark, ("b_second", false), ("a_first", true)))
+    assert(jobs == 0, s"gateReport ran $jobs jobs")
+    assert(out.schema.map(f => (f.name, f.dataType.simpleString, f.nullable)) ==
+      Seq(("chk", "string", true), ("ok", "boolean", false)))
+    assert(out.collect().map(r => (r.getString(0), r.getBoolean(1))).toSeq ==
+      Seq(("a_first", true), ("b_second", false)))
   }
 
   test("footer schema equals Spark's inference over a type matrix, nanosAsLong on and off") {

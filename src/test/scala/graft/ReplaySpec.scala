@@ -1,13 +1,14 @@
 package graft
 
+import org.apache.spark.graft.BatchCount
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.{Replay, StreamingOhlc, StreamingSketch, StreamingUpsert}
 
 /** The finite-replay drivers in [[graft.streaming.Replay]]: cleanup when
-  * a staged stream fails, and the schema of every monoid fold over an
-  * empty staged frame. */
+  * a staged stream fails, and the one micro-batch and the schema of
+  * every monoid fold over an empty staged frame. */
 class ReplaySpec extends AnyFunSuite with SparkSpec {
 
   private def stagesNamed(prefix: String): Seq[java.io.File] =
@@ -68,7 +69,9 @@ class ReplaySpec extends AnyFunSuite with SparkSpec {
         "bottom-k" -> (d => StreamingSketch.runBottomKToBatch(spark, d)))
       folds.foreach { case (name, run) =>
         val want = run(sf001).schema
-        val got = run(empty)
+        val (got, batches) = BatchCount(spark)(run(empty))
+        // staging writes a schema-only file, so the fold runs one batch
+        assert(batches == 1, s"$name ran $batches micro-batches over an empty stage")
         assert(got.isEmpty, s"$name folded rows out of an empty stage")
         assert(got.schema == want,
           s"$name: empty-stage schema\n${got.schema.treeString}" +

@@ -51,23 +51,43 @@ class Round10Spec extends AnyFunSuite with SparkSpec {
       s"listener buses grew $after1 -> $after3 across 2 more parent-session runs")
   }
 
+  /** `path: token` for every `.scala` file under `root` containing a
+    * token, and the number of files scanned. */
+  private def sourceHits(root: java.nio.file.Path,
+                         tokens: Seq[String]): (List[String], Int) = {
+    val sources = java.nio.file.Files.walk(root)
+    try {
+      import scala.jdk.CollectionConverters._
+      val files = sources.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      (files.flatMap { p =>
+        val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        tokens.filter(text.contains).map(t => s"${root.relativize(p)}: $t")
+      }, files.size)
+    } finally sources.close()
+  }
+
   test("only streaming/Replay.scala starts, drives or stages a stream under src/main") {
     // the finite-replay policy (sink naming, drain, stop, stage cleanup,
     // listener-bus sweep) lives in one driver; a runner that calls these
     // itself has forked it again
     val tokens = Seq(".writeStream", "processAllAvailable", "maxFilesPerTrigger")
     val root = java.nio.file.Paths.get("src/main/scala")
-    val sources = java.nio.file.Files.walk(root)
-    val offenders = try {
-      import scala.jdk.CollectionConverters._
-      sources.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { p =>
-        val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        tokens.filter(text.contains).map(t => s"${root.relativize(p)}: $t")
-      }.toList
-    } finally sources.close()
+    val (offenders, _) = sourceHits(root, tokens)
     assert(offenders.nonEmpty, s"no stream driver found under $root")
     assert(offenders.forall(_.startsWith("graft/streaming/Replay.scala:")),
       s"stream plumbing outside the Replay driver:\n${offenders.mkString("\n")}")
+  }
+
+  test("no query hand-builds a gate report or removes a scratch root itself") {
+    // the lifecycle-report format lives in Q.sealReport / Q.gateReport and
+    // the scratch-root lifecycle in Sources.withScratch
+    val tokens = Seq("""toDF("tag", "ok")""", """toDF("chk", "ok")""",
+      "removeScratchDir(")
+    val root = java.nio.file.Paths.get("src/main/scala/graft/queries")
+    val (offenders, scanned) = sourceHits(root, tokens)
+    assert(scanned > 10, s"only $scanned query files found under $root")
+    assert(offenders.isEmpty,
+      s"hand-built report or scratch cleanup in a query:\n${offenders.mkString("\n")}")
   }
 
   test("cached child sessions still isolate shuffle-partition conf from the parent") {

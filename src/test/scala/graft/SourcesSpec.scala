@@ -8,6 +8,35 @@ class SourcesSpec extends AnyFunSuite with SparkSpec {
 
   private def df = Seq((1, "a", 2.0)).toDF("Fecha Ingreso", "NOMBRE PACIENTE", "valor")
 
+  /** Shutdown hooks registered with the JVM right now. */
+  private def jvmShutdownHooks(): Int = {
+    val c = Class.forName("java.lang.ApplicationShutdownHooks")
+    val f = c.getDeclaredField("hooks")
+    f.setAccessible(true)
+    c.synchronized(f.get(null).asInstanceOf[java.util.Map[_, _]].size)
+  }
+
+  test("withScratch removes its root and its shutdown hook, on return and on throw") {
+    val baseline = jvmShutdownHooks()
+    var root = ""
+    val out = Sources.withScratch("graft_hook_ok") { r =>
+      root = r
+      assert(new java.io.File(r, "f").createNewFile())
+      42
+    }
+    assert(out == 42 && root.nonEmpty && !new java.io.File(root).exists())
+    assert(jvmShutdownHooks() == baseline, "withScratch left a shutdown hook behind")
+    val err = intercept[IllegalStateException] {
+      Sources.withScratch("graft_hook_throw") { r =>
+        root = r
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(err.getMessage == "body failed")
+    assert(!new java.io.File(root).exists(), s"$root survived a failed body")
+    assert(jvmShutdownHooks() == baseline, "a failed body left a shutdown hook behind")
+  }
+
   test("selectPresent: intersection + missing report (app.py:27-35)") {
     val (proj, missing) = Sources.selectPresent(df,
       Seq("Fecha Ingreso", "valor", "no_such_col"))

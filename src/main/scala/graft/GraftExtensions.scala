@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{DoubleDotProduct, LangId, LongWordExtraUnits, Md5LongArray, Md5PrefixLong, MinHashBands, PhraseCount, Shingles3, SimHash60, SortedLongIntersectCount, UnitVec}
+import graft.functions.{DoubleDotProduct, LangId, LongWordExtraUnits, Md5LongArray, Md5PrefixLong, MinHashBands, PhraseCount, ShinglesK, SimHash60, SortedLongIntersectCount, UnitVec}
 
 /**
  * Session extension (`--conf spark.sql.extensions=graft.GraftExtensions`)
@@ -37,8 +37,8 @@ object GraftExtensions {
       (exprs: Seq[Expression]) => SimHash60(exprs.head)),
     ("minhash_bands", classOf[MinHashBands],
       (exprs: Seq[Expression]) => MinHashBands(exprs.head)),
-    ("shingles3", classOf[Shingles3],
-      (exprs: Seq[Expression]) => Shingles3(exprs.head)),
+    ("shingles3", classOf[ShinglesK],
+      (exprs: Seq[Expression]) => ShinglesK(exprs.head, 3)),
     ("long_word_extra_units", classOf[LongWordExtraUnits],
       (exprs: Seq[Expression]) => LongWordExtraUnits(exprs.head)),
     ("unit_vec", classOf[UnitVec],

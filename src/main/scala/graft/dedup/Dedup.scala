@@ -65,18 +65,11 @@ object Dedup {
    * point for pipelines that share a materialized tokenized view
    * ([[graft.text.TokenizedCorpus]]) instead of re-tokenizing text. */
   def shinglesFromTokens(toks: Column, k: Int = 3): Column = {
-    if (k == 3) {
-      // native one-pass kernel for the standard case (the transform +
-      // concat_ws spelling is interpreted per element)
-      import org.apache.spark.sql.graft.ColumnBridge
-      ColumnBridge.column(graft.functions.Shingles3(ColumnBridge.expression(toks)))
-    } else {
-      // same one-pass kernel, parameterized by k (parity vs the
-      // transform + concat_ws spelling asserted in FunctionsSpec)
-      import org.apache.spark.sql.graft.ColumnBridge
-      ColumnBridge.column(
-        graft.functions.ShinglesK(ColumnBridge.expression(toks), k))
-    }
+    // native one-pass kernel (the transform + concat_ws spelling is
+    // interpreted per element; parity asserted in FunctionsSpec)
+    import org.apache.spark.sql.graft.ColumnBridge
+    ColumnBridge.column(
+      graft.functions.ShinglesK(ColumnBridge.expression(toks), k))
   }
 
   // --------------------------------------------------------------- minhash

@@ -661,7 +661,7 @@ object ViewRewrite {
                       deletes: org.apache.spark.sql.DataFrame,
                       aggs: Seq[org.apache.spark.sql.Column],
                       root: String,
-                      baseOverride: Option[org.apache.spark.sql.DataFrame] = None): RefreshStats = {
+                      baseOverride: Option[org.apache.spark.sql.DataFrame]): RefreshStats = {
     import org.apache.spark.sql.functions._
     val cnt = view.countCol.get
     // the delete-delta at the view grain: per group, how many rows die

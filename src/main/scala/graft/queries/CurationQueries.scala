@@ -461,8 +461,8 @@ object CurationQueries {
     val cand = graft.streaming.StreamingDedup.runNearDupIngestToBatch(s, d)
     val w = TextAnalysis.tokens(col("text"))
     val shingleHashes = ColumnBridge.column(graft.functions.Md5LongArray(
-      ColumnBridge.expression(ColumnBridge.column(graft.functions.Shingles3(
-        ColumnBridge.expression(w))))))
+      ColumnBridge.expression(ColumnBridge.column(graft.functions.ShinglesK(
+        ColumnBridge.expression(w), 3)))))
     val sl = table(s, d, "documents").filter(size(w) >= 3)
       .select(col("doc_id"), array_sort(array_distinct(shingleHashes)).as("hs"))
       .localCheckpoint() // i-side and j-side verify joins both read it

@@ -844,10 +844,9 @@ object LakeQueries {
         .toDF("tag", "n_rows")
         .select(col("tag"), col("n_rows"), lit(0L).as("cents_sum"),
           lit(0L).as("key_xor"))
-      // materialize before the eager scratch cleanup (the result must
-      // not reference the removed files)
-      segs.unionByName(acts).unionByName(vers).orderBy("tag")
-        .localCheckpoint()
+      // sealed before the eager scratch cleanup (the result must not
+      // reference the removed files)
+      Q.sealResult(segs.unionByName(acts).unionByName(vers).orderBy("tag"), m)
     }
   }
 

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import graft.io.Sources.table
 import graft.dedup.Dedup
 import graft.graph.GraphOps
-import graft.ops.Exprs
 import graft.text.TextAnalysis
 
 /**

@@ -1,6 +1,6 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graft.ColumnBridge
@@ -27,6 +27,12 @@ object Ivf {
 
   final case class IvfIndex(assigned: DataFrame, centroids: DataFrame,
                             centers: Array[Array[Double]])
+
+  /** The `(cluster, centroid)` table every build and retrain writes and
+    * [[centroids]] reads back. */
+  private val centroidSchema = StructType(Seq(
+    StructField("cluster", IntegerType, nullable = false),
+    StructField("centroid", ArrayType(DoubleType), nullable = false)))
 
   /** Seeded k-means++ init + Lloyd iterations, driver-side. Deterministic:
    * the sample arrives sorted by id and the RNG is fixed-seed. */
@@ -172,53 +178,51 @@ object Ivf {
       element_at(nearestK(unit, centers, 1), 1))
     val spark = corpus.sparkSession
     val rows = centers.zipWithIndex.map { case (v, i) => Row(i, v.toSeq) }
-    val schema = StructType(Seq(
-      StructField("cluster", IntegerType, nullable = false),
-      StructField("centroid", ArrayType(DoubleType), nullable = false)))
     val centroids = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq, 1), schema)
+      spark.sparkContext.parallelize(rows.toSeq, 1), centroidSchema)
     IvfIndex(assigned, centroids, centers)
   }
 
   // ----------------------------------------------- build once, probe many
 
-  /** Persist a built index to `dir`: the assignment table
+  /** Persist a built index to `dir` — the ONE owner of the on-disk index
+   * layout, IVF and IVF-PQ alike: the assignment table `assigned`
    * `(idCol, cluster, cu)` — unit vectors precomputed so probes never
-   * touch the raw corpus — and the `(cluster, centroid)` table. This is
-   * the "build once, probe many" split a real ANN service runs: the
-   * build pays the corpus scan + training ONCE; every probe afterwards
-   * reads only the index. */
+   * touch the raw corpus — the `(cluster, centroid)` table `centroids`,
+   * the `_seqcol` marker of a sequenced index, pending deletes in
+   * `tombstones`, and, on the [[IvfPq]] layout, the `codes` column plus
+   * the `codebooks` table. An index is IVF-PQ exactly when it holds
+   * `codebooks`. This is the "build once, probe many" split a real ANN
+   * service runs: the build pays the corpus scan + training ONCE; every
+   * probe afterwards reads only the index. */
   def persistIndex(corpus: DataFrame, dir: String, nClusters: Int,
                    idCol: String = "vec_id", vecCol: String = "embedding",
                    trainSample: Long = 65536L,
                    seqCol: Option[String] = None): Unit = {
     val index = buildIndex(corpus, nClusters, idCol, vecCol, trainSample)
-    clearMaintenanceState(dir)
-    Similarity.withUnitVec(index.assigned, vecCol, "cu")
-      .select((Seq(col(idCol), col("cluster"), col("cu")) ++
-        seqCol.map(col)): _*)
-      .write.mode("overwrite").parquet(s"$dir/assigned")
-    writeSeqMarker(dir, seqCol)
-    index.centroids.write.mode("overwrite").parquet(s"$dir/centroids")
+    writeIndex(dir,
+      Similarity.withUnitVec(index.assigned, vecCol, "cu")
+        .select((Seq(col(idCol), col("cluster"), col("cu")) ++
+          seqCol.map(col)): _*),
+      index.centroids, seqCol)
   }
 
-  /** A rebuild into a reused dir starts from a CLEAN maintenance
-    * state: stale tombstones would silently kill the new rows (or trip
-    * the mixed-mode require when the seq mode changes), and a
-    * stale-but-complete staging dir (assigned_compacting /
-    * assigned_retraining / centroids_new) would be swapped IN over the
-    * fresh tables by the next writer entry's recoverSwap. Shared with
-    * the [[IvfPq]] layout. */
-  private[sim] def clearMaintenanceState(dir: String): Unit =
+  /** The write tail both layouts' builds share. A rebuild into a reused
+    * dir starts from a CLEAN maintenance state: stale tombstones would
+    * silently kill the new rows (or trip the mixed-mode require when the
+    * seq mode changes), and a stale-but-complete staging dir
+    * (assigned_compacting / assigned_retraining / centroids_new) would
+    * be swapped IN over the fresh tables by the next writer entry's
+    * recoverSwap. The delete mode is then DECLARED (`_seqcol` names the
+    * per-record version column) so later maintenance is validated
+    * against it instead of inferred from schemas. */
+  private[sim] def writeIndex(dir: String, assigned: DataFrame,
+                              centroids: DataFrame,
+                              seqCol: Option[String]): Unit = {
     Seq("tombstones", "assigned_old", "assigned_compacting",
         "assigned_retraining", "centroids_old", "centroids_new")
       .foreach(sub => rmTree(new java.io.File(s"$dir/$sub")))
-
-  /** The index's delete mode is DECLARED at build time (`_seqcol`
-    * names the per-record version column) so later maintenance is
-    * validated against it instead of inferred from schemas. Shared
-    * with the [[IvfPq]] layout. */
-  private[sim] def writeSeqMarker(dir: String, seqCol: Option[String]): Unit = {
+    assigned.write.mode("overwrite").parquet(s"$dir/assigned")
     val marker = new java.io.File(s"$dir/_seqcol")
     seqCol match {
       case Some(sc) =>
@@ -228,7 +232,26 @@ object Ivf {
         marker.delete()
         ()
     }
+    centroids.write.mode("overwrite").parquet(s"$dir/centroids")
   }
+
+  /** The index's centroid table in cluster order — `(cluster, centroid)`
+    * per cell, the one reader every probe, append, retrain and gate
+    * goes through. Bounded: nClusters rows, one job (the schema is
+    * known, so no footer-inference job). */
+  private[graft] def centroids(spark: SparkSession,
+                               dir: String): Array[(Int, Array[Double])] =
+    spark.read.schema(centroidSchema).parquet(s"$dir/centroids").collect()
+      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
+      .sortBy(_._1)
+
+  /** The pending tombstone table, or None when no delete is pending
+    * (never deleted from, or every delete folded by a compaction). */
+  private[graft] def tombstones(spark: SparkSession,
+                                dir: String): Option[DataFrame] =
+    if (new java.io.File(s"$dir/tombstones").isDirectory)
+      Some(spark.read.parquet(s"$dir/tombstones"))
+    else None
 
   /** The seq column the index was built with, or None. */
   private def seqColOf(dir: String): Option[String] = {
@@ -249,18 +272,21 @@ object Ivf {
    * centroids before and after, an append only ever ADDS candidates to
    * each probed cell — recall against any fixed truth set is provably
    * monotone (a non-truth candidate can never displace a truth member
-   * from a top-k that ranks by the global order), which q318 gates. */
+   * from a top-k that ranks by the global order), which q318 gates.
+   * On the [[IvfPq]] layout the STORED codebooks also encode the batch
+   * map-side into its `codes` column (no PQ re-fit; one more bounded
+   * driver read, m·ksub rows). */
   def appendToIndex(delta: DataFrame, dir: String,
                     idCol: String = "vec_id",
                     vecCol: String = "embedding",
                     seqCol: Option[String] = None): Unit = {
     val spark = delta.sparkSession
-    val centers = spark.read.parquet(s"$dir/centroids")
-      .orderBy("cluster").collect() // bounded: nClusters rows
-      .map(_.getSeq[Double](1).toArray)
+    val centers = centroids(spark, dir).map(_._2)
+    val codes = IvfPq.loadModel(spark, dir)
+      .map(model => Pq.codesFromUnit(col("cu"), model).as("codes"))
     val out = Similarity.withUnitVec(delta, vecCol, "cu")
       .withColumn("cluster", element_at(nearestK(col("cu"), centers, 1), 1))
-      .select((Seq(col(idCol), col("cluster"), col("cu")) ++
+      .select((Seq(col(idCol), col("cluster"), col("cu")) ++ codes ++
         seqCol.map(col)): _*)
     // a sequenced and an unsequenced append must not mix in one
     // directory: parquet appends with differing schemas read back with
@@ -283,9 +309,7 @@ object Ivf {
    * O(|ids|) — never an assignment-table rewrite (the faiss
    * `remove_ids` / lakehouse deletion-vector pattern: at 100 TB a
    * delete that rewrites the index is a non-starter). The rewrite is
-   * deferred and batched into [[compactIndex]]. Shared by the IVF and
-   * IVF-PQ layouts — both persist `assigned` and probe through
-   * [[liveAssigned]]. */
+   * deferred and batched into [[compactIndex]]. */
   def deleteFromIndex(ids: DataFrame, dir: String,
                       idCol: String = "vec_id",
                       seqCol: Option[String] = None): Unit = {
@@ -327,9 +351,8 @@ object Ivf {
    * pending tombstones to ANY of those copies yields the same live set
    * (a tombstone already folded into a copy anti-joins to nothing:
    * idempotent). */
-  private[graft] def liveAssigned(spark: org.apache.spark.sql.SparkSession,
-                                dir: String,
-                                idCol: String = "vec_id"): DataFrame = {
+  private[graft] def liveAssigned(spark: SparkSession, dir: String,
+                                  idCol: String = "vec_id"): DataFrame = {
     val src =
       if (new java.io.File(s"$dir/assigned").isDirectory) s"$dir/assigned"
       else if (new java.io.File(s"$dir/assigned_compacting/_SUCCESS").isFile)
@@ -338,9 +361,7 @@ object Ivf {
         s"$dir/assigned_old"
       else s"$dir/assigned" // fail in the read with the canonical path
     val assigned = spark.read.parquet(src)
-    if (!new java.io.File(s"$dir/tombstones").isDirectory) assigned
-    else {
-      val tombs = spark.read.parquet(s"$dir/tombstones")
+    tombstones(spark, dir).fold(assigned) { tombs =>
       tombs.columns.filterNot(_ == idCol).headOption match {
         case None => assigned.join(tombs, Seq(idCol), "left_anti")
         case Some(sc) => // sequenced index: a tombstone kills only
@@ -503,7 +524,7 @@ object Ivf {
    * end of THIS completed run (recovery keeps them: they re-apply
    * idempotently). Returns (rows before, rows removed, rows after) —
    * footer-count reads. */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
+  def compactIndex(spark: SparkSession, dir: String,
                    idCol: String = "vec_id"): (Long, Long, Long) = {
     recoverSwap(dir)
     val before = spark.read.parquet(s"$dir/assigned").count()
@@ -544,14 +565,18 @@ object Ivf {
    * centroid renames, which previously stranded the index with no
    * `centroids` at the canonical path — or discards both stubs if
    * staging died, leaving the live pair untouched. (It also folds any
-   * pending tombstones, being a rewrite anyway.) A production
+   * pending tombstones, being a rewrite anyway.) The [[IvfPq]] layout
+   * needs no re-encoding: a PQ code is a function of the stored
+   * codebooks and the vector alone — cell membership never enters it —
+   * so the `codes` column rides the rewrite with the rest of the full
+   * column set and `codebooks` stays untouched. A production
    * deployment roots both tables behind one
    * [[graft.lake.Versions]]-style manifest flip. At 100 TB the cost is
    * O(rows of the flagged cells) for the reassignment and a full-table
    * rewrite only because this layout stores `assigned` unpartitioned —
    * cluster-partitioned storage would rewrite just the flagged
    * directories. Returns (rows reassigned, the new cell ids). */
-  def partialRetrain(spark: org.apache.spark.sql.SparkSession, dir: String,
+  def partialRetrain(spark: SparkSession, dir: String,
                      cells: Seq[Int], kNew: Int,
                      idCol: String = "vec_id",
                      trainSample: Long = 65536L): (Long, Seq[Int]) = {
@@ -559,12 +584,10 @@ object Ivf {
     require(kNew >= 1, "partialRetrain needs kNew >= 1")
     recoverSwap(dir)
     val flagged = cells.toSet
-    val centroids = spark.read.parquet(s"$dir/centroids")
-      .orderBy("cluster").collect() // bounded: nClusters rows
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-    val kept = centroids.filterNot { case (id, _) => flagged(id) }
+    val current = centroids(spark, dir)
+    val kept = current.filterNot { case (id, _) => flagged(id) }
     val newIds: Seq[Int] = {
-      val maxId = centroids.map(_._1).max
+      val maxId = current.map(_._1).max
       (cells ++ (maxId + 1 to maxId + kNew)).take(kNew)
     }
     val assigned = liveAssigned(spark, dir, idCol)
@@ -602,11 +625,8 @@ object Ivf {
       s"retrain wrote no _SUCCESS marker under $dir")
     val rows = (kept ++ usedIds.zip(newCenters))
       .map { case (id, v) => Row(id, v.toSeq) }
-    val schema = StructType(Seq(
-      StructField("cluster", IntegerType, nullable = false),
-      StructField("centroid", ArrayType(DoubleType), nullable = false)))
     spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toSeq, 1), schema)
+        spark.sparkContext.parallelize(rows.toSeq, 1), centroidSchema)
       .write.parquet(s"$dir/centroids_new")
     require(new java.io.File(s"$dir/centroids_new/_SUCCESS").isFile,
       s"retrain wrote no _SUCCESS marker under $dir/centroids_new")
@@ -615,27 +635,37 @@ object Ivf {
     (nHot, usedIds)
   }
 
-  /** Memoized [[persistIndex]] over the harness embeddings table — one
-   * persisted index per (session, sfDir, nClusters), shared by every
-   * probe query in the session. */
-  private val persisted = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, Int), String]()
-  def persistedIndex(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-                     nClusters: Int): String = {
+  /** Memoized persisted indexes over the harness embeddings table, one
+   * per EVERY build parameter — (session, sfDir, nClusters, the
+   * [[IvfPq]] layout's (m, ksub) or None) — shared by every probe query
+   * in the session. [[persistedIndex]] and [[IvfPq.persistedIndex]] both
+   * read it through [[persistedIndexOf]]. */
+  private type IndexKey = (SparkSession, String, Int, Option[(Int, Int)])
+  private val persisted =
+    new java.util.concurrent.ConcurrentHashMap[IndexKey, String]()
+  private[sim] def persistedIndexOf(spark: SparkSession, sfDir: String,
+                                    nClusters: Int,
+                                    pq: Option[(Int, Int)]): String = {
     // lazy eviction: stopped sessions' entries would otherwise pin the
     // session reference for the life of the JVM (the on-disk index dir
     // is scratch space and cleans up with it)
-    persisted.keySet.removeIf(
-      (k: (org.apache.spark.sql.SparkSession, String, Int)) =>
-        k._1.sparkContext.isStopped)
-    persisted.computeIfAbsent((spark, sfDir, nClusters),
-      (key: (org.apache.spark.sql.SparkSession, String, Int)) => {
-        val dir = graft.io.Sources.scratchDir("graft_ivf_index")
-        persistIndex(graft.io.Sources.table(key._1, key._2, "embeddings"),
-          dir, key._3)
-        dir
-      })
+    persisted.keySet.removeIf((k: IndexKey) => k._1.sparkContext.isStopped)
+    persisted.computeIfAbsent((spark, sfDir, nClusters, pq), (_: IndexKey) => {
+      val corpus = graft.io.Sources.table(spark, sfDir, "embeddings")
+      val dir = graft.io.Sources.scratchDir(
+        if (pq.isEmpty) "graft_ivf_index" else "graft_ivfpq_index")
+      pq match {
+        case None => persistIndex(corpus, dir, nClusters)
+        case Some((m, ksub)) =>
+          IvfPq.persistIndex(corpus, dir, dim = 64, nClusters = nClusters,
+            m = m, ksub = ksub)
+      }
+      dir
+    })
   }
+  def persistedIndex(spark: SparkSession, sfDir: String,
+                     nClusters: Int): String =
+    persistedIndexOf(spark, sfDir, nClusters, None)
 
   /**
    * Probe-only ANN top-k against a persisted index: NO training, NO
@@ -650,9 +680,7 @@ object Ivf {
   def probeIndex(queries: DataFrame, dir: String, k: Int, nProbe: Int,
                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = queries.sparkSession
-    val centers = spark.read.parquet(s"$dir/centroids")
-      .orderBy("cluster").collect() // bounded: nClusters rows
-      .map(_.getSeq[Double](1).toArray)
+    val centers = centroids(spark, dir).map(_._2)
     val assigned = liveAssigned(spark, dir, idCol)
     rankCandidates(
       assigned.select(col(idCol).as("nid"), col("cu"), col("cluster")),

@@ -21,7 +21,10 @@ import org.apache.spark.sql.types._
  *     nClusters + m·ksub rows), cells prune via a broadcast equi-join
  *     (never all-pairs), ADC scoring is m integer lookups per candidate
  *     (no per-row vector math), and the exact cosine runs on
- *     shortlist·|queries| rows only.
+ *     shortlist·|queries| rows only;
+ *   - maintain in place: append, delete, compaction and partial retrain
+ *     are [[Ivf]]'s, which owns the on-disk layout of both index kinds
+ *     and reads which one it holds from the directory.
  *
  * Determinism carries over from both halves (hash-sampled training in
  * id order, seeded Lloyd, (score desc, id) tiebreaks), so probing a
@@ -54,129 +57,56 @@ object IvfPq {
     val sample = Ivf.unitTrainSample(filtered, idCol, vecCol, trainSample)
     val ivf = Ivf.buildIndexWith(filtered, sample, nClusters, idCol, vecCol)
     val model = Pq.fitWith(filtered, sample, dim, m, ksub, idCol, vecCol)
-    // a rebuild into a reused dir starts from a CLEAN maintenance state
-    // (stale tombstones / staging would corrupt the fresh index — the
-    // same contract as [[Ivf.persistIndex]])
-    Ivf.clearMaintenanceState(dir)
-    Similarity.withUnitVec(corpus.filter(col(vecCol).isNotNull), vecCol, "cu")
-      .withColumn("codes", Pq.codesFromUnit(col("cu"), model))
-      .withColumn("cluster",
-        element_at(Ivf.nearestK(col("cu"), ivf.centers, 1), 1))
-      .select((Seq(col(idCol), col("cluster"), col("cu"), col("codes")) ++
-        seqCol.map(col)): _*)
-      .write.mode("overwrite").parquet(s"$dir/assigned")
-    // the delete mode is DECLARED at build time, exactly as on the
-    // plain IVF layout — sequenced maintenance then works unchanged
-    // (liveAssigned and deleteFromIndex are shared across layouts)
-    Ivf.writeSeqMarker(dir, seqCol)
-    ivf.centroids.write.mode("overwrite").parquet(s"$dir/centroids")
+    // the shared write tail (clean maintenance state, `assigned`, the
+    // seq marker, `centroids`) — sequenced maintenance then works
+    // exactly as on the plain IVF layout — plus the codebooks
+    Ivf.writeIndex(dir,
+      Similarity.withUnitVec(filtered, vecCol, "cu")
+        .withColumn("codes", Pq.codesFromUnit(col("cu"), model))
+        .withColumn("cluster",
+          element_at(Ivf.nearestK(col("cu"), ivf.centers, 1), 1))
+        .select((Seq(col(idCol), col("cluster"), col("cu"), col("codes")) ++
+          seqCol.map(col)): _*),
+      ivf.centroids, seqCol)
     val spark = corpus.sparkSession
     val cbRows = for {
       j <- model.codebooks.indices
       c <- model.codebooks(j).indices
     } yield Row(j, c, model.codebooks(j)(c).toSeq)
-    val cbSchema = StructType(Seq(
-      StructField("j", IntegerType, nullable = false),
-      StructField("c", IntegerType, nullable = false),
-      StructField("centroid", ArrayType(DoubleType), nullable = false)))
     spark.createDataFrame(
-        spark.sparkContext.parallelize(cbRows, 1), cbSchema)
+        spark.sparkContext.parallelize(cbRows, 1), codebookSchema)
       .write.mode("overwrite").parquet(s"$dir/codebooks")
   }
 
-  /** Composed-index MAINTENANCE ([[Ivf.appendToIndex]]'s IVF-PQ twin):
-    * route a new vector batch into an EXISTING persisted index — the
-    * stored codebooks encode the batch map-side (no PQ re-fit), the
-    * stored centroids assign its cells (no re-clustering), and the
-    * rows append to the assignment table. Both lookups are bounded
-    * driver reads (nClusters + m·ksub rows); the batch itself is one
-    * map-side pass. */
-  def appendToIndex(delta: DataFrame, dir: String,
-                    idCol: String = "vec_id",
-                    vecCol: String = "embedding",
-                    seqCol: Option[String] = None): Unit = {
-    val spark = delta.sparkSession
-    val centers = spark.read.parquet(s"$dir/centroids")
-      .orderBy("cluster").collect() // bounded: nClusters rows
-      .map(_.getSeq[Double](1).toArray)
-    val model = loadModel(spark, dir)
-    val out = Similarity.withUnitVec(
-        delta.filter(col(vecCol).isNotNull), vecCol, "cu")
-      .withColumn("codes", Pq.codesFromUnit(col("cu"), model))
-      .withColumn("cluster",
-        element_at(Ivf.nearestK(col("cu"), centers, 1), 1))
-      .select((Seq(col(idCol), col("cluster"), col("cu"), col("codes")) ++
-        seqCol.map(col)): _*)
-    // sequenced and unsequenced appends must not mix ([[Ivf
-    // .appendToIndex]]'s contract): fail HERE, not at a later probe
-    val existing = spark.read.parquet(s"$dir/assigned").columns.toSet
-    require(existing == out.columns.toSet,
-      s"append schema ${out.columns.toSet} does not match the " +
-        s"index's $existing under $dir — pass the same seqCol the " +
-        "index was built with")
-    out.write.mode("append").parquet(s"$dir/assigned")
-  }
-
-  /** Composed-index COMPACTION ([[Ivf.compactIndex]] on the IVF-PQ
-    * layout — maintenance parity for the sequenced-delete path): fold
-    * pending tombstones into the assignment table with the same
-    * write-new-then-swap discipline and crash recovery. The shared
-    * implementation is genuinely layout-agnostic: the PQ layout's extra
-    * `codes` column is payload the anti-join carries through untouched,
-    * and codebooks/centroids are never rewritten (codes depend on the
-    * CODEBOOKS, not on cell membership). Probes stay served from a
-    * complete on-disk copy throughout ([[Ivf.liveAssigned]]). Returns
-    * (rows before, rows removed, rows after). */
-  def compactIndex(spark: SparkSession, dir: String,
-                   idCol: String = "vec_id"): (Long, Long, Long) =
-    Ivf.compactIndex(spark, dir, idCol)
-
-  /** Composed-index PARTIAL RETRAIN ([[Ivf.partialRetrain]] on the
-    * IVF-PQ layout): re-cluster ONLY the flagged cells into `kNew`
-    * fresh sub-centroids and reassign ONLY their rows, under the same
-    * staged-pair transaction (`assigned_retraining` + `centroids_new`,
-    * both `_SUCCESS`-gated before any rename) and writer-entry crash
-    * recovery. Valid on this layout WITHOUT re-encoding: PQ codes are a
-    * function of the stored codebooks and the vector alone — cell
-    * membership never enters the code — so moving a row between cells
-    * preserves its codes, and the untouched `codebooks` table keeps
-    * every ADC lookup exact. The full column set (id, cluster, cu,
-    * codes, seq…) rides the rewrite. Returns (rows reassigned, the new
-    * cell ids). */
-  def partialRetrain(spark: SparkSession, dir: String,
-                     cells: Seq[Int], kNew: Int,
-                     idCol: String = "vec_id",
-                     trainSample: Long = 65536L): (Long, Seq[Int]) =
-    Ivf.partialRetrain(spark, dir, cells, kNew, idCol, trainSample)
+  /** The `(j, c, centroid)` codebook table [[persistIndex]] writes and
+    * [[loadModel]] reads back. */
+  private val codebookSchema = StructType(Seq(
+    StructField("j", IntegerType, nullable = false),
+    StructField("c", IntegerType, nullable = false),
+    StructField("centroid", ArrayType(DoubleType), nullable = false)))
 
   /** Memoized [[persistIndex]] over the harness embeddings table — one
-    * persisted composed index per (session, sfDir), shared by every
-    * probe in the session (the [[Ivf.persistedIndex]] pattern). */
-  private val persisted = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
+    * persisted composed index per (session, sfDir, nClusters, m, ksub),
+    * in the one memo [[Ivf.persistedIndex]] also keeps. */
   def persistedIndex(spark: SparkSession, sfDir: String,
-                     nClusters: Int = 64, m: Int = 16, ksub: Int = 16): String = {
-    persisted.keySet.removeIf(
-      (k: (SparkSession, String)) => k._1.sparkContext.isStopped)
-    persisted.computeIfAbsent((spark, sfDir),
-      (key: (SparkSession, String)) => {
-        val dir = graft.io.Sources.scratchDir("graft_ivfpq_index")
-        persistIndex(graft.io.Sources.table(key._1, key._2, "embeddings"),
-          dir, dim = 64, nClusters = nClusters, m = m, ksub = ksub)
-        dir
-      })
-  }
+                     nClusters: Int = 64, m: Int = 16, ksub: Int = 16): String =
+    Ivf.persistedIndexOf(spark, sfDir, nClusters, Some((m, ksub)))
 
-  /** Reload the codebook table to a [[Pq.PqModel]] (bounded: m·ksub
-    * rows). */
-  private def loadModel(spark: SparkSession, dir: String): Pq.PqModel = {
-    val rows = spark.read.parquet(s"$dir/codebooks").collect()
-    val m = rows.iterator.map(_.getInt(0)).max + 1
-    val ksub = rows.iterator.map(_.getInt(1)).max + 1
-    val books = Array.ofDim[Array[Double]](m, ksub)
-    rows.foreach(r => books(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray)
-    Pq.PqModel(m, books(0)(0).length, books)
-  }
+  /** The index's codebook table as a [[Pq.PqModel]] (bounded: m·ksub
+    * rows, one job), or None when `dir` holds no `codebooks` table —
+    * the plain IVF layout. */
+  private[graft] def loadModel(spark: SparkSession,
+                               dir: String): Option[Pq.PqModel] =
+    if (!new java.io.File(s"$dir/codebooks").isDirectory) None
+    else {
+      val rows = spark.read.schema(codebookSchema)
+        .parquet(s"$dir/codebooks").collect()
+      val m = rows.iterator.map(_.getInt(0)).max + 1
+      val ksub = rows.iterator.map(_.getInt(1)).max + 1
+      val books = Array.ofDim[Array[Double]](m, ksub)
+      rows.foreach(r => books(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray)
+      Some(Pq.PqModel(m, books(0)(0).length, books))
+    }
 
   /**
    * Probe-only IVF-PQ top-k: NO training, NO corpus scan — file scans
@@ -194,39 +124,14 @@ object IvfPq {
                  shortlist: Int,
                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = queries.sparkSession
-    val centers = spark.read.parquet(s"$dir/centroids")
-      .orderBy("cluster").collect() // bounded: nClusters rows
-      .map(_.getSeq[Double](1).toArray)
-    val model = loadModel(spark, dir)
+    val centers = Ivf.centroids(spark, dir).map(_._2)
+    val model = loadModel(spark, dir).getOrElse(throw new IllegalArgumentException(
+      s"$dir holds no codebooks table — not an IVF-PQ index"))
     // bounded probe set by contract: LUT rows build on the driver
-    val qs = Similarity.withUnitVec(
-        queries.filter(col(vecCol).isNotNull), vecCol, "qu")
-      .select(col(idCol).cast("long"), col("qu"))
-      .orderBy(idCol)
-      .collect()
-    val lutRows = qs.map { r =>
-      val qu = r.getSeq[Double](1).toArray
-      val lut = model.codebooks.zipWithIndex.map { case (book, j) =>
-        val sub = qu.slice(j * model.dsub, (j + 1) * model.dsub)
-        book.map(c => c.indices.map(i => c(i) * sub(i)).sum).toSeq
-      }.toSeq
-      Row(r.getLong(0), qu.toSeq, lut)
-    }
-    val lutSchema = StructType(Seq(
-      StructField("qid", LongType, nullable = false),
-      StructField("qu", ArrayType(DoubleType), nullable = false),
-      StructField("lut", ArrayType(ArrayType(DoubleType)), nullable = false)))
-    val luts = spark.createDataFrame(
-      spark.sparkContext.parallelize(lutRows.toSeq, 1), lutSchema)
+    val luts = Pq.queryLuts(queries, model, idCol, vecCol)
     // probed cells via the SAME kernel as build-time assignment
-    val cells = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          qs.map(r => Row(r.getLong(0), r.getSeq[Double](1))).toSeq, 1),
-        StructType(Seq(
-          StructField("qid", LongType, nullable = false),
-          StructField("qu0", ArrayType(DoubleType), nullable = false))))
-      .select(col("qid"), explode(
-        Ivf.nearestK(col("qu0"), centers, nProbe)).as("cluster"))
+    val cells = luts.select(col("qid"),
+      explode(Ivf.nearestK(col("qu"), centers, nProbe)).as("cluster"))
     val assigned = Ivf.liveAssigned(spark, dir, idCol)
     val wAdc = Window.partitionBy("qid")
       .orderBy(col("adc_score").desc, col("nid"))

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
-import graft.curation.Curation
 import graft.functions.NearestCentroids
 
 /**
@@ -106,7 +105,7 @@ object Pq {
     * lut[j][c] = q_sub_j · centroid_{j,c}. Queries are COLLECTED — the
     * caller passes a bounded probe set (the q39/q40 broadcast-slice
     * contract); each row carries m·ksub doubles. */
-  private def queryLuts(queries: DataFrame, model: PqModel,
+  private[sim] def queryLuts(queries: DataFrame, model: PqModel,
                         idCol: String, vecCol: String): DataFrame = {
     val spark = queries.sparkSession
     val qs = Similarity.withUnitVec(

@@ -3,7 +3,6 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ops.Exprs
 
 /**
  * Similarity search over an `Array[Float]` embedding column.

@@ -9,6 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class Round10Spec extends AnyFunSuite with SparkSpec {
 
+  import SourceScan.sourceHits
+
   /** Number of StreamingQueryListenerBus instances registered on the
     * SparkContext's shared LiveListenerBus. `listenerBus` is
     * private[spark] (public in bytecode), so reflection reads it —
@@ -49,21 +51,6 @@ class Round10Spec extends AnyFunSuite with SparkSpec {
     val after3 = streamingBusCount
     assert(after3 == after1,
       s"listener buses grew $after1 -> $after3 across 2 more parent-session runs")
-  }
-
-  /** `path: token` for every `.scala` file under `root` containing a
-    * token, and the number of files scanned. */
-  private def sourceHits(root: java.nio.file.Path,
-                         tokens: Seq[String]): (List[String], Int) = {
-    val sources = java.nio.file.Files.walk(root)
-    try {
-      import scala.jdk.CollectionConverters._
-      val files = sources.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      (files.flatMap { p =>
-        val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        tokens.filter(text.contains).map(t => s"${root.relativize(p)}: $t")
-      }, files.size)
-    } finally sources.close()
   }
 
   test("only streaming/Replay.scala starts, drives or stages a stream under src/main") {

@@ -197,72 +197,6 @@ class Round12Spec extends AnyFunSuite with SparkSpec {
     } finally graft.io.Sources.removeScratchDir(root)
   }
 
-  private def cpTree(src: java.io.File, dst: java.io.File): Unit = {
-    if (src.isDirectory) {
-      dst.mkdirs()
-      Option(src.listFiles()).toSeq.flatten.foreach(f =>
-        cpTree(f, new java.io.File(dst, f.getName)))
-    } else {
-      java.nio.file.Files.copy(src.toPath, dst.toPath)
-      ()
-    }
-  }
-
-  test("retrain swap heals from every crash state, including between the two centroid renames") {
-    import graft.sim.Ivf
-    val dir = graft.io.Sources.scratchDir("graft_retraincrash")
-    try {
-      val emb = graft.io.Sources.table(spark, sf001, "embeddings")
-        .filter(col("embedding").isNotNull)
-      Ivf.persistIndex(emb, dir, nClusters = 16)
-      def probe = Ivf.probeIndex(emb.filter(col("vec_id") < 20), dir,
-        k = 3, nProbe = 4).select("qid", "nid", "rank").localCheckpoint()
-      def sameRows(a: org.apache.spark.sql.DataFrame,
-                   b: org.apache.spark.sql.DataFrame): Boolean =
-        a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
-      val want = probe
-      def f(name: String) = new java.io.File(s"$dir/$name")
-      def recovered(): Unit = {
-        // writer entry (compactIndex calls recoverSwap first) must heal
-        Ivf.compactIndex(spark, dir)
-        Seq("assigned_retraining", "centroids_new", "centroids_old",
-          "assigned_old", "assigned_compacting").foreach(n =>
-          assert(!f(n).exists(), s"$n survived recovery"))
-        assert(f("assigned").isDirectory && f("centroids").isDirectory)
-        assert(sameRows(probe, want), "probe changed across recovery")
-      }
-      // state 1 — the r11 verdict's unrecovered window: crash BETWEEN
-      // the two centroid renames (no `centroids` at the canonical path;
-      // complete `centroids_old` and `centroids_new` both on disk).
-      // Previously every probe failed loudly until a hand-restore.
-      cpTree(f("centroids"), f("centroids_new"))
-      assert(f("centroids").renameTo(f("centroids_old")))
-      recovered()
-      // state 2 — both staged tables complete, no rename begun: the
-      // transaction rolls FORWARD at writer entry
-      cpTree(f("assigned"), f("assigned_retraining"))
-      cpTree(f("centroids"), f("centroids_new"))
-      recovered()
-      // state 3 — staging died half-way (assigned_retraining complete,
-      // centroid staging never ran): roll BACK, live pair untouched
-      cpTree(f("assigned"), f("assigned_retraining"))
-      recovered()
-      // state 3b — markerless retraining beside a complete centroids_new:
-      // still a dead staging, both stubs discarded
-      cpTree(f("assigned"), f("assigned_retraining"))
-      assert(new java.io.File(f("assigned_retraining"), "_SUCCESS").delete())
-      cpTree(f("centroids"), f("centroids_new"))
-      recovered()
-      // state 4 — assigned swap already done, centroid swap not begun
-      // (complete centroids_new beside the live centroids): finish it
-      cpTree(f("centroids"), f("centroids_new"))
-      recovered()
-      // state 5 — cleanup debt: centroids_old lingering beside centroids
-      cpTree(f("centroids"), f("centroids_old"))
-      recovered()
-    } finally graft.io.Sources.removeScratchDir(dir)
-  }
-
   test("partialRetrain end-to-end still conserves rows and stays probeable") {
     import graft.sim.Ivf
     val dir = graft.io.Sources.scratchDir("graft_retraine2e")

@@ -411,40 +411,6 @@ class Round13Spec extends AnyFunSuite with SparkSpec {
     } finally graft.io.Sources.removeScratchDir(root)
   }
 
-  test("sequenced IVF-PQ: seq mode declared at build, mixing fails at write time") {
-    import spark.implicits._
-    import graft.sim.{Ivf, IvfPq}
-    val dir = graft.io.Sources.scratchDir("graft_pq_seq_unit")
-    try {
-      val corpus = (0L until 32L)
-        .map(i => (i, (0 until 64).map(j =>
-          math.cos(i * 0.37 + j * 0.11)), 0L))
-        .toDF("vec_id", "embedding", "seq")
-      IvfPq.persistIndex(corpus, dir, dim = 64, nClusters = 2, m = 16,
-        ksub = 4, seqCol = Some("seq"))
-      // an UNSEQUENCED append must fail at write time (the seq column
-      // would silently vanish behind parquet schema sampling)
-      intercept[IllegalArgumentException](
-        IvfPq.appendToIndex(corpus.drop("seq"), dir))
-      // an unsequenced delete against a sequenced index fails too
-      intercept[IllegalArgumentException](
-        Ivf.deleteFromIndex(Seq(1L).toDF("vec_id"), dir))
-      // the sequenced paths work and resolve by seqno, not arrival
-      IvfPq.appendToIndex(Seq((1L, (0 until 64).map(j =>
-          math.sin(j * 0.2)), 2L))
-        .toDF("vec_id", "embedding", "seq"), dir, seqCol = Some("seq"))
-      Ivf.deleteFromIndex(Seq((1L, 1L)).toDF("vec_id", "seq"), dir,
-        seqCol = Some("seq"))
-      val live = Ivf.liveAssigned(spark, dir)
-      // the seq-2 re-add survives its seq-1 tombstone; the seq-0
-      // original dies
-      assert(live.filter(col("vec_id") === 1L).count() == 1)
-      assert(live.filter(col("vec_id") === 1L)
-        .select("seq").as[Long].head() == 2L)
-      assert(live.count() == 32)
-    } finally graft.io.Sources.removeScratchDir(dir)
-  }
-
   test("consecutive deletion vectors coalesce into ONE anti-join; upserts break the run") {
     import spark.implicits._
     val root = graft.io.Sources.scratchDir("graft_dv_coalesce")

@@ -8,8 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * member updates — bounded chains inside the transaction protocol, crash
   * loudness, repair), retraction-aware MV refresh (algebraic count/sum,
   * eviction-only rescans), schema-evolving MoR upserts (loud reject /
-  * opt-in null backfill), IVF-PQ maintenance parity (compaction + partial
-  * retrain with the crash-state replay), per-app catalog txn marks for
+  * opt-in null backfill), per-app catalog txn marks for
   * concurrent streaming writers, and the fresh-member rollback TOCTOU
   * fix (a lost-CAS loser must never rmTree a member a racing winner
   * catalog-named).
@@ -329,93 +328,6 @@ class Round14Spec extends AnyFunSuite with SparkSpec {
         assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
       }
     } finally graft.io.Sources.removeScratchDir(root)
-  }
-
-  private def cpTree(src: java.io.File, dst: java.io.File): Unit = {
-    if (src.isDirectory) {
-      dst.mkdirs()
-      Option(src.listFiles()).toSeq.flatten.foreach(f =>
-        cpTree(f, new java.io.File(dst, f.getName)))
-    } else {
-      java.nio.file.Files.copy(src.toPath, dst.toPath)
-      ()
-    }
-  }
-
-  test("IVF-PQ maintenance parity: sequenced deletes compact, crash states heal, retrain keeps codes") {
-    import spark.implicits._
-    import graft.sim.{Ivf, IvfPq}
-    val dir = graft.io.Sources.scratchDir("graft_pq_maint")
-    try {
-      val emb = graft.io.Sources.table(spark, sf001, "embeddings")
-        .filter(col("embedding").isNotNull)
-        .withColumn("seq", lit(0L))
-      IvfPq.persistIndex(emb, dir, dim = 64, nClusters = 8, m = 16,
-        ksub = 8, seqCol = Some("seq"))
-      val total = Ivf.liveAssigned(spark, dir).count()
-      val dead = emb.filter(pmod(col("vec_id"), lit(11)) === 3)
-        .select(col("vec_id"), lit(1L).as("seq"))
-      val nDead = dead.count()
-      Ivf.deleteFromIndex(dead, dir, seqCol = Some("seq"))
-      def probe() = IvfPq.probeIndex(
-        emb.filter(col("vec_id") < 16), dir, k = 3, nProbe = 4,
-        shortlist = 24).localCheckpoint()
-      val want = probe()
-      assert(want.join(dead, want("nid") === dead("vec_id"), "left_semi")
-        .count() == 0, "a tombstoned id surfaced in a probe")
-      // compaction folds the tombstones; the probe is UNCHANGED (the
-      // live set is identical before and after by construction)
-      val (before, removed, after) = IvfPq.compactIndex(spark, dir)
-      assert(before == total && removed == nDead && after == total - nDead)
-      assert(!new java.io.File(s"$dir/tombstones").isDirectory)
-      val got = probe()
-      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
-        "compaction changed probe results")
-      def f(name: String) = new java.io.File(s"$dir/$name")
-      def recovered(): Unit = {
-        IvfPq.compactIndex(spark, dir)
-        Seq("assigned_retraining", "centroids_new", "centroids_old",
-          "assigned_old", "assigned_compacting").foreach(n =>
-          assert(!f(n).exists(), s"$n survived recovery"))
-        val g = probe()
-        assert(g.exceptAll(want).isEmpty && want.exceptAll(g).isEmpty,
-          "probe changed across crash recovery")
-      }
-      // crash states on the COMPOSED layout (the Round12 replay): the
-      // window between the two centroid renames; a complete staged
-      // pair; a dead half-staging; a complete compacting table
-      cpTree(f("centroids"), f("centroids_new"))
-      assert(f("centroids").renameTo(f("centroids_old")))
-      recovered()
-      cpTree(f("assigned"), f("assigned_retraining"))
-      cpTree(f("centroids"), f("centroids_new"))
-      recovered()
-      cpTree(f("assigned"), f("assigned_retraining"))
-      recovered()
-      cpTree(f("assigned"), f("assigned_compacting"))
-      recovered()
-      // partial retrain on the composed layout: rows conserved, the
-      // codes AND seq payload ride the rewrite, probes stay served,
-      // sequenced maintenance still works after
-      val liveBefore = Ivf.liveAssigned(spark, dir).count()
-      val (nHot, newIds) = IvfPq.partialRetrain(spark, dir,
-        cells = Seq(0, 1), kNew = 4)
-      assert(nHot > 0 && newIds.size == 4)
-      val live = Ivf.liveAssigned(spark, dir)
-      assert(live.count() == liveBefore, "retrain lost or duplicated rows")
-      assert(live.columns.toSet ==
-        Set("vec_id", "cluster", "cu", "codes", "seq"),
-        "retrain dropped a payload column")
-      val g2 = probe()
-      assert(g2.count() == want.count(), "probe broke after retrain")
-      assert(g2.join(dead, g2("nid") === dead("vec_id"), "left_semi")
-        .count() == 0, "a compacted-away id resurfaced after retrain")
-      Ivf.deleteFromIndex(emb.filter(col("vec_id") === 5L)
-        .select(col("vec_id"), lit(2L).as("seq")), dir, seqCol = Some("seq"))
-      assert(Ivf.liveAssigned(spark, dir)
-        .filter(col("vec_id") === 5L).count() == 0,
-        "sequenced tombstone did not apply after retrain")
-    } finally graft.io.Sources.removeScratchDir(dir)
   }
 
   test("two concurrent streaming writers into one catalog: independent ledgers, serialized commits") {

@@ -105,12 +105,15 @@ object Sources {
         if (visible.exists(_.isDirectory)) None
         else visible.sortBy(_.getName).headOption
       }
-    // an unreadable footer defers to Spark, which reports it as before
+    // an unreadable footer defers to Spark, which reports it as before;
+    // the options take the session's conf (the one-argument open parses
+    // a fresh Configuration, Hadoop's XML resources included, per call)
+    val conf = spark.sparkContext.hadoopConfiguration
     first.flatMap(pf => scala.util.Try {
       val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(pf.getAbsolutePath),
-          spark.sparkContext.hadoopConfiguration))
+          new org.apache.hadoop.fs.Path(pf.getAbsolutePath), conf),
+        org.apache.parquet.HadoopReadOptions.builder(conf).build())
       try rd.getFooter.getFileMetaData.getKeyValueMetaData.get(sparkSchemaKey)
       finally rd.close()
     }.toOption.flatMap(Option(_)))

@@ -60,9 +60,6 @@ object Exprs {
   def round5MinUp(ts: Column): Column =
     timestamp_seconds(ceil(unix_timestamp(ts) / 300) * 300)
 
-  /** Minus 30 minutes (app_calculador_recursos_modelo_atencion.py:204-217). */
-  def minus30Min(ts: Column): Column = ts - expr("INTERVAL 30 MINUTES")
-
   /**
    * Number of days in `d`'s month that share `d`'s weekday — closed form,
    * no calendar join (`contar_dias_mes`,
@@ -79,11 +76,6 @@ object Exprs {
    * (app_calculo_necesidad_recepción_call_center.py:601). */
   def weekOfMonth(d: Column): Column =
     (floor((dayofmonth(d) - 1) / 7) + 1).cast(IntegerType)
-
-  /** Timestamp difference in whole minutes (floored), second precision —
-   * (unix(a)-unix(b))/60 (app_indicadores_modelo_atencion.py:1152). */
-  def minutesBetween(a: Column, b: Column): Column =
-    floor((unix_timestamp(a) - unix_timestamp(b)) / 60).cast(LongType)
 
   /** `hh:mm:ss` duration string → minutes (double)
    * (app_indicadores_modelo_atencion.py:736-750). */

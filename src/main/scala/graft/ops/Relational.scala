@@ -28,19 +28,6 @@ object Relational {
       to_date(lit(start)), to_date(lit(end)),
       expr("INTERVAL 1 DAY"))).as(colName))
 
-  /** Hour spine 0..23 (SURVEY.md S12,
-   * app_calculo_necesidad_recepción_call_center.py:436). */
-  def hourSpine(spark: SparkSession, colName: String = "hora"): DataFrame =
-    spark.range(24).select(col("id").cast("int").as(colName))
-
-  /** 5-minute time grid between two times-of-day, as minutes since
-   * midnight (SURVEY.md S11,
-   * app_calculador_recursos_modelo_atencion.py:124-136: 06:30–19:00). */
-  def fiveMinGrid(spark: SparkSession, startMin: Int = 390, endMin: Int = 1140,
-                  colName: String = "min_of_day"): DataFrame =
-    spark.range(1).select(explode(sequence(
-      lit(startMin), lit(endMin), lit(5))).as(colName))
-
   /**
    * Left-join facts onto a spine and zero-fill the gaps (SURVEY.md J4/J5).
    * The FACTS side is broadcast: callers pass facts already aggregated to

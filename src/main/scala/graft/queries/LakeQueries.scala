@@ -932,11 +932,11 @@ object LakeQueries {
         round(col("c_acctbal") * 100, 0).cast("long").as("cents"))
       Versions.commit(cust.filter(col("k") % 3 =!= 0), root)
       Versions.commit(cust, root)
-      def sig(v: Int, tag: String): org.apache.spark.sql.DataFrame =
-        Versions.read(s, root, v).groupBy(concat(lit(tag), col("seg")).as("tag"))
-          .agg(count(lit(1)).as("n"), sum("cents").as("cents_sum"))
-      // time travel: BOTH versions read back side by side
-      val rows = sig(0, "v0:").unionByName(sig(1, "v1:")).localCheckpoint()
+      // time travel: BOTH versions read back side by side, sealed
+      // before the vacuum removes v0
+      val rows = Q.sealResult(Q.signatures("cents_sum", Seq(0, 1).map(v =>
+        (concat(lit(s"v$v:"), col("seg")), Versions.read(s, root, v),
+          col("cents"))): _*).orderBy("tag"))
       val v1Before = Versions.read(s, root, 1).count()
       val reclaimed = Versions.vacuum(root, keepFrom = 1)
       val v0Gone =
@@ -948,7 +948,7 @@ object LakeQueries {
         ("chk:v1_stable", Versions.read(s, root, 1).count() == v1Before),
         ("chk:vacuumed_one", reclaimed == 1)
       )
-      Q.sealReport(rows, gates, rows)
+      Q.sealReport(rows, gates)
     }
   }
 
@@ -1286,11 +1286,10 @@ object LakeQueries {
       Versions.commit(cust.select("k", "cents", "seg"), root) // v1: +seg
       val v0e = Versions.readEvolved(s, root, 0)
       val v1 = Versions.read(s, root, 1)
-      val rows = v0e.withColumn("ver", lit("v0"))
-        .unionByName(v1.withColumn("ver", lit("v1")))
-        .groupBy(concat(col("ver"), lit(":"),
-          coalesce(col("seg"), lit("(pre-evolution)"))).as("tag"))
-        .agg(count(lit(1)).as("n"), sum("cents").as("cents_sum"))
+      def tagged(ver: String) =
+        concat(lit(s"$ver:"), coalesce(col("seg"), lit("(pre-evolution)")))
+      val rows = Q.signatures("cents_sum",
+        (tagged("v0"), v0e, col("cents")), (tagged("v1"), v1, col("cents")))
       val gates = Seq(
         ("chk:evolved_schema_is_current",
           v0e.schema == v1.schema),
@@ -1355,13 +1354,11 @@ object LakeQueries {
         val bv0 = Versions.read(s, dst, 0)
         Versions.commit(bv0.filter(col("k") % 7 =!= 0)
           .select(col("k"), (col("cents") + 100L).as("cents")), dst)   // br v1
-        def sig(root: String, v: Int, tag: String) =
-          Versions.read(s, root, v)
-            .agg(count(lit(1)).as("n"), sum("cents").as("cents_sum"))
-            .select(lit(tag).as("tag"), col("n"), col("cents_sum"))
-        val rows = sig(src, 0, "src:v0").unionByName(sig(src, 1, "src:v1"))
-          .unionByName(sig(dst, 0, "branch:v0"))
-          .unionByName(sig(dst, 1, "branch:v1"))
+        val rows = Q.signatures("cents_sum",
+          Seq((src, "src"), (dst, "branch")).flatMap { case (root, name) =>
+            Seq(0, 1).map(v => (lit(s"$name:v$v"), Versions.read(s, root, v),
+              col("cents")))
+          }: _*)
         val sv0 = Versions.read(s, src, 0)
         val sameV0 = Checks.multisetEqual(bv0, sv0)
         val diverged = Versions.read(s, dst, 1)
@@ -1444,19 +1441,14 @@ object LakeQueries {
           .as("cents")), root)                                      // v2
       // three report queries, all against the SAME pinned snapshot
       def snapRead = Versions.read(s, root, snap)
-      val total = snapRead
-        .agg(count(lit(1)).as("n"), sum("cents").as("cents_sum"))
-        .select(lit("snap:total").as("tag"), col("n"), col("cents_sum"))
-      val buckets = snapRead
-        .groupBy(concat(lit("snap:bucket"), col("k") % 4).as("tag"))
-        .agg(count(lit(1)).as("n"), sum("cents").as("cents_sum"))
+      val sigs = Q.signatures("cents_sum",
+        (lit("snap:total"), snapRead, col("cents")),
+        (concat(lit("snap:bucket"), col("k") % 4), snapRead, col("cents")),
+        (lit("cur:total"), Versions.read(s, root), col("cents")))
       val top = snapRead
         .agg(max_by(col("k"), struct(col("cents"), col("k"))).as("n"),
           max("cents").as("cents_sum"))
         .select(lit("snap:top").as("tag"), col("n"), col("cents_sum"))
-      val cur = Versions.read(s, root)
-        .agg(count(lit(1)).as("n"), sum("cents").as("cents_sum"))
-        .select(lit("cur:total").as("tag"), col("n"), col("cents_sum"))
       val late = Versions.read(s, root, snap)
       val repeatable = Checks.multisetEqual(late, early)
       val gates = Seq(
@@ -1464,8 +1456,7 @@ object LakeQueries {
         ("chk:repeatable_read", repeatable),
         ("chk:writers_not_blocked", Versions.current(root) == 2)
       )
-      Q.sealReport(total.unionByName(buckets).unionByName(top)
-        .unionByName(cur), gates, early)
+      Q.sealReport(sigs.unionByName(top), gates, early)
     }
   }
 
@@ -1526,11 +1517,8 @@ object LakeQueries {
         catch { case _: CommitConflict => true }
       // A rebases through the optimistic-transaction loop → v2
       TxLog.readModifyWrite(s, root)(base => withA(base.get))
-      def sig(v: Int, tag: String) = TxLog.read(s, root, v)
-        .agg(count(lit(1)).as("n"), sum("cents").as("cents_sum"))
-        .select(lit(tag).as("tag"), col("n"), col("cents_sum"))
-      val rows = sig(0, "v0").unionByName(sig(1, "v1"))
-        .unionByName(sig(2, "v2"))
+      val rows = Q.signatures("cents_sum", (0 to 2).map(v =>
+        (lit(s"v$v"), TxLog.read(s, root, v), col("cents"))): _*)
       val dataDirs = Option(new java.io.File(root).listFiles()).toSeq
         .flatten.count(f => f.isDirectory && f.getName.startsWith("d"))
       val gates = Seq(
@@ -1599,12 +1587,11 @@ object LakeQueries {
         cust.filter(col("k") % 7 === 0).select("k"), root, "k")     // v2 (DV)
       // captured NOW: both deletes left the base's physical files alone
       val baseUntouched = filesOf(0) == baseBefore
-      def sig(v: Int, tag: String) = Versions.read(s, root, v)
-        .agg(count(lit(1)).as("n"), sum("cents").as("cents_sum"))
-        .select(lit(tag).as("tag"), col("n"), col("cents_sum"))
-      // time travel INTO the chain (v1) plus both endpoints
-      val rows = sig(0, "v0").unionByName(sig(1, "v1"))
-        .unionByName(sig(2, "v2")).localCheckpoint()
+      // time travel INTO the chain (v1) plus both endpoints, sealed
+      // before the vacuums remove the chain
+      val rows = Q.sealResult(Q.signatures("cents_sum", (0 to 2).map(v =>
+        (lit(s"v$v"), Versions.read(s, root, v), col("cents"))): _*)
+        .orderBy("tag"))
       // physical O(|keys|): the v1 dir holds exactly the deleted keys
       val rawDv = s.read.parquet(s"$root/v1")
       val dvCnt = Checks.counts(Seq(rawDv, del1.distinct())) // one job
@@ -1625,7 +1612,7 @@ object LakeQueries {
         ("chk:vacuum_floor_guard", preReclaim == 0 && chainStillReads),
         ("chk:vacuum_after_compact", postReclaim == 3 && survived)
       )
-      Q.sealReport(rows, gates, rows, v2Resolved)
+      Q.sealReport(rows, gates, v2Resolved)
     }
   }
 
@@ -1689,11 +1676,10 @@ object LakeQueries {
           Versions.read(s, root).filter(col("k") % 4 === 0)
             .select("k"), root, "k")                                  // v2 (DV)
         val baseUntouched = filesOf(0) == baseBefore
-        def sig(v: Int, tag: String) = Versions.read(s, root, v)
-          .agg(count(lit(1)).as("n"), sum("cents").as("cents_sum"))
-          .select(lit(tag).as("tag"), col("n"), col("cents_sum"))
-        val rows = sig(0, "v0").unionByName(sig(1, "v1"))
-          .unionByName(sig(2, "v2")).localCheckpoint()
+        // the chain's three versions, sealed on the driver (bounded)
+        val rows = Q.sealResult(Q.signatures("cents_sum", (0 to 2).map(v =>
+          (lit(s"v$v"), Versions.read(s, root, v), col("cents"))): _*)
+          .orderBy("tag"))
         val deltaCnt = Checks.counts(
           Seq(s.read.parquet(s"$root/v1"), delta)) // one job
         val deltaOk = deltaCnt(0) == deltaCnt(1)
@@ -1710,7 +1696,7 @@ object LakeQueries {
           ("chk:compacted_equiv", compactEquiv),
           ("chk:delta_is_o_rows", deltaOk)
         )
-        Q.sealReport(rows, gates, rows, v2Resolved)
+        Q.sealReport(rows, gates, v2Resolved)
       }
     }
   }
@@ -1840,10 +1826,8 @@ object LakeQueries {
       val oldFails =
         try { TxLog.read(s, root, 5); false }
         catch { case _: IllegalArgumentException => true }
-      def sig(v: Int, tag: String) = TxLog.read(s, root, v)
-        .agg(count(lit(1)).as("n"), sum("cents").as("cents_sum"))
-        .select(lit(tag).as("tag"), col("n"), col("cents_sum"))
-      val rows = sig(10, "v10").unionByName(sig(11, "v11"))
+      val rows = Q.signatures("cents_sum", Seq(10, 11).map(v =>
+        (lit(s"v$v"), TxLog.read(s, root, v), col("cents"))): _*)
       val logFiles = Option(new java.io.File(root, "_commits")
         .listFiles()).toSeq.flatten.map(_.getName).toSet
       // a new commit rides the vacuumed log without missing a beat
@@ -1907,35 +1891,31 @@ object LakeQueries {
         keyCols = Seq("event_type"),
         countCol = Some("n"),
         sumCols = Map("event_id" -> "id_sum"))
-      val (rows, fired, ctrlDistinct, ctrlFilter, composes) =
-        ViewRewrite.withRule(s, spec) {
-          val q = userAgg()
-          val fired = ViewRewrite.answeredBy(root, "events.parquet")(q)
-          val out = q.select(
-            concat(lit("et:"),
-              coalesce(col("event_type"), lit("(null)"))).as("tag"),
-            col("n"), col("id_sum")).localCheckpoint()
-          // negative controls: shapes the view cannot answer must keep
-          // scanning the base
-          val d1 = ViewRewrite.scannedPaths(ev.groupBy("event_type")
-            .agg(countDistinct(col("event_id")).as("n")))
-          val d2 = ViewRewrite.scannedPaths(
-            ev.filter(col("event_id") % 2 === 0)
-              .groupBy("event_type")
-              .agg(count(lit(1)).as("n"), sum("event_id").as("id_sum")))
-          // ExprId stability: an operator ABOVE the rewritten aggregate
-          // still resolves and computes
-          val composes = userAgg().filter(col("n") > 0).count() == out.count()
-          (out, fired, d1.exists(_.contains("events.parquet")),
-            d2.exists(_.contains("events.parquet")), composes)
-        }
-      val gates = Seq(
-        ("chk:composes_above", composes),
-        ("chk:distinct_unrewritten", ctrlDistinct),
-        ("chk:filter_unrewritten", ctrlFilter),
-        ("chk:rewrite_fired", fired)
-      )
-      Q.sealReport(rows, gates, rows)
+      ViewRewrite.withRule(s, spec) {
+        val q = userAgg()
+        val fired = ViewRewrite.answeredBy(root, "events.parquet")(q)
+        val out = q.select(
+          concat(lit("et:"),
+            coalesce(col("event_type"), lit("(null)"))).as("tag"),
+          col("n"), col("id_sum"))
+        // negative controls: shapes the view cannot answer must keep
+        // scanning the base
+        val d1 = ViewRewrite.scannedPaths(ev.groupBy("event_type")
+          .agg(countDistinct(col("event_id")).as("n")))
+        val d2 = ViewRewrite.scannedPaths(
+          ev.filter(col("event_id") % 2 === 0)
+            .groupBy("event_type")
+            .agg(count(lit(1)).as("n"), sum("event_id").as("id_sum")))
+        // ExprId stability: an operator ABOVE the rewritten aggregate
+        // still resolves and computes
+        val composes = userAgg().filter(col("n") > 0).count() == out.count()
+        Q.sealReport(out, Seq(
+          ("chk:composes_above", composes),
+          ("chk:distinct_unrewritten", d1.exists(_.contains("events.parquet"))),
+          ("chk:filter_unrewritten", d2.exists(_.contains("events.parquet"))),
+          ("chk:rewrite_fired", fired)
+        ))
+      }
     }
   }
 
@@ -2001,7 +1981,7 @@ object LakeQueries {
       val fired = ViewRewrite.answeredBy(root, "events.parquet") _
       def scansBase(df: org.apache.spark.sql.DataFrame): Boolean =
         ViewRewrite.scannedPaths(df).exists(_.contains("events.parquet"))
-      val (rows, gates) = ViewRewrite.withRule(s, spec) {
+      ViewRewrite.withRule(s, spec) {
         val byType = ev.groupBy("event_type")
           .agg(count(lit(1)).as("n"), sum("event_id").as("id_sum"),
             avg(col("event_id")).as("avg_id"))
@@ -2013,8 +1993,7 @@ object LakeQueries {
             col("n"), col("id_sum"), col("avg_id"))
           .unionByName(global.select(lit("all").as("tag"),
             col("n"), col("id_sum"), col("avg_id")))
-          .localCheckpoint()
-        val gates = Seq(
+        Q.sealReport(out, Seq(
           ("chk:avg_unclaimed_unrewritten", scansBase(
             table(s, d, "events").select("event_type", "value")
               .groupBy("event_type").agg(avg(col("value")).as("a")))),
@@ -2026,10 +2005,8 @@ object LakeQueries {
               .groupBy("props").agg(count(lit(1)).as("n")))),
           ("chk:null_count_unrewritten", scansBase(
             ev.groupBy("event_type").agg(count(lit(null)).as("n")))),
-          ("chk:rollup_fired", fired(byType)))
-        (out, gates)
+          ("chk:rollup_fired", fired(byType))))
       }
-      Q.sealReport(rows, gates, rows)
     }
   }
 
@@ -2194,12 +2171,9 @@ object LakeQueries {
       // snapshot-derived retention: history goes, cataloged reads stay
       val reclaimed = Catalog.vacuumTo(root)
       val vacuumSafe = reclaimed > 0 && invariantHolds(Catalog.snapshot(root))
-      val rows = Catalog.read(s, root, "accounts")
-        .agg(count(lit(1)).as("n"), sum("bal").as("cents_sum"))
-        .select(lit("accounts").as("tag"), col("n"), col("cents_sum"))
-        .unionByName(Catalog.read(s, root, "ledger")
-          .agg(count(lit(1)).as("n"), sum("amount").as("cents_sum"))
-          .select(lit("ledger").as("tag"), col("n"), col("cents_sum")))
+      val rows = Q.signatures("cents_sum",
+        (lit("accounts"), Catalog.read(s, root, "accounts"), col("bal")),
+        (lit("ledger"), Catalog.read(s, root, "ledger"), col("amount")))
       val gates = Seq(
         ("chk:asof_consistent", asofOk),
         ("chk:conflict_loud", conflictLoud),
@@ -2296,14 +2270,13 @@ object LakeQueries {
       val dvPhysical = pc(0) == pc(1)
       val upPhysical = pc(2) == pc(3)
       val timeTravel = pc(4) == nBase
-      def sig(df: org.apache.spark.sql.DataFrame, tag: String) =
-        df.agg(count(lit(1)).as("n"), sum("cents").as("cents_sum"))
-          .select(lit(tag).as("tag"), col("n"), col("cents_sum"))
       val finDf = TxLog.read(s, root, 2)
       val finCount = finDf.count() // before vacuum removes chain files
-      val sigRows = sig(finDf, "state:final")
-        .unionByName(sig(TxLog.read(s, root, 1), "state:v1"))
-        .localCheckpoint() // materialize before vacuum removes the chain
+      // sealed before vacuum removes the chain
+      val sigRows = Q.sealResult(Q.signatures("cents_sum",
+        (lit("state:final"), finDf, col("cents")),
+        (lit("state:v1"), TxLog.read(s, root, 1), col("cents")))
+        .orderBy("tag"))
       // retention floor auto-lowers to the chain base: keeping only the
       // chain head must reclaim NOTHING (v0 is its base)
       val vacuumFloor = TxLog.vacuum(root, keepFrom = 2) == 0 &&
@@ -2328,7 +2301,7 @@ object LakeQueries {
         ("chk:vacuum_floor", vacuumFloor),
         ("chk:vacuumed_after_compact", vacuumedAfter)
       )
-      Q.sealReport(sigRows, gates, sigRows, cust)
+      Q.sealReport(sigRows, gates, cust)
     }
   }
 
@@ -2416,8 +2389,7 @@ object LakeQueries {
           else f.length()
         walk(new java.io.File(s"$root/$sub"))
       }
-      val (rows, gates) = ViewRewrite.withViews(s,
-        Seq(coarse, fine, finez)) {
+      ViewRewrite.withViews(s, Seq(coarse, fine, finez)) {
         val qCount = ev.groupBy("event_type").agg(count(lit(1)).as("n"))
         val qSum = ev.groupBy("event_type")
           .agg(count(lit(1)).as("n"), sum("event_id").as("id_sum"))
@@ -2435,8 +2407,7 @@ object LakeQueries {
             lit(0L).as("id_sum")))
           .unionByName(qFiltered.select(lit("flt:click").as("tag"),
             col("n"), col("id_sum")))
-          .localCheckpoint()
-        val gates = Seq(
+        Q.sealReport(out, Seq(
           ("chk:base_never_scanned",
             Seq(qCount, qSum, qTwoKey, qGlobal, qFiltered).forall(q =>
               !pathsOf(q).exists(_.contains("events.parquet")))),
@@ -2450,10 +2421,8 @@ object LakeQueries {
           ("chk:fine_for_sum", chose(qSum, "fine")),
           // under the key filter the byte-larger but range-sorted twin
           // wins: its surviving row groups cost less than fine's total
-          ("chk:zonemap_picks_sorted", chose(qFiltered, "finez")))
-        (out, gates)
+          ("chk:zonemap_picks_sorted", chose(qFiltered, "finez"))))
       }
-      Q.sealReport(rows, gates, rows)
     }
   }
 
@@ -2568,12 +2537,9 @@ object LakeQueries {
         val chainProtected = chainReclaim == 0 &&
           Versions.read(s, chain).count() ==
             cust.filter(col("k") % 4 =!= 0).count()
-        val rows = Catalog.read(s, cat, "accounts")
-          .agg(count(lit(1)).as("n"), sum("bal").as("cents_sum"))
-          .select(lit("accounts").as("tag"), col("n"), col("cents_sum"))
-          .unionByName(Catalog.read(s, cat, "ledger")
-            .agg(count(lit(1)).as("n"), sum("amount").as("cents_sum"))
-            .select(lit("ledger").as("tag"), col("n"), col("cents_sum")))
+        val rows = Q.signatures("cents_sum",
+          (lit("accounts"), Catalog.read(s, cat, "accounts"), col("bal")),
+          (lit("ledger"), Catalog.read(s, cat, "ledger"), col("amount")))
         val gates = Seq(
           ("chk:aged_reclaimed", reclaimed == 4),
           ("chk:cataloged_survives", catalogedSurvives),
@@ -2638,7 +2604,7 @@ object LakeQueries {
         sumCols = Map("event_id" -> "id_sum"),
         nonNullCols = Set("event_id"))
       val fired = ViewRewrite.answeredBy(root, "events.parquet") _
-      val (rows, gates) = ViewRewrite.withRule(s, spec) {
+      ViewRewrite.withRule(s, spec) {
         // IN-filter on one key, roll-up to it, with derived avg
         val byType = ev.filter(col("event_type").isin("click", "view"))
           .groupBy("event_type")
@@ -2657,18 +2623,15 @@ object LakeQueries {
             col("n"), col("id_sum"), col("avg_id"))
           .unionByName(rng.select(lit("users_lt_50").as("tag"),
             col("n"), col("id_sum"), lit(0.0).as("avg_id")))
-          .localCheckpoint()
-        val gates = Seq(
+        Q.sealReport(out, Seq(
           ("chk:exact_filtered_fired", fired(exact)),
           ("chk:global_filtered_fired", fired(rng)),
           ("chk:nonkey_filter_unrewritten", ViewRewrite.scannedPaths(
             ev.filter(col("event_id") % 2 === 0).groupBy("event_type")
               .agg(count(lit(1)).as("n")))
             .exists(_.contains("events.parquet"))),
-          ("chk:rollup_filtered_fired", fired(byType)))
-        (out, gates)
+          ("chk:rollup_filtered_fired", fired(byType))))
       }
-      Q.sealReport(rows, gates, rows)
     }
   }
 
@@ -2869,15 +2832,14 @@ object LakeQueries {
         b == baseSum + a }
       val asofOk = snapRows(1)._1 == baseSum + snapRows(1)._2 &&
         snapRows(1)._1 != snapRows(4)._1 // snap1 vs snapF bank sums
-      def sig(df: org.apache.spark.sql.DataFrame, tag: String) =
-        df.agg(count(lit(1)).as("n"), sum("cents").as("cents_sum"))
-          .select(lit(tag).as("tag"), col("n"), col("cents_sum"))
-      val sigRows = sig(Catalog.read(s, root, "bank", snapF), "state:final")
-        .unionByName(sig(Catalog.read(s, root, "bank", snap1), "state:v1"))
+      // sealed before retention removes files
+      val sigRows = Q.sealResult(Q.signatures("cents_sum",
+          (lit("state:final"), Catalog.read(s, root, "bank", snapF), col("cents")),
+          (lit("state:v1"), Catalog.read(s, root, "bank", snap1), col("cents")))
         .unionByName(Catalog.read(s, root, "audit", snapF)
           .select(concat(lit("audit:"), col("op")).as("tag"),
             col("n"), col("delta").as("cents_sum")))
-        .localCheckpoint() // materialize before retention removes files
+        .orderBy("tag"))
       // snapshot-derived retention, each member through ITS OWN core
       val reclaimed = Catalog.vacuumTo(root)
       val vacuumSafe = reclaimed > 0 &&
@@ -2895,7 +2857,7 @@ object LakeQueries {
         ("chk:upsert_physical", upPhysical),
         ("chk:vacuum_safe", vacuumSafe)
       )
-      Q.sealReport(sigRows, gates, sigRows, cust)
+      Q.sealReport(sigRows, gates, cust)
     }
   }
 
@@ -2948,7 +2910,7 @@ object LakeQueries {
         minCols = Map("event_id" -> "id_min"),
         maxCols = Map("event_id" -> "id_max"))
       val fired = ViewRewrite.answeredBy(root, "events.parquet") _
-      val (rows, gates) = ViewRewrite.withRule(s, spec) {
+      ViewRewrite.withRule(s, spec) {
         val byType = ev.groupBy("event_type")
           .agg(count(lit(1)).as("n"), min("event_id").as("id_min"),
             max("event_id").as("id_max"))
@@ -2960,8 +2922,7 @@ object LakeQueries {
             col("n"), col("id_min"), col("id_max"))
           .unionByName(global.select(lit("all").as("tag"),
             col("n"), col("id_min"), col("id_max")))
-          .localCheckpoint()
-        val gates = Seq(
+        Q.sealReport(out, Seq(
           ("chk:exact_fired", fired(ev.groupBy("event_type", "user_id")
             .agg(min("event_id").as("id_min"),
               max("event_id").as("id_max")))),
@@ -2970,10 +2931,8 @@ object LakeQueries {
           ("chk:unregistered_unrewritten", ViewRewrite.scannedPaths(
             table(s, d, "events").select("event_type", "value")
               .groupBy("event_type").agg(min(col("value")).as("m")))
-            .exists(_.contains("events.parquet"))))
-        (out, gates)
+            .exists(_.contains("events.parquet")))))
       }
-      Q.sealReport(rows, gates, rows)
     }
   }
 
@@ -3033,12 +2992,14 @@ object LakeQueries {
         maxCols = Map("event_id" -> "id_max"),
         viewRoot = Some(root)) // LIVE: resolved at plan time
       val fired = ViewRewrite.answeredBy(root, "events.parquet") _
-      val (rows, gates) = ViewRewrite.withRule(s, spec) {
+      ViewRewrite.withRule(s, spec) {
         def ask() = ev.groupBy("event_type")
           .agg(count(lit(1)).as("n"), sum("event_id").as("id_sum"),
             min("event_id").as("id_min"), max("event_id").as("id_max"))
         // BEFORE the refresh: stale-but-consistent (slice totals)
-        val stale = ask().localCheckpoint()
+        // sealed as the rule answers it at the plan's root; the
+        // equality check below reads these rows, not a re-plan
+        val stale = Q.sealResult(ask().orderBy("event_type"))
         val staleFired = fired(ask())
         val sliceTruth = viewOf(ev.filter(col("event_id") % 10 =!= 0))
         val staleConsistent = Checks.multisetEqual(stale, sliceTruth)
@@ -3049,19 +3010,15 @@ object LakeQueries {
             concat(lit("et:"),
               coalesce(col("event_type"), lit("(null)"))).as("tag"),
             col("n"), col("id_sum"), col("id_min"), col("id_max"))
-          .localCheckpoint()
-        val gates = Seq(
+        Q.sealReport(out, Seq(
           ("chk:fresh_scans_new_version",
             freshScans.exists(_.contains(s"$root/v1")) &&
               !freshScans.exists(_.contains(s"$root/v0")) &&
               !freshScans.exists(_.contains("events.parquet"))),
           ("chk:refresh_is_reregister", fired(ask())),
           ("chk:stale_fired", staleFired),
-          ("chk:stale_consistent", staleConsistent))
-        stale.unpersist()
-        (out, gates)
+          ("chk:stale_consistent", staleConsistent)))
       }
-      Q.sealReport(rows, gates, rows)
     }
   }
 
@@ -3459,9 +3416,10 @@ object LakeQueries {
           (p.getLong(0), p.getLong(1), p.getLong(2), p.getLong(3))
         val nullBackfilled = nNullTier == nAll - nGold && nNullTier > 0
         val dvComposes = nDv3 == 0 && nAll < nBase
-        val rows = gotV.groupBy(
-            coalesce(col("tier"), lit("(base)")).as("tier"), col("seg"))
-          .agg(count(lit(1)).as("n"), sum("cents").as("cents_sum"))
+        val rows = Q.signatures("cents_sum", (struct(
+            coalesce(col("tier"), lit("(base)")).as("tier"), col("seg")),
+            gotV, col("cents")))
+          .select(col("tag.tier"), col("tag.seg"), col("n"), col("cents_sum"))
         import s.implicits._
         val chks = Seq(
           ("chk:cores_agree", coresAgree),
@@ -3744,9 +3702,8 @@ object LakeQueries {
         val stepsMatch = gates(0)
         val telescopes = gates(1)
         val viewMatches = gates(3)
-        val stepRows = feed.groupBy(
-            concat(lit("v"), cv, lit(":"), ct).as("tag"))
-          .agg(count(lit(1)).as("n"), sum("cents").as("cents_sum"))
+        val stepRows = Q.signatures("cents_sum",
+          (concat(lit("v"), cv, lit(":"), ct), feed, col("cents")))
         val segRows = got.select(concat(lit("seg:"), col("seg")).as("tag"),
           col("n"), col("cents_sum"))
         Q.sealReport(stepRows.unionByName(segRows), Seq(

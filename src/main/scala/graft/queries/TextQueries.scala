@@ -1370,14 +1370,9 @@ object TextQueries {
         val onePass = c(2) == c(3) // still unfolded: no compact
         val staleDead = c(4) == 0
         val recallOk = c(5).toDouble / c(6) >= 0.6
-        val rows = del.select(lit("act:deleted").as("tag"), col("vec_id"))
-          .groupBy("tag").agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum"))
-          .unionByName(ins.groupBy(lit("act:inserted").as("tag"))
-            .agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum")))
-          .unionByName(upd.groupBy(lit("act:updated").as("tag"))
-            .agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum")))
-          .unionByName(v1r.groupBy(lit("live:index").as("tag"))
-            .agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum")))
+        val rows = Q.signatures("id_sum", Seq("act:deleted" -> del,
+            "act:inserted" -> ins, "act:updated" -> upd, "live:index" -> v1r)
+          .map { case (tag, df) => (lit(tag), df, col("vec_id")) }: _*)
         val gates = Seq(
           ("chk:live_set_equals_v1", liveEq),
           ("chk:no_retrain", centroidValues() == centroidsBefore),
@@ -2135,10 +2130,9 @@ object TextQueries {
         val liveEq = c(0) == 0 && c(1) == 0
         val nDelUpd = c(2)
         val recallOk = c(3).toDouble / c(4) >= 0.6
-        val rows = cdf.groupBy(concat(lit("act:"), col("action")).as("tag"))
-          .agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum"))
-          .unionByName(v1r.agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum"))
-            .select(lit("live:index").as("tag"), col("n"), col("id_sum")))
+        val rows = Q.signatures("id_sum",
+          (concat(lit("act:"), col("action")), cdf, col("vec_id")),
+          (lit("live:index"), v1r, col("vec_id")))
         val gates = Seq(
           ("chk:live_set_equals_v1", liveEq),
           ("chk:no_retrain", centroidValues() == centroidsBefore),
@@ -2254,14 +2248,9 @@ object TextQueries {
       val onePass = c(2) == c(3)
       val staleDead = c(4) == 0
       val recallOk = c(5).toDouble / c(6) >= 0.55
-      val rows = del.select(lit("act:deleted").as("tag"), col("vec_id"))
-        .groupBy("tag").agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum"))
-        .unionByName(ins.groupBy(lit("act:inserted").as("tag"))
-          .agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum")))
-        .unionByName(upd.groupBy(lit("act:updated").as("tag"))
-          .agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum")))
-        .unionByName(v1r.groupBy(lit("live:index").as("tag"))
-          .agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum")))
+      val rows = Q.signatures("id_sum", Seq("act:deleted" -> del,
+          "act:inserted" -> ins, "act:updated" -> upd, "live:index" -> v1r)
+        .map { case (tag, df) => (lit(tag), df, col("vec_id")) }: _*)
       val gates = Seq(
         ("chk:live_set_equals_v1", liveEq),
         ("chk:no_refit", frozenValues() == frozenBefore),
@@ -2386,10 +2375,9 @@ object TextQueries {
         truth))
       val seqDeleteWorks = c(0) == 0 && c(1) == 0
       val recallOk = c(2).toDouble / c(3) >= 0.55
-      val rows = v1r.groupBy(lit("live:after_compact").as("tag"))
-        .agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum"))
-        .unionByName(v2r.groupBy(lit("live:after_retrain_delete").as("tag"))
-          .agg(count(lit(1)).as("n"), sum("vec_id").as("id_sum")))
+      val rows = Q.signatures("id_sum",
+        (lit("live:after_compact"), v1r, col("vec_id")),
+        (lit("live:after_retrain_delete"), v2r, col("vec_id")))
       val gates = Seq(
         ("chk:codebooks_frozen", codebooksFrozen),
         ("chk:compact_folds_exactly", compactExact),

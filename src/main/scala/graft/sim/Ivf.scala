@@ -250,8 +250,16 @@ object Ivf {
   private[graft] def tombstones(spark: SparkSession,
                                 dir: String): Option[DataFrame] =
     if (new java.io.File(s"$dir/tombstones").isDirectory)
-      Some(spark.read.parquet(s"$dir/tombstones"))
+      Some(readTable(spark, s"$dir/tombstones"))
     else None
+
+  /** One index table, its schema read from a footer on the driver
+    * ([[graft.io.Sources.footerSchema]]), not by an inference job.
+    * Uncached: a rename swap puts a table of another layout (`codes`, a
+    * seq column) under the same path. */
+  private def readTable(spark: SparkSession, path: String): DataFrame =
+    graft.io.Sources.footerSchema(spark, new java.io.File(path))
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
 
   /** The seq column the index was built with, or None. */
   private def seqColOf(dir: String): Option[String] = {
@@ -294,7 +302,7 @@ object Ivf {
     // silently vanish. Fail HERE, not at some later probe.
     val aDir = new java.io.File(s"$dir/assigned")
     if (aDir.isDirectory) {
-      val existing = spark.read.parquet(aDir.getAbsolutePath).columns.toSet
+      val existing = readTable(spark, aDir.getAbsolutePath).columns.toSet
       require(existing == out.columns.toSet,
         s"append schema ${out.columns.toSet} does not match the " +
           s"index's $existing under $dir — pass the same seqCol the " +
@@ -360,7 +368,7 @@ object Ivf {
       else if (new java.io.File(s"$dir/assigned_old").isDirectory)
         s"$dir/assigned_old"
       else s"$dir/assigned" // fail in the read with the canonical path
-    val assigned = spark.read.parquet(src)
+    val assigned = readTable(spark, src)
     tombstones(spark, dir).fold(assigned) { tombs =>
       tombs.columns.filterNot(_ == idCol).headOption match {
         case None => assigned.join(tombs, Seq(idCol), "left_anti")
@@ -527,7 +535,7 @@ object Ivf {
   def compactIndex(spark: SparkSession, dir: String,
                    idCol: String = "vec_id"): (Long, Long, Long) = {
     recoverSwap(dir)
-    val before = spark.read.parquet(s"$dir/assigned").count()
+    val before = readTable(spark, s"$dir/assigned").count()
     if (!new java.io.File(s"$dir/tombstones").isDirectory)
       return (before, 0L, before)
     liveAssigned(spark, dir, idCol)
@@ -536,7 +544,7 @@ object Ivf {
     // was configured not to write it, not at some future crash
     require(new java.io.File(s"$dir/assigned_compacting/_SUCCESS").isFile,
       s"compaction wrote no _SUCCESS marker under $dir")
-    val after = spark.read.parquet(s"$dir/assigned_compacting").count()
+    val after = readTable(spark, s"$dir/assigned_compacting").count()
     val assigned = new java.io.File(s"$dir/assigned")
     val old = new java.io.File(s"$dir/assigned_old")
     require(assigned.renameTo(old), s"compaction swap failed for $dir")
@@ -557,7 +565,10 @@ object Ivf {
    * one map-side pass over the flagged rows' STORED unit vectors (no
    * corpus re-read, no re-normalization). New cluster ids reuse the
    * flagged ids first, then extend past the current max, so untouched
-   * ids never move. The assignment AND centroid rewrites are ONE
+   * ids never move — unless fewer new cells than flagged ones leave a
+   * hole: then the rewrite renumbers every id dense, in order, because
+   * each consumer takes the array POSITION [[graft.functions.
+   * NearestCentroids]] returns as the stored id. The assignment AND centroid rewrites are ONE
    * staged transaction: both new tables land complete (`assigned_
    * retraining` + `centroids_new`, each `_SUCCESS`-gated) BEFORE any
    * rename, and [[recoverSwap]] at writer entry rolls the pair forward
@@ -607,24 +618,28 @@ object Ivf {
         .limit(kNew).collect().map(_.getSeq[Double](0).toArray)
     val newCenters = kmeansFit(train, kNew)
     val usedIds = newIds.take(newCenters.length)
+    // stored id -> dense id (the identity unless a flagged id went unused)
+    val dense = (kept.map(_._1) ++ usedIds).sorted.zipWithIndex.toMap
+    val denseNew = usedIds.map(dense)
     // preserve the assignment table's FULL column set (a sequenced
     // index carries a seq column beyond (id, cluster, cu) — dropping
     // it here would brick every later sequenced tombstone read)
     val outCols = assigned.columns.toSeq.map(col)
     val reassigned = hot.withColumn("cluster",
-        get(typedLit(usedIds), // 0-based lookup by a COLUMN index
+        get(typedLit(denseNew), // 0-based lookup by a COLUMN index
           element_at(nearestK(col("cu"), newCenters, 1), 1)))
       .select(outCols: _*)
     // stage BOTH tables complete before any rename — the staged pair
     // is the retrain transaction recoverSwap rolls forward or back
     assigned.filter(!col("cluster").isin(cells: _*))
+      .withColumn("cluster", element_at(typedLit(dense), col("cluster")))
       .select(outCols: _*)
       .unionByName(reassigned)
       .write.parquet(s"$dir/assigned_retraining")
     require(new java.io.File(s"$dir/assigned_retraining/_SUCCESS").isFile,
       s"retrain wrote no _SUCCESS marker under $dir")
     val rows = (kept ++ usedIds.zip(newCenters))
-      .map { case (id, v) => Row(id, v.toSeq) }
+      .map { case (id, v) => Row(dense(id), v.toSeq) }
     spark.createDataFrame(
         spark.sparkContext.parallelize(rows.toSeq, 1), centroidSchema)
       .write.parquet(s"$dir/centroids_new")
@@ -632,7 +647,7 @@ object Ivf {
       s"retrain wrote no _SUCCESS marker under $dir/centroids_new")
     // swap assigned, then centroids — resumable from every crash point
     finishRetrainSwap(dir, dropTombstones = true) // folded by the rewrite
-    (nHot, usedIds)
+    (nHot, denseNew)
   }
 
   /** Memoized persisted indexes over the harness embeddings table, one

@@ -2,7 +2,6 @@ package graft.text
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.ops.Exprs
 
 /**
  * Text-analysis operators for a training-data pipeline: tokenization,
@@ -160,8 +159,4 @@ object TextAnalysis {
    * the exact-dedup key. */
   def fingerprint(text: Column): Column =
     md5(regexp_replace(trim(lower(text)), "\\s+", " "))
-
-  /** 60-bit numeric fingerprint (for bucketing / rolling comparisons). */
-  def fingerprint60(text: Column): Column = Exprs.md5Long(
-    regexp_replace(trim(lower(text)), "\\s+", " "))
 }

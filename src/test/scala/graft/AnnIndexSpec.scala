@@ -230,6 +230,35 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("partialRetrain keeps cluster ids dense: appends and full probes route to stored centroids") {
+    import graft.sim.{Ivf, Similarity}
+    val emb = graft.io.Sources.table(spark, sf001, "embeddings")
+      .filter(col("embedding").isNotNull).localCheckpoint()
+    val base = emb.filter(pmod(col("vec_id"), lit(10)) =!= 0)
+    val delta = emb.filter(pmod(col("vec_id"), lit(10)) === 0)
+    graft.io.Sources.withScratch("graft_retrain_dense_spec") { dir =>
+      Ivf.persistIndex(base, dir, nClusters = 8)
+      // three flagged cells, two new ones: the retrain frees one id
+      Ivf.partialRetrain(spark, dir, cells = Seq(0, 1, 2), kNew = 2)
+      Ivf.appendToIndex(delta, dir)
+      val ids = Ivf.centroids(spark, dir).map(_._1).toSeq
+      val appended = Ivf.liveAssigned(spark, dir)
+        .join(delta.select("vec_id"), Seq("vec_id"), "left_semi")
+      val strays = appended.filter(!col("cluster").isin(ids: _*))
+        .select("cluster").distinct().collect().map(_.getInt(0))
+      assert(strays.isEmpty, s"appended rows routed to cluster ids " +
+        s"${strays.mkString(", ")}, which no stored centroid has (${ids.mkString(", ")})")
+      // probing every cell must find exactly the brute-force top-k
+      val queries = emb.filter(col("vec_id") < 20)
+      val got = Ivf.probeIndex(queries, dir, k = 5, nProbe = ids.size)
+        .select("qid", "nid")
+      val truth = Similarity.bruteForceTopK(queries, emb, k = 5)
+        .select("qid", "nid")
+      assert(got.exceptAll(truth).isEmpty && truth.exceptAll(got).isEmpty,
+        "a probe of every cell missed brute-force neighbours")
+    }
+  }
+
   test("only sim/Ivf.scala and sim/IvfPq.scala spell an index sub-path under src/main") {
     // the layout has one owner; a module that spells `s"$dir/assigned"`
     // or `new File(dir, "centroids")` itself has forked it again

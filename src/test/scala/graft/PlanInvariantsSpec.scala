@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
 import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, Join, LogicalPlan}
 import org.scalatest.funsuite.AnyFunSuite
 

@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * committed version's schema comes off its parquet footer on the
   * driver (no schema-inference job), and [[graft.queries.Q.sealResult]]
   * materializes a sorted, bounded result with one top-K job — also
-  * behind the lifecycle-report format ([[graft.queries.Q.sealReport]]). */
+  * behind the lifecycle-report format ([[graft.queries.Q.sealReport]]),
+  * whose signature rows [[graft.queries.Q.signatures]] aggregates in
+  * one job whatever the number of tags. */
 class ProtocolJobsSpec extends AnyFunSuite with SparkSpec {
 
   import graft.io.Sources
@@ -126,6 +128,84 @@ class ProtocolJobsSpec extends AnyFunSuite with SparkSpec {
       Seq(("chk", "string", true), ("ok", "boolean", false)))
     assert(out.collect().map(r => (r.getString(0), r.getBoolean(1))).toSeq ==
       Seq(("a_first", true), ("b_second", false)))
+  }
+
+  /** Six parquet tables under `dir`, 40 rows each, with a Long measure
+    * `x` = id · (table number + 1). */
+  private def sigTables(dir: String) = (0 until 6).map { i =>
+    spark.range(0, 40, 1, 4).select((col("id") * (i + 1)).as("x"))
+      .write.mode("overwrite").parquet(s"$dir/t$i")
+    Sources.cachedParquet(spark, s"$dir/t$i")
+  }
+  private def sigRow(r: org.apache.spark.sql.Row) =
+    (r.getString(0), r.getLong(1), Option(r.get(2)))
+
+  test("signatures: one aggregate for the set, the same job count for 6 tags as for 3") {
+    val dir = Sources.scratchDir("graft_sig_jobs")
+    try {
+      val tables = sigTables(dir)
+      def run(nTags: Int) = JobCount(spark.sparkContext)(Q.signatures("x_sum",
+        tables.take(nTags).zipWithIndex.map { case (t, i) =>
+          (lit(s"t$i"), t, col("x")) }: _*).orderBy("tag").collect())
+      val (_, jobs3) = run(3)
+      val (six, jobs6) = run(6)
+      assert(jobs3 == jobs6, s"3 tags ran $jobs3 jobs, 6 tags ran $jobs6")
+      assert(six.map(sigRow).toSeq == (0 until 6).map(i =>
+        (s"t$i", 40L, Some(780L * (i + 1)))))
+    } finally Sources.removeScratchDir(dir)
+  }
+
+  test("signatures: a literal tag over an empty frame is (tag, 0, null), as a global aggregate gives") {
+    val empty = spark.range(0).select(col("id").as("x"))
+    val out = Q.signatures("x_sum", (lit("none"), empty, col("x")),
+      (lit("one"), spark.range(5, 6).select(col("id").as("x")), col("x")))
+      .orderBy("tag")
+    assert(out.schema("n").dataType == org.apache.spark.sql.types.LongType)
+    val global = empty.agg(count(lit(1)).as("n"), sum("x").as("x_sum"))
+      .select(lit("none").as("tag"), col("n"), col("x_sum"))
+    assert(out.collect().map(sigRow).toSeq ==
+      global.collect().map(sigRow).toSeq :+ (("one", 1L, Some(5L))))
+    assert(global.collect().map(sigRow).toSeq == Seq(("none", 0L, None)))
+  }
+
+  test("signatures: a column tag emits only the tags present") {
+    val g = spark.range(0, 10).select(concat(lit("g:"), col("id") % 3).as("g"),
+      col("id").as("x"))
+    val out = Q.signatures("x_sum",
+      (col("g"), g.filter(col("g") =!= "g:1"), col("x")),
+      (concat(lit("h:"), col("x")), g.filter(col("x") > 100), col("x")))
+      .orderBy("tag")
+    assert(out.collect().map(sigRow).toSeq ==
+      Seq(("g:0", 4L, Some(18L)), ("g:2", 3L, Some(15L))))
+  }
+
+  test("signatures sealed through sealResult stay readable after their source directory is deleted") {
+    val dir = Sources.scratchDir("graft_sig_seal")
+    val sealedRows = try {
+      val tables = sigTables(dir)
+      Q.sealResult(Q.signatures("x_sum",
+        (lit("t1"), tables(1), col("x")), (lit("t0"), tables(0), col("x")))
+        .orderBy("tag"))
+    } finally Sources.removeScratchDir(dir)
+    assert(!new java.io.File(dir).exists())
+    // the report over sealed rows is ordered on the driver: no job
+    val (report, jobs) = JobCount(spark.sparkContext)(
+      Q.sealReport(sealedRows, reportGates))
+    assert(jobs == 0, s"sealReport over sealed rows ran $jobs jobs")
+    import spark.implicits._
+    val handBuilt = sealedRows.unionByName(reportGates.toDF("tag", "ok")
+      .select(col("tag"), when(col("ok"), 1L).otherwise(0L).as("n"),
+        lit(0L).as("x_sum")))
+    assert(report.schema == handBuilt.schema)
+    assert(report.collect().map(sigRow).toSeq == Seq(("chk:failed", 0L, Some(0L)),
+      ("chk:held", 1L, Some(0L)), ("t0", 40L, Some(780L)), ("t1", 40L, Some(1560L))))
+  }
+
+  test("no query module hand-builds signature rows with a local def sig") {
+    val root = java.nio.file.Paths.get("src/main/scala/graft/queries")
+    val (hits, scanned) = SourceScan.sourceHits(root, Seq("def sig("))
+    assert(scanned > 0, s"no sources under $root")
+    assert(hits.isEmpty, s"signature rows built outside Q.signatures:\n${hits.mkString("\n")}")
   }
 
   test("footer schema equals Spark's inference over a type matrix, nanosAsLong on and off") {

@@ -61,8 +61,6 @@ class StatsSpec extends AnyFunSuite with SparkSpec {
     // a constant series is never anomalous; a 2x spike after a steady
     // run must flag (|x - ewma| > 0.25 ewma) — checked via the same
     // weights the query uses, on hand data through the SQL expressions
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("event_type").orderBy("t")
     assert(out.forall { r => // anomaly definition is self-consistent
       val x = r.getAs[Long]("x"); val e = r.getAs[Long]("ewma_milli")
       val flagged = r.getAs[Boolean]("anomaly")

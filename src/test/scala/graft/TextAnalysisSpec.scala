@@ -5,8 +5,6 @@ import org.apache.spark.sql.functions._
 import graft.text.TextAnalysis
 
 class TextAnalysisSpec extends AnyFunSuite with SparkSpec {
-  import spark.implicits._
-
   private def one[T](c: org.apache.spark.sql.Column): T =
     spark.range(1).select(c.as("v")).collect()(0).getAs[T]("v")
 

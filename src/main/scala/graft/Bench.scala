@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.graft.{JobRecorder, Recording}
+
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Per-query numbers are made attributable by (a)
   * iterating REGISTRY DECLARATION ORDER — a Map's hash order shifted
@@ -13,12 +15,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local()
-    // warmup outside the timed section: touch every table (file-index +
-    // footer reads + scan codegen), then the kernel-bearing pipelines
-    // (janino compilation + JIT, ~5s measured on the minhash pipeline).
-    // Only SUCCESSFUL touches count as warm — a failed one leaves its
-    // table out of `touched` so the first timed query to scan it gets
-    // the first_scan cold tag below.
+    // warm-up outside the timed section: every table (file index, footers,
+    // scan codegen), then the kernel-bearing pipelines (janino + JIT). A
+    // failed touch leaves its table cold for the first_scan tag below.
     val warmed = tables.filter { t =>
       try { spark.read.parquet(s"$sfDir/$t.parquet").count(); true }
       catch { case _: Throwable => false }
@@ -29,86 +28,48 @@ object Bench {
       graft.dedup.Dedup.simhashCandidates(docsW).count()
       spark.read.parquet(s"$sfDir/embeddings.parquet").limit(64).count()
     } catch { case _: Throwable => () }
-    // cold-start attribution: per-query deltas between rounds are only
-    // meaningful if one-time warmup costs are visible. Tables are
-    // pre-touched above; what remains cold inside the timed loop is (a)
-    // the FIRST query to spin up the streaming machinery (state store +
-    // micro-batch executor classloading, ~1-2s) and (b) any harness
-    // table whose warmup touch failed. Both are tagged into "cold"
-    // (query -> reason) WITHOUT changing the timed numbers.
-    val streamStarts = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.streams.addListener(
-      new org.apache.spark.sql.streaming.StreamingQueryListener {
-        override def onQueryStarted(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = {
-          streamStarts.incrementAndGet(); ()
-        }
-        override def onQueryProgress(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
-        override def onQueryTerminated(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      })
+    // one-time costs left inside the loop (the first stream start, a
+    // scratch build, a table whose touch failed) are tagged into "cold"
+    // (query -> reason) without changing the timed numbers
     val touched = scala.collection.mutable.Set[String](warmed: _*)
     val cold = scala.collection.mutable.LinkedHashMap[String, String]()
     // optional subset for local profiling: SPARK_GRAFT_ONLY=q37,q40
     val ordered = SparkEntry.registry.filter(q => GraftSession.selects(q.name))
-    // SPARK_GRAFT_BENCH_ORDER=reverse runs the marathon back-to-front —
-    // the controlled experiment that separates position-dependent
-    // environmental pressure (late queries pay an accumulating tax
-    // regardless of identity) from per-query regressions (a query is
-    // slow wherever it runs). Per-query numbers stay attributable
-    // because the warm-up run and cold annotations work identically in
-    // either direction.
-    val selected =
-      if (sys.env.get("SPARK_GRAFT_BENCH_ORDER").contains("reverse"))
-        ordered.reverse
-      else ordered
-    // child-session stream runs (Replay's state-partition isolation)
-    // don't hit the parent listener, so count them via the explicit
-    // counter too
-    def streamCount: Int = streamStarts.get() +
-      graft.streaming.Replay.isolatedStarts.get()
-    // Noise control (round-7 finding: single-shot timings showed 3x
-    // phantom regressions on byte-identical code): each query runs ONCE
-    // untimed as a warm-up — absorbing one-time costs (scratch builds,
-    // stream init, first scans, janino/JIT) which are annotated into
-    // `cold` with the warm-up's own duration — then REPS timed runs.
-    // The reported number is the MIN of the timed runs (the standard
-    // noise-robust steady-state estimator: GC pauses and scheduler
-    // jitter only ever ADD time); every individual run lands in the
-    // durable artifact so round-over-round variance is inspectable.
+    // SPARK_GRAFT_BENCH_ORDER=reverse runs back-to-front, to tell a tax
+    // that grows with position from a query that is slow wherever it runs
+    val reverse = sys.env.get("SPARK_GRAFT_BENCH_ORDER").contains("reverse")
+    val selected = if (reverse) ordered.reverse else ordered
+    // Noise control: each query runs once untimed (the warm-up absorbs
+    // one-time costs), then REPS timed runs; the reported number is
+    // their MIN (GC pauses and jitter only ever add time), and every run
+    // lands in the durable artifact.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    var hygieneCounter = 0
-    // A query whose run THROWS must never masquerade as a fast success
-    // (r14 shipped a corrupted q104 number exactly that way): failures
-    // are recorded per query and surfaced in the JSON artifact.
+    // a query whose run throws must never read as a fast success: its
+    // failure is recorded and surfaced in the JSON line
     val failed = scala.collection.mutable.LinkedHashMap[String, String]()
-    def failMsg(e: Throwable): String = {
-      val m = e.getClass.getSimpleName + ": " + Option(e.getMessage).getOrElse("")
-      m.replaceAll("[\"\\\\\\n\\r\\t]", " ").take(160)
-    }
-    val results = selected.map { q =>
-      val streamsBefore = streamCount
-      def once(): Double = {
+    val sc = spark.sparkContext
+    // streams started by an earlier warm-up: the first query to start
+    // one pays the streaming machinery's spin-up
+    var streamsStarted = false
+    val results = selected.zipWithIndex.map { case (q, i) =>
+      // each run is recorded (its jobs and stream starts); the timed
+      // number stays the nanoTime span
+      def once(): (Double, Recording) = JobRecorder.record(sc) {
         val t0 = System.nanoTime()
-        try { q.fn(spark, sfDir).count() }
-        catch { case e: Throwable =>
-          failed.getOrElseUpdate(q.name, failMsg(e))
-          System.err.println(s"BENCH FAIL ${q.name}: ${failMsg(e)}")
-        }
+        attempt(failed, q.name, "[bench]")(q.fn(spark, sfDir).count())
         (System.nanoTime() - t0) / 1e9
       }
       // ---- warm-up (untimed; cold-cost attribution happens here) ----
-      val w0 = System.nanoTime()
-      val df = try { val d = q.fn(spark, sfDir); d.count(); Some(d) }
-               catch { case e: Throwable =>
-                 failed.getOrElseUpdate(q.name, failMsg(e))
-                 System.err.println(s"BENCH FAIL (warmup) ${q.name}: ${failMsg(e)}")
-                 None
-               }
-      val warmupSec = (System.nanoTime() - w0) / 1e9
-      if (streamsBefore == 0 && streamCount > 0)
+      val ((df, warmupSec), warmup) = JobRecorder.record(sc) {
+        val w0 = System.nanoTime()
+        val d = attempt(failed, q.name, "[bench warm-up]") {
+          val d = q.fn(spark, sfDir); d.count(); d
+        }
+        (d, (System.nanoTime() - w0) / 1e9)
+      }
+      if (!streamsStarted && warmup.streamStarts > 0)
         cold(q.name) = "stream_init"
+      streamsStarted ||= warmup.streamStarts > 0
       // a query that triggered a shared scratch-table build paid a cost
       // its siblings won't — annotate WHICH build, timings untouched
       val builtKinds = graft.io.Scratch.drainBuilt()
@@ -132,77 +93,94 @@ object Bench {
       }
       // ---- timed runs ----
       val timed = Seq.fill(reps)(once())
-      // ---- between-query hygiene (OUTSIDE the timed section) ----
-      // Many queries localCheckpoint intermediate frames (Q.sealResult
-      // materializes lifecycle results on the driver, but graph, dedup,
-      // text and streaming operators checkpoint mid-plan), and the
-      // marathon's 360 queries x (warmup + reps) runs leave those
-      // blocks pinned until the ContextCleaner's weak references are
-      // GC'd — which a 24 GB heap under no allocation pressure may not
-      // do for the whole marathon. The accumulated block-manager state
-      // (and the shuffle files whose cleanup is likewise GC-driven) is
-      // ambient pressure that inflates LATER queries' numbers (r13
-      // adjudication: marathon captures ran ~x1.1-1.2 vs isolated
-      // probes on identical code). Dropping the leaked blocks after
-      // each query's timed runs — plus a periodic GC nudge so the
-      // cleaner actually reaps shuffle/broadcast state — keeps
-      // per-query numbers attributable. No timed semantics change:
-      // every timed run still computes from the parquet inputs. ONE
-      // deliberate cross-query block exists — the shared
-      // TokenizedCorpus localCheckpoint (built by the first token
-      // query, read by the rest) — and a localCheckpoint cannot
-      // recompute after unpersist, so it is excluded from the sweep
-      // (r14 swept it and corrupted q104's number: the run crashed
-      // fast and was recorded as a timing).
+      // ---- between-query hygiene (outside the timed section) ----
+      // Checkpointed blocks stay pinned until the ContextCleaner's weak
+      // references are GC'd, which a large idle heap may never do, and
+      // the pile inflates later queries' numbers. Drop them after each
+      // query, with a periodic GC nudge for shuffle/broadcast state.
+      // The shared TokenizedCorpus checkpoint is read by later token
+      // queries and cannot recompute once unpersisted: it is kept.
       val keep = graft.text.TokenizedCorpus.liveRddIds(spark)
       spark.sparkContext.getPersistentRDDs.values
         .filterNot(r => keep.contains(r.id))
         .foreach(_.unpersist(blocking = false))
-      hygieneCounter += 1
-      if (hygieneCounter % 40 == 0) System.gc()
-      (q.name, timed.min, warmupSec +: timed)
+      if ((i + 1) % 40 == 0) System.gc()
+      val (best, layers) = timed.minBy(_._1)
+      (q.name, best, warmupSec +: timed.map(_._1), layers)
     }
     // Short keys ("q63" not "q63_contamination") and ms precision keep the
     // whole line under ~1.5 KB so it survives a bounded log-tail capture;
     // full names live in SparkEntry.registry in the same order.
     def short(k: String): String = k.takeWhile(_ != '_')
-    val qs = results.map { case (k, v, _) =>
-      "\"" + short(k) + "\":" + f"$v%.3f"
-    }.mkString("{", ",", "}")
-    val coldJson = cold.map { case (k, v) =>
-      "\"" + short(k) + "\":\"" + v + "\""
-    }.mkString("{", ",", "}")
+    val qs = obj(results.map(r => short(r._1) -> f"${r._2}%.3f"))
+    val coldJson = obj(cold.map { case (k, v) => short(k) -> str(v) })
     // a failed query's fast-fail duration never counts toward the
     // headline: a crash must not read as a faster total
     val total = f"${results.filterNot(r => failed.contains(r._1)).map(_._2).sum}%.3f"
-    // failed queries keep their (meaningless) timing slot so the
-    // `queries` contract never loses a key, but the failure is loud:
-    // listed here and printed to stderr at the moment it happened.
+    // a failed query keeps its (meaningless) timing slot, so `queries`
+    // never loses a key, and is listed under "failed"
     val failedJson =
       if (failed.isEmpty) ""
-      else failed.map { case (k, v) =>
-        "\"" + short(k) + "\":\"" + v + "\""
-      }.mkString(""","failed":{""", ",", "}")
+      else ""","failed":""" + obj(failed.map { case (k, v) => short(k) -> str(v) })
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cold":$coldJson$failedJson,"sf":"$sfDir"}"""
     println(line)
-    // Durable copy: a bounded log-tail capture can truncate stdout when the
-    // suite grows (BENCH_r06 lost q01–q83), so the full data also lands on
-    // disk where the driver/judge can read every per-query timing. The
-    // artifact additionally carries "runs": per query, [warmup, t1..tN] —
-    // the raw material for variance inspection (the headline number is
-    // min(t1..tN); the warm-up absorbs cold one-time costs, annotated in
-    // "cold").
-    try {
-      val runsJson = results.map { case (k, _, rs) =>
-        "\"" + short(k) + "\":" + rs.map(r => f"$r%.3f").mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
-      val full = line.stripSuffix("}") + s""","runs":$runsJson}"""
-      val out = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench.json"))
+    // Durable copy (a bounded log tail can truncate stdout), plus "runs"
+    // ([warmup, t1..tN] per query) and "layers" (the min run's jobs)
+    val out = java.nio.file.Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench.json"))
+    val written = scala.util.Try {
+      val runs = obj(results.map(r =>
+        short(r._1) -> r._3.map(t => f"$t%.3f").mkString("[", ",", "]")))
+      val full = line.stripSuffix("}") +
+        s""","runs":$runs,"layers":${obj(results.map(r => short(r._1) -> layers(r._4)))}}"""
       Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
       java.nio.file.Files.write(out, (full + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    }
     spark.stop()
+    // a stale artifact left by an earlier run must not read as this one's
+    written.failed.foreach { e =>
+      System.err.println(s"[bench] artifact write to $out failed: $e")
+      sys.exit(1)
+    }
   }
+
+  /** The `layers` record of one run: job and task counts, busy time (the
+    * union of the job intervals) and the driver gap (wall minus busy),
+    * the 10 heaviest call sites as `[site, jobs, ms]` and the 5 largest
+    * idle spans as `[site of the job after it, ms]`. */
+  private def layers(r: Recording): String = {
+    val sites = r.sites.take(10).map(s => s"[${str(s._1)},${s._2},${s._3}]")
+    val gaps = r.gaps.take(5).map(g => s"[${str(g._1)},${g._2}]")
+    f"""{"jobs":${r.jobs.size},"tasks":${r.tasks},"job_s":${r.busyMs / 1e3}%.3f,""" +
+      f""""gap_s":${(r.wallMs - r.busyMs) / 1e3}%.3f,"sites":${sites.mkString("[", ",", "]")},""" +
+      s""""gaps":${gaps.mkString("[", ",", "]")}}"""
+  }
+
+  /** A JSON object of already-rendered values. */
+  private[graft] def obj(kvs: Iterable[(String, String)]): String =
+    kvs.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
+
+  /** A JSON string of `s` with the characters it cannot carry blanked. */
+  private[graft] def str(s: String): String = "\"" + clean(s) + "\""
+  private def clean(s: String): String =
+    s.replaceAll("[\"\\\\\\p{Cntrl}]", " ")
+
+  /** The one failure formatter: exception class and message, blanked of
+    * what a JSON string or a log line cannot carry. */
+  private[graft] def failMsg(e: Throwable): String =
+    clean(e.getClass.getSimpleName + ": " + Option(e.getMessage).getOrElse(""))
+      .take(160)
+
+  /** Runs `body`. A throw is recorded in `failed` under `name` (the
+    * first failure of a name wins), printed to stderr after `label`, and
+    * gives None, so a crash never reads as a result. */
+  private[graft] def attempt[T](failed: scala.collection.mutable.Map[String, String],
+                                name: String, label: String)(body: => T): Option[T] =
+    try Some(body)
+    catch { case e: Throwable =>
+      failed.getOrElseUpdate(name, failMsg(e))
+      System.err.println(s"$label $name failed: ${failMsg(e)}")
+      None
+    }
 }

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one local session the mains build ([[Bench]], [[Verify]],
-  * [[ProfileQ]], [[Explain]]), so a plan printed or profiled is the plan
-  * Bench times, and the one `SPARK_GRAFT_ONLY` subset parser they share.
+  * [[Explain]]), so a plan printed is the plan Bench times and
+  * records, and the one `SPARK_GRAFT_ONLY` subset parser they share.
   * ([[ScaleData]] keeps its own builder: its session writes the 10×
   * data the 10× gate reads.) */
 object GraftSession {

@@ -196,6 +196,8 @@ private final class ViewMatcher(spark: SparkSession, view: MatView) {
   private case class AvgOf(col: String) extends Derived
   private case class MinOf(col: String) extends Derived
   private case class MaxOf(col: String) extends Derived
+  /** A constant folded into the output (a `lit` above, by CollapseProject). */
+  private case class Const(value: Expression) extends Derived
 
   /** Classify one output expression, or None if it disqualifies the
     * rewrite. `keyIds` are the ExprIds of the grouping attributes. */
@@ -205,6 +207,7 @@ private final class ViewMatcher(spark: SparkSession, view: MatView) {
       Some(KeyRef(keyIds(a.exprId)))
     case Alias(a: AttributeReference, _) if keyIds.contains(a.exprId) =>
       Some(KeyRef(keyIds(a.exprId)))
+    case Alias(c, _) if c.foldable => Some(Const(c))
     case Alias(ae: AggregateExpression, _)
         if !ae.isDistinct && ae.filter.isEmpty =>
       ae.aggregateFunction match {
@@ -260,6 +263,12 @@ private final class ViewMatcher(spark: SparkSession, view: MatView) {
         case Some(d) => (e, d)
         case None => return None
       })
+    // a constant rides along only beside a derived measure: keys and
+    // constants alone are also what `count(NULL)` folds to (`0 AS n`),
+    // an aggregate the rule leaves on the base (q343 gates it)
+    val consts = derived.count(_._2.isInstanceOf[Const])
+    val keys = derived.count(_._2.isInstanceOf[KeyRef])
+    if (consts > 0 && consts + keys == derived.size) return None
 
     val viewPlan =
       graft.io.Sources.cachedParquet(spark, view.resolvedPath)
@@ -285,6 +294,7 @@ private final class ViewMatcher(spark: SparkSession, view: MatView) {
         // EXACT: straight projection of the view
         Project(derived.map {
           case (e, KeyRef(n)) => alias(viewAttr(n), e)
+          case (e, Const(c)) => alias(c, e)
           case (e, CountAll) => alias(cnt, e)
           case (e, SumOf(c)) => alias(viewAttr(view.sumCols(c)), e)
           case (e, MinOf(c)) => alias(viewAttr(view.minCols(c)), e)
@@ -298,6 +308,7 @@ private final class ViewMatcher(spark: SparkSession, view: MatView) {
         def sumOf(a: Attribute): Expression = Sum(a).toAggregateExpression()
         Aggregate(keyAttrs.map(a => viewAttr(a.name)), derived.map {
           case (e, KeyRef(n)) => alias(viewAttr(n), e)
+          case (e, Const(c)) => alias(c, e)
           // count(*) of an empty global roll-up is 0, sum of none is
           // NULL — coalesce restores count semantics
           case (e, CountAll) =>

@@ -18,21 +18,10 @@ import org.apache.spark.sql.types.StructType
  */
 object Replay {
 
-  /** Isolated stream-run count — lets [[graft.Bench]] attribute the
-    * one-time streaming machinery spin-up (state store + micro-batch
-    * executor classloading) without a listener: child-session query
-    * events are filtered out of the parent session's listener bus. */
-  private[graft] val isolatedStarts =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** State partitions sized to the KEYED-STATE volume: ~1 per 50k
-    * source rows, clamped [2, 32]. The fixed per-micro-batch cost of
-    * opening/committing every store argues for FEW stores at harness
-    * volumes (the round-8 fixed-tax work), but a 10× replay through 2
-    * stores serializes the stateful stages on 2 cores (q134 went
-    * ×13.5 on 10× data before this) — so the count follows the data.
-    * The row count is a parquet metadata read (footer row counts), not
-    * a data scan. */
+  /** State partitions sized to the keyed-state volume: ~1 per 50k
+    * source rows, clamped [2, 32]. Few stores keep the per-micro-batch
+    * open/commit cost low, but too few serialize a 10× replay's stateful
+    * stages. The row count is a footer metadata read, not a scan. */
   private def statePartitionsFor(spark: SparkSession, dir: String,
                                  table: String): Int = {
     val n = try spark.read.parquet(s"$dir/$table").count()
@@ -40,36 +29,24 @@ object Replay {
     math.max(2, math.min(32, (n / 50000L).toInt))
   }
 
-  /** Child sessions CACHED per (parent, state-partition count) — one
-    * half of the q297 residual-accumulator fix (r9 verdict): the first
-    * streaming-query start on any session registers that session's
-    * `StreamingQueryListenerBus` on the SparkContext's shared
-    * `LiveListenerBus` (the bus constructor calls `addToQueue(this,
-    * STREAM_EVENT_QUERY)`) and nothing ever removes it. Caching bounds
-    * the session-manager buses at the number of distinct partition
-    * counts (≤ 31: statePartitionsFor clamps to [2, 32]) instead of the
-    * number of runs. */
+  /** Child sessions cached per (parent, state-partition count): a
+    * session's first stream start registers its
+    * `StreamingQueryListenerBus` on the shared `LiveListenerBus` for
+    * good, so caching bounds those buses at the number of distinct
+    * partition counts (≤ 31) instead of the number of runs. */
   private val childSessions =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, Int), SparkSession]()
 
-  /** The other half: EVERY streaming query leaks one more bus, cached
-    * sessions or not — `StreamExecution` runs each query on a
-    * `cloneSession()`, and the clone's lazily-built
-    * `StreamingQueryManager` registers its own listener bus on the
-    * shared `LiveListenerBus` the first time the execution touches
-    * `.streams` (progress-event posting). The clone dies with the
-    * query, its bus does not: in a 322-query marathon every later
-    * Spark event was dispatched through one more dead listener per past
-    * streaming run — the monotone +31%-over-4-runs q297 creep. After
-    * each run this sweep removes every StreamingQueryListenerBus that
-    * is NOT the manager bus of a session we still hold (the `spark`
-    * argument, its active/default siblings, cached children). Clone
-    * buses carry no user listeners (addListener attaches to the
-    * CREATOR session's manager bus, and run-id replay filtering happens
-    * per-bus), so removing them mid-flight is observationally inert —
-    * they only burn dispatch cycles. Pure-reflection introspection of
-    * spark-internal fields, so any internal rename degrades to the old
-    * leak, never to a broken query. */
+  /** Every streaming query also leaks a bus: `StreamExecution` runs it
+    * on a `cloneSession()` whose manager registers its own listener bus
+    * on the shared `LiveListenerBus`, and the bus outlives the clone, so
+    * every later Spark event is dispatched through one more dead
+    * listener per past run. After each run this sweep removes every
+    * StreamingQueryListenerBus that is not the manager bus of a session
+    * still held (`spark`, the active/default sessions, cached children).
+    * Clone buses carry no user listeners, so removing them is inert.
+    * Reflection over Spark internals: a rename degrades to the leak,
+    * never to a broken query. */
   private def sweepCloneListenerBuses(spark: SparkSession): Unit =
     try {
       def managerBus(s: SparkSession): AnyRef = {
@@ -99,32 +76,19 @@ object Replay {
     } catch { case scala.util.control.NonFatal(_) => () }
 
   /**
-   * Run `body` on a CHILD session (`spark.newSession()`: shared
-   * SparkContext and SharedState, PRIVATE SQLConf) whose
-   * `spark.sql.shuffle.partitions` — the conf a stateful stream reads at
-   * query start — is set to `n`. State-store count (and the fixed
-   * per-micro-batch cost of opening/committing every store) scales with
-   * it, so it must be sized to the KEYED-STATE volume, not to the batch
-   * engine's scan parallelism: a handful of session/window keys needs a
-   * handful of stores, while the batch default here (32, and hundreds on
-   * a real cluster) pays ~4× micro-batch overhead for nothing.
-   *
-   * Isolation, not mutation: the caller's session conf is never
-   * touched, so a concurrent batch query in the same session can never
-   * observe the temporary value (ConcurrencySpec pins a live
-   * stream+batch pair). `body` receives the child session and must
-   * build its source, sink, and [[drain]] on it; the drained result (a
-   * driver-local relation — see [[drain]]) is re-based onto the
-   * caller's session on return so downstream composition never crosses
-   * sessions.
+   * Run `body` on a child session (`spark.newSession()`: shared
+   * SparkContext, private SQLConf) whose `spark.sql.shuffle.partitions`,
+   * the state-store count a stateful stream reads at start, is `n`:
+   * sized to the keyed-state volume, not to the batch scan parallelism.
+   * The caller's conf is never touched, so a concurrent batch query
+   * never sees the value (ConcurrencySpec pins it). `body` builds its
+   * source, sink and [[drain]] on the child; the drained result is
+   * re-based onto the caller's session on return.
    */
   private def withStatePartitions(spark: SparkSession, n: Int)
       (body: SparkSession => DataFrame): DataFrame = {
-    isolatedStarts.incrementAndGet()
-    // lazy eviction (the Ivf.persistedIndex pattern): entries keyed by a
-    // STOPPED parent would otherwise pin that session — and its child's
-    // listener bus — for the JVM lifetime, the leak class this cache
-    // exists to fix
+    // lazy eviction: an entry keyed by a stopped parent would pin that
+    // session and its child's listener bus for the JVM lifetime
     childSessions.keySet.removeIf(
       (k: (SparkSession, Int)) => k._1.sparkContext.isStopped)
     val child = childSessions.computeIfAbsent((spark, n), _ => spark.newSession())
@@ -138,12 +102,9 @@ object Replay {
       Seq("spark.sql.session.timeZone", "spark.sql.legacy.parquet.nanosAsLong")
         .foreach(k => child.conf.set(k, spark.conf.get(k)))
       child.conf.set("spark.sql.shuffle.partitions", n.toString)
-      // Ephemeral checkpoints on the RAM-backed tmpfs when one exists:
-      // offset/commit WAL writes and state-store delta commits are pure
-      // fsync-ish fs I/O on scratch data that dies with the query —
-      // ~0.2-0.3s per run on a disk-backed /tmp (measured). A real
-      // deployment points this at durable storage; the finite-replay
-      // harness deletes it after the drain.
+      // ephemeral checkpoints on the RAM-backed tmpfs when one exists:
+      // WAL and state-store commits on scratch data that dies with the
+      // query (a real deployment points this at durable storage)
       val ckptRoot = {
         val shm = new java.io.File("/dev/shm")
         if (shm.isDirectory && shm.canWrite)

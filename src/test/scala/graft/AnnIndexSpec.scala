@@ -273,4 +273,49 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     assert(strays.isEmpty,
       s"index sub-paths spelled outside Ivf/IvfPq:\n${strays.mkString("\n")}")
   }
+
+  test("IVF-PQ probes honor tombstones and survive compaction (shared liveAssigned path)") {
+    // q323 oracle-gates the IVF side; this pins that the COMPOSED index
+    // reads through the same tombstone-aware path.
+    import graft.sim.IvfPq
+    import org.apache.spark.sql.functions._
+    val emb = graft.io.Sources.table(spark, sf001, "embeddings")
+      .filter(col("embedding").isNotNull).localCheckpoint()
+    val dir = graft.io.Sources.scratchDir("graft_ivfpq_del_spec")
+    try {
+      IvfPq.persistIndex(emb, dir, dim = 64, nClusters = 16, m = 8, ksub = 16)
+      val q = emb.filter(col("vec_id") < 20)
+      def probe() = IvfPq.probeIndex(q, dir, k = 3, nProbe = 8, shortlist = 16)
+        .select("qid", "nid", "rank").localCheckpoint()
+      val pre = probe()
+      assert(pre.filter(pmod(col("nid"), lit(5)) === 2).count() > 0,
+        "planted delete slice never surfaced pre-delete; test is vacuous")
+      graft.sim.Ivf.deleteFromIndex(
+        emb.filter(pmod(col("vec_id"), lit(5)) === 2).select("vec_id"), dir)
+      val mid = probe()
+      assert(mid.filter(pmod(col("nid"), lit(5)) === 2).count() == 0,
+        "tombstoned ids still surfaced from the IVF-PQ probe")
+      val (before, removed, after) = graft.sim.Ivf.compactIndex(spark, dir)
+      assert(after == before - removed && removed > 0)
+      val post = probe()
+      assert(mid.exceptAll(post).isEmpty && post.exceptAll(mid).isEmpty,
+        "IVF-PQ probe results changed across compaction")
+    } finally graft.io.Sources.removeScratchDir(dir)
+  }
+
+  test("Pq.codesFromUnit on stored unit vectors reproduces encode's codes verbatim") {
+    // q322's roundtrip gate must re-derive codes from the PERSISTED cu
+    // floats without re-normalization (withUnitVec drift ~1 ulp can flip
+    // a Voronoi-boundary assignment) — pin that the no-renorm path agrees
+    // with encode on encode's own output.
+    import graft.sim.Pq
+    val emb = graft.io.Sources.table(spark, sf001, "embeddings")
+      .filter(col("embedding").isNotNull)
+    val model = Pq.fit(emb, dim = 64, m = 8, ksub = 16)
+    val enc = Pq.encode(emb, model)
+    val recoded = enc.select(col("codes").as("codes0"),
+      Pq.codesFromUnit(col("cu"), model).as("codes1"))
+    val bad = recoded.filter(col("codes0") =!= col("codes1")).count()
+    assert(bad == 0L, s"$bad rows re-encoded differently from their stored cu")
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.graft.JobCount
+import org.apache.spark.graft.JobRecorder
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,6 +17,12 @@ class ProtocolJobsSpec extends AnyFunSuite with SparkSpec {
   import graft.lake.{TxLog, Versions}
   import graft.queries.Q
 
+  /** `body`'s result and the number of Spark jobs it started. */
+  private def jobCount[T](body: => T): (T, Int) = {
+    val (out, rec) = JobRecorder.record(spark.sparkContext)(body)
+    (out, rec.jobs.size)
+  }
+
   test("a just-committed version's read frame is built with no Spark job") {
     import spark.implicits._
     val root = Sources.scratchDir("graft_jobs_versions")
@@ -25,11 +31,11 @@ class ProtocolJobsSpec extends AnyFunSuite with SparkSpec {
       val rows = (1L to 40L).map(k => (k, s"s$k", k * 2.5)).toDF("k", "s", "x")
       Versions.commit(rows, root)
       Versions.commitUpsert(Seq((3L, "u", 0.5)).toDF("k", "s", "x"), root, "k")
-      val (v, vJobs) = JobCount(spark.sparkContext)(Versions.read(spark, root))
+      val (v, vJobs) = jobCount(Versions.read(spark, root))
       assert(vJobs == 0, s"Versions.read ran $vJobs job(s)")
       TxLog.commit(rows, log, expected = -1)
       TxLog.commitDelete(Seq(5L).toDF("k"), log, "k", expected = 0)
-      val (t, tJobs) = JobCount(spark.sparkContext)(TxLog.read(spark, log))
+      val (t, tJobs) = jobCount(TxLog.read(spark, log))
       assert(tJobs == 0, s"TxLog.read ran $tJobs job(s)")
       assert(v.count() == 40 && t.count() == 39)
     } finally {
@@ -45,7 +51,7 @@ class ProtocolJobsSpec extends AnyFunSuite with SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/t")
     val blocksBefore = spark.sparkContext.getPersistentRDDs.keySet
     val (out, jobs) = try {
-      JobCount(spark.sparkContext)(Q.sealResult(
+      jobCount(Q.sealResult(
         Sources.cachedParquet(spark, s"$dir/t").orderBy(desc("id"))))
     } finally Sources.removeScratchDir(dir)
     assert(jobs == 1, s"sealResult ran $jobs jobs")
@@ -80,7 +86,7 @@ class ProtocolJobsSpec extends AnyFunSuite with SparkSpec {
     val dir = Sources.scratchDir("graft_jobs_report")
     val (out, jobs) = try {
       val rows = reportRows(dir)
-      JobCount(spark.sparkContext)(Q.sealReport(rows, reportGates))
+      jobCount(Q.sealReport(rows, reportGates))
     } finally Sources.removeScratchDir(dir)
     assert(jobs == 1, s"sealReport ran $jobs jobs")
     assert(out.schema("id_sum").dataType == org.apache.spark.sql.types.LongType)
@@ -121,7 +127,7 @@ class ProtocolJobsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("gateReport: one (chk, ok) row per gate, ordered by chk, with no Spark job") {
-    val (out, jobs) = JobCount(spark.sparkContext)(
+    val (out, jobs) = jobCount(
       Q.gateReport(spark, ("b_second", false), ("a_first", true)))
     assert(jobs == 0, s"gateReport ran $jobs jobs")
     assert(out.schema.map(f => (f.name, f.dataType.simpleString, f.nullable)) ==
@@ -144,7 +150,7 @@ class ProtocolJobsSpec extends AnyFunSuite with SparkSpec {
     val dir = Sources.scratchDir("graft_sig_jobs")
     try {
       val tables = sigTables(dir)
-      def run(nTags: Int) = JobCount(spark.sparkContext)(Q.signatures("x_sum",
+      def run(nTags: Int) = jobCount(Q.signatures("x_sum",
         tables.take(nTags).zipWithIndex.map { case (t, i) =>
           (lit(s"t$i"), t, col("x")) }: _*).orderBy("tag").collect())
       val (_, jobs3) = run(3)
@@ -189,7 +195,7 @@ class ProtocolJobsSpec extends AnyFunSuite with SparkSpec {
     } finally Sources.removeScratchDir(dir)
     assert(!new java.io.File(dir).exists())
     // the report over sealed rows is ordered on the driver: no job
-    val (report, jobs) = JobCount(spark.sparkContext)(
+    val (report, jobs) = jobCount(
       Q.sealReport(sealedRows, reportGates))
     assert(jobs == 0, s"sealReport over sealed rows ran $jobs jobs")
     import spark.implicits._

@@ -242,4 +242,34 @@ class ViewRewriteSpec extends AnyFunSuite with SparkSpec {
       }
     } finally graft.io.Sources.removeScratchDir(root)
   }
+
+  test("a constant projected above a view-answerable aggregate still reads the (stale) view") {
+    // CollapseProject folds a lit column projected above the aggregate
+    // into its output (`0 AS _t`), the shape Checks.allMultisetEqual tags
+    // its frames with; a stale view tells the view's answer from the base's
+    val root = graft.io.Sources.scratchDir("graft_mv_const")
+    try {
+      base.filter(col("event_id") % 10 =!= 0).groupBy("event_type")
+        .agg(count(lit(1)).as("n"), sum("event_id").as("id_sum"))
+        .write.parquet(s"$root/view")
+      val mv = MatView(basePath = s"$sf001/events.parquet",
+        viewPath = s"$root/view", keyCols = Seq("event_type"),
+        countCol = Some("n"), sumCols = Map("event_id" -> "id_sum"))
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSet
+      val view = spark.read.parquet(s"$root/view")
+      val stale = rows(view.withColumn("_t", lit(0)))
+      val staleTotal = rows(view.agg(sum("n").as("n"))
+        .withColumn("_w", lit(1L)))
+      assert(stale != rows(userAgg.withColumn("_t", lit(0))),
+        "the view is not stale; the case cannot tell view from base")
+      ViewRewrite.withRule(spark, mv) {
+        val ask = userAgg.withColumn("_t", lit(0))
+        assert(!ViewRewrite.scannedPaths(ask).exists(_.contains("events.parquet")))
+        assert(rows(ask) == stale)
+        // the global roll-up carries its constant too
+        assert(rows(base.agg(count(lit(1)).as("n")).withColumn("_w", lit(1L))) ==
+          staleTotal)
+      }
+    } finally graft.io.Sources.removeScratchDir(root)
+  }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent
 /** Counts the streaming micro-batches a block runs on `spark`'s
   * queries: progress events of the triggers that executed a batch (the
   * ones that timed `addBatch`). The listener bus is drained before and
-  * after the block, as in [[JobCount]]. */
+  * after the block, as in [[JobRecorder]]. */
 object BatchCount {
   def apply[T](spark: SparkSession)(body: => T): (T, Int) = {
     val sc = spark.sparkContext

@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness gate: for each Verify output
 parquet, run the oracle SQL in DuckDB over the same testdata tables and
-compare (columns sorted by name, rows sorted, values hashed).
+compare (columns sorted by name, rows sorted, values hashed). A query
+with no output is reported with the reason Verify recorded for it in
+failed.json.
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 """
@@ -16,6 +18,10 @@ for t in ["region","nation","customer","supplier","part","orders",
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
 
 oracle = json.load(open(f"{out}/oracle_sql.json"))
+try:
+    failed = json.load(open(f"{out}/failed.json"))
+except FileNotFoundError:
+    failed = {}
 
 def norm(df):
     df = df.reindex(sorted(df.columns), axis=1)
@@ -26,7 +32,8 @@ fails = []
 for name, sql in sorted(oracle.items()):
     files = glob.glob(f"{out}/{name}/*.parquet")
     if not files:
-        fails.append((name, "no spark output")); continue
+        reason = f" (Verify: {failed[name]})" if name in failed else ""
+        fails.append((name, f"no spark output{reason}")); continue
     try:
         got = pd.concat([pd.read_parquet(f) for f in files], ignore_index=True)
     except Exception as e:
